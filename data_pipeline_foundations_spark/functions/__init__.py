@@ -1,1 +1,1 @@
-from . import money, enums, datetime_ops, text, hashing  # noqa: F401
+from . import money, enums, datetime_ops, text, hashing, sql  # noqa: F401

@@ -58,6 +58,17 @@ def oracle_round2(sql_expr: str) -> str:
     return f"({oracle_scaled_long(sql_expr, 100.0)} / 100.0)"
 
 
+def round2_sql(e: str) -> str:
+    """:func:`round2` as a Spark SQL string, for one-parse ``selectExpr``
+    builders (same analyzed expression as the Column form)."""
+    return f"(cast(floor(({e}) * 100.0D + 0.5D) as bigint) / 100.0D)"
+
+
+def bround2_sql(e: str) -> str:
+    """Half-even 2-dp rounding (Python ``round``) as a Spark SQL string."""
+    return f"bround({e}, 2)"
+
+
 def sum_money(col: Column | str) -> Column:
     """Order-independent exact sum of a 2-dp money column, as double."""
     return F.sum(cents(col)) / F.lit(100.0)

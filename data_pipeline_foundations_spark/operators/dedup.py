@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import (HASHERS, HASHERS_SQL, md5_long,
                                  oracle_md5_long)
+from ..functions.sql import sql_ident
 from ..functions.text import tokens
 from ..tables import scale_out
 from .caching import tracked_persist
@@ -96,12 +97,10 @@ def with_shingle_hashes(df: DataFrame, text_col: str, n: int = 3,
     trip (~10 ms). Same analyzed expressions, same plan.
     """
     h = HASHERS_SQL[hasher]
-    # Backtick-quote the identifier (r14, ADVICE r13): the column name is
-    # interpolated into a SQL string, so names needing quoting (spaces,
-    # dots, reserved words) — which the old F.col form handled — must be
-    # escaped, and the quoting also closes the injection point for
-    # caller-controlled names.
-    q = "`" + text_col.replace("`", "``") + "`"
+    # The column name is interpolated into a SQL string, so it is quoted:
+    # names with spaces, dots or reserved words stay one identifier, and
+    # caller-controlled names cannot inject SQL.
+    q = sql_ident(text_col)
     th = f"transform(split({q}, ' '), t -> {h('t')} % {HASH_P})"
     d = df.withColumn("_th", F.expr(th))
     acc = "_th"
@@ -324,7 +323,7 @@ def with_simhash(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS,
     # template): the lambda-HOF form cost a Py4J lambda registration per
     # call; identifier quoted like with_shingle_hashes. sameResult pin
     # vs the lambda form in tests/test_r14_optimizations.py.
-    q = "`" + text_col.replace("`", "``") + "`"
+    q = sql_ident(text_col)
     d = df.withColumn(
         "_hs", F.expr(f"transform(split({q}, ' '), t -> {h('t')})"))
     d = d.withColumn("_cnt", F.expr(
@@ -402,7 +401,7 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     sig = tracked_persist(with_simhash(scale_out(docs), text_col, bits, out="sh",
                                        hasher=hasher)
                           .select(id_col, "sh"))
-    qid = "`" + id_col.replace("`", "``") + "`"
+    qid = sql_ident(id_col)
     arr = _simhash_band_structs_sql(band_bits, mask, band_combo, nbands)
     bands_df = (sig.selectExpr(qid, "sh", f"explode({arr}) AS b")
                 .selectExpr(qid, "sh", "b.band_id", "b.band_key"))
@@ -481,7 +480,7 @@ def simhash_pairs_sorted(docs: DataFrame, *, id_col: str = "doc_id",
             f"{nbands} bands (needs nbands >= max_hamming + combo)")
     sig = (with_simhash(scale_out(docs), text_col, bits, out="sh",
                         hasher=hasher).select(id_col, "sh"))
-    qid = "`" + id_col.replace("`", "``") + "`"
+    qid = sql_ident(id_col)
     arr = _simhash_band_structs_sql(band_bits, mask, band_combo, nbands)
     bands_df = (sig.selectExpr(qid, "sh", f"explode({arr}) AS b")
                 .selectExpr(f"{qid} AS i", "sh",

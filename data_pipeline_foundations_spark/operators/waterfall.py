@@ -22,34 +22,22 @@ agree except on exact-tie doubles, which the property tests quantify.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.money import round2
-
-
-def _bucket(remaining: Column, amount: Column, tax: Column, rnd) -> tuple[Column, Column, Column]:
-    """Allocate one (amount + tax) bucket out of ``remaining``.
-
-    Returns (amount_paid, tax_paid, remaining_after). Full-coverage branch
-    pays the bucket exactly; partial branch grosses down by 1.16.
-    """
-    total_due = amount + tax
-    full = remaining >= total_due
-    part_amount = rnd(remaining / 1.16)
-    amount_paid = F.when(full, amount).otherwise(part_amount)
-    tax_paid = F.when(full, tax).otherwise(rnd(remaining - part_amount))
-    remaining_after = F.when(full, remaining - total_due).otherwise(F.lit(0.0))
-    return amount_paid, tax_paid, remaining_after
+from ..functions.money import bround2_sql, round2_sql
+from ..functions.sql import sql_ident
 
 
 def _bucket_sql(remaining: str, amount: str, tax: str,
                 rnd) -> tuple[str, str, str]:
-    """SQL-string twin of :func:`_bucket` — same expression tree, built
-    as text for the one-parse ``selectExpr`` form (r14; ``rnd`` maps an
-    expression string to its rounded string). Every interpolated
+    """Allocate one (amount + tax) bucket out of ``remaining``.
+
+    Returns SQL strings (amount_paid, tax_paid, remaining_after), for the
+    one-parse ``selectExpr`` form; ``rnd`` maps an expression string to
+    its rounded string. Full-coverage branch pays the bucket exactly;
+    partial branch grosses down by 1.16. Every interpolated
     subexpression is parenthesized so operator precedence can never
-    reshape the tree relative to the Column form."""
+    reshape the tree."""
     full = f"({remaining}) >= (({amount}) + ({tax}))"
     part_amount = rnd(f"({remaining}) / 1.16D")
     amount_paid = f"CASE WHEN {full} THEN {amount} ELSE {part_amount} END"
@@ -78,18 +66,12 @@ def waterfall_columns(df: DataFrame, *, principal: str = "principal",
     with the Column form (both rounding modes) is pinned by
     tests/test_r14_optimizations.py.
     """
-    if half_even:
-        def rnd(e: str) -> str:
-            return f"bround({e}, 2)"
-    else:
-        def rnd(e: str) -> str:  # functions.money.round2 as a SQL string
-            return (f"(cast(floor(({e}) * 100.0D + 0.5D) as bigint)"
-                    " / 100.0D)")
-    p, f_, lf = f"`{principal}`", f"`{fee}`", f"`{late_fee}`"
+    rnd = bround2_sql if half_even else round2_sql
+    p, f_, lf = sql_ident(principal), sql_ident(fee), sql_ident(late_fee)
     tax_on_fee = rnd(f"({f_}) * 0.16D")
     tax_on_late = rnd(f"({lf}) * 0.16D")
     total_due = f"({p}) + ({f_}) + ({tax_on_fee}) + ({lf}) + ({tax_on_late})"
-    alloc = f"least(`{amount_paid}`, {total_due})"
+    alloc = f"least({sql_ident(amount_paid)}, {total_due})"
 
     lf_paid, lf_tax_paid, rem1 = _bucket_sql(alloc, lf, tax_on_late, rnd)
     fee_paid, fee_tax_paid, rem2 = _bucket_sql(rem1, f_, tax_on_fee, rnd)

@@ -23,6 +23,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.money import round2_sql
+
 DETAIL_COLUMNS = [
     "UserId", "UserLoanId", "IssueMonth", "IssueMonthCDMX", "IssueDate",
     "IssueDateCDMX", "DueDate", "DueDateMonth", "LoanStatus", "LoanNumber",
@@ -50,12 +52,23 @@ def _last_day_prev_month(as_of: _dt.datetime) -> _dt.date:
     return as_of.date().replace(day=1) - _dt.timedelta(days=1)
 
 
-_R2 = "(cast(floor(({e}) * 100.0D + 0.5D) as bigint) / 100.0D)"
-
-
-def _r2s(e: str) -> str:
-    """functions.money.round2 as a SQL string (r14 one-parse form)."""
-    return _R2.format(e=e)
+_OVER = "TotalAmountPaid > TotalAmountDue"
+# derived detail columns (name → SQL), computed over fact_loan's columns
+_DETAIL_DERIVED = {
+    "UnderpaidFlag":
+        "((TotalAmountPaid < TotalAmountDue) AND (LoanStatus = 2))",
+    "OverpaidAmount":
+        f"CASE WHEN {_OVER} THEN {round2_sql('TotalAmountPaid - TotalAmountDue')} "
+        "ELSE 0.0D END",
+    "ApportionedAmountPaid":
+        f"CASE WHEN {_OVER} THEN {round2_sql('TotalAmountDue')} "
+        f"ELSE {round2_sql('TotalAmountPaid')} END",
+    "IssueMonth": "date_trunc('month', IssueDate)",
+    "IssueMonthCDMX": "date_trunc('month', IssueDateCDMX)",
+    "SettledAtMonth": "date_trunc('month', SettledAt)",
+    "SettledAtMonthCDMX": "date_trunc('month', SettledAtCDMX)",
+    "DueDateMonth": "date_trunc('month', DueDate)",
+}
 
 
 def accounting_detail(fact_loan: DataFrame) -> DataFrame:
@@ -63,25 +76,14 @@ def accounting_detail(fact_loan: DataFrame) -> DataFrame:
 
     Built as ONE ``selectExpr`` parse instead of per-node Column calls
     (r14 opt; Catalyst-canonical equality with the Column form pinned by
-    tests/test_r14_optimizations.py)."""
-    over = "TotalAmountPaid > TotalAmountDue"
+    tests/test_r14_optimizations.py). An input column named like a
+    derived one (say a fact_loan that already carries ``IssueMonth``) is
+    dropped first, so the derived column replaces it rather than being
+    appended as an ambiguous twin."""
     d = (fact_loan
+         .drop(*_DETAIL_DERIVED)
          .filter("LoanStatus != 6")
-         .selectExpr(
-             "*",
-             "((TotalAmountPaid < TotalAmountDue) AND (LoanStatus = 2))"
-             " AS UnderpaidFlag",
-             f"CASE WHEN {over} THEN "
-             f"{_r2s('TotalAmountPaid - TotalAmountDue')} "
-             "ELSE 0.0D END AS OverpaidAmount",
-             f"CASE WHEN {over} THEN {_r2s('TotalAmountDue')} "
-             f"ELSE {_r2s('TotalAmountPaid')} END AS ApportionedAmountPaid",
-             "date_trunc('month', IssueDate) AS IssueMonth",
-             "date_trunc('month', IssueDateCDMX) AS IssueMonthCDMX",
-             "date_trunc('month', SettledAt) AS SettledAtMonth",
-             "date_trunc('month', SettledAtCDMX) AS SettledAtMonthCDMX",
-             "date_trunc('month', DueDate) AS DueDateMonth",
-         ))
+         .selectExpr("*", *(f"{e} AS {n}" for n, e in _DETAIL_DERIVED.items())))
     return d.select(*DETAIL_COLUMNS)
 
 
@@ -120,7 +122,7 @@ def accounting_summary(detail: DataFrame, *, as_of: _dt.datetime,
     reports out of ONE exchange per distinct grouping key (VERDICT r9
     #1)."""
     cutoff = _last_day_prev_month(as_of).isoformat()
-    aggs = [F.expr(f"{_r2s(f'sum({c})')}").alias(c)
+    aggs = [F.expr(f"{round2_sql(f'sum({c})')}").alias(c)
             for c in ACCOUNTING_SUM_COLS]
     if era is not None:
         # exact-cents sums, cast to double only at the final division —
@@ -152,7 +154,7 @@ def settled_summary(detail: DataFrame, *, as_of: _dt.datetime) -> DataFrame:
     return (detail
             .filter("SettledAtMonthCDMX IS NOT NULL")
             .groupBy("SettledAtMonthCDMX")
-            .agg(*[F.expr(f"{_r2s(f'sum({c})')}").alias(c)
+            .agg(*[F.expr(f"{round2_sql(f'sum({c})')}").alias(c)
                    for c in SETTLED_SUM_COLS])
             .filter(f"SettledAtMonthCDMX <= CAST('{cutoff}' AS TIMESTAMP)")
             .orderBy("SettledAtMonthCDMX"))

@@ -30,7 +30,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.waterfall import _bucket
+from ..functions.money import bround2_sql
+from ..operators.waterfall import _bucket_sql
 
 CDMX = "America/Mexico_City"
 
@@ -140,6 +141,27 @@ def _channel_aggs(inputs: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return {"arcus": arcus, "stripe": stripe, "dispute": dispute, "cash": cash}
 
 
+def _apportion(r: DataFrame) -> DataFrame:
+    """U1 waterfall (:198-234) as closed-form expressions, parsed by one
+    ``selectExpr``. The pipeline feeds the extract's UNROUNDED taxes
+    (TaxOnFee = Fee*0.16 exactly, no 2-dp snap) and leaves PrincipalPaid
+    unrounded — both match the reference's apportion_payments; bround
+    reproduces Python round's half-even on the partial-bucket splits."""
+    alloc = "least(TotalAmountPaid, TotalAmountDue)"
+    lf_paid, lf_tax_paid, rem1 = _bucket_sql(alloc, "LateFee", "TaxOnLateFee",
+                                             bround2_sql)
+    fee_paid, fee_tax_paid, rem2 = _bucket_sql(rem1, "Fee", "TaxOnFee",
+                                               bround2_sql)
+    return r.selectExpr(
+        "*",
+        f"{lf_paid} AS LateFeePaid",
+        f"{lf_tax_paid} AS TaxOnLateFeePaid",
+        f"{fee_paid} AS FeePaid",
+        f"{fee_tax_paid} AS TaxOnFeePaid",
+        f"least({rem2}, PrincipalAmount) AS PrincipalPaid",
+    )
+
+
 def loan_detail(inputs: dict[str, DataFrame], *,
                 as_of: _dt.datetime) -> DataFrame:
     """Build the fact_loan table (FIXTURES.md §3 contract).
@@ -184,21 +206,7 @@ def loan_detail(inputs: dict[str, DataFrame], *,
         F.when((total_paid_raw < F.col("TotalAmountDue")) & (F.col("LoanStatus") == 2),
                F.col("TotalAmountDue")).otherwise(total_paid_raw))
 
-    # U1 waterfall (:198-234) as closed-form expressions. The pipeline
-    # feeds the extract's UNROUNDED taxes (TaxOnFee = Fee*0.16 exactly, no
-    # 2-dp snap) and leaves PrincipalPaid unrounded — both match the
-    # reference's apportion_payments; bround reproduces Python round's
-    # half-even on the partial-bucket splits.
-    rnd = lambda x: F.bround(x, 2)  # noqa: E731
-    alloc = F.least(F.col("TotalAmountPaid"), F.col("TotalAmountDue"))
-    lf_paid, lf_tax_paid, rem1 = _bucket(alloc, F.col("LateFee"), F.col("TaxOnLateFee"), rnd)
-    r = r.withColumns({"LateFeePaid": lf_paid, "TaxOnLateFeePaid": lf_tax_paid,
-                       "_rem1": rem1})
-    fee_paid, fee_tax_paid, rem2 = _bucket(F.col("_rem1"), F.col("Fee"), F.col("TaxOnFee"), rnd)
-    r = (r.withColumns({"FeePaid": fee_paid, "TaxOnFeePaid": fee_tax_paid,
-                        "_rem2": rem2})
-         .withColumn("PrincipalPaid", F.least(F.col("_rem2"), F.col("PrincipalAmount")))
-         .drop("_rem1", "_rem2"))
+    r = _apportion(r)
 
     r = r.withColumns({
         "LastPaidDate": F.greatest("LastPaidAtArcus", "LastPaidAtStripe", "LastPaidAtCash"),

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import round2
+from ..functions.money import round2, round2_sql
 from ..operators.calendar import calendar_dim, oracle_calendar_sql
 from ..operators.waterfall import oracle_waterfall_sql, waterfall_columns
 from ..registry import query
@@ -42,16 +42,15 @@ def u01_waterfall_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
                     " * 100.0D + 0.5D) as bigint)) / 100.0D")
              .alias("amount_paid"))
     )
-    r2 = ("(cast(floor(({e}) * 100.0D + 0.5D) as bigint) / 100.0D)"
-          .format)
+    r2 = round2_sql
     base = (
         o.join(paid, o.o_orderkey == paid.l_orderkey, "left")
         .selectExpr(
             "o_orderkey AS loan_id",
-            f"{r2(e='o_totalprice * 0.7D')} AS principal",
-            f"{r2(e='o_totalprice * 0.2D')} AS fee",
+            f"{r2('o_totalprice * 0.7D')} AS principal",
+            f"{r2('o_totalprice * 0.2D')} AS fee",
             "CASE WHEN o_orderstatus = 'F' THEN "
-            f"{r2(e='o_totalprice * 0.05D')} ELSE 0.0D END AS late_fee",
+            f"{r2('o_totalprice * 0.05D')} ELSE 0.0D END AS late_fee",
             "coalesce(amount_paid, 0.0D) AS amount_paid",
         )
     )
@@ -295,8 +294,7 @@ def settlement_pipeline(o: DataFrame, li: DataFrame, *,
                "ELSE cast(0 as bigint) END END) / 100.0D").alias("disputed"),
     ))
 
-    def r2(e: str) -> str:  # functions.money.round2 as a SQL string
-        return f"(cast(floor(({e}) * 100.0D + 0.5D) as bigint) / 100.0D)"
+    r2 = round2_sql
 
     cond = (o.o_orderkey == aggs.l_orderkey)
     if cust_in_li:
@@ -545,7 +543,7 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
 
     from ..pipelines.accounting import (
-        _r2s, accounting_detail, accounting_summary, settled_summary,
+        accounting_detail, accounting_summary, settled_summary,
     )
 
     fact = settlement_pipeline(load(spark, sf_dir, "orders"),
@@ -554,7 +552,7 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One-parse selectExpr form (r14, VERDICT r13 next #1) — sameResult
     # pin vs the Column form in tests/test_r14_optimizations.py.
     cdmx = "from_utc_timestamp({c}, 'America/Mexico_City')"
-    r2 = _r2s
+    r2 = round2_sql
     policy = "CAST(loan_id % 3 AS INT)"
     mapped = fact.selectExpr(
         "customer_id AS UserId",

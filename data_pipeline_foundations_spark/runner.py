@@ -14,15 +14,30 @@ the dependency graph EXPLICIT and the failure semantics sane:
     so the caller can alert with the exact blast radius.
 
 Stages are pure: each receives the dict of its dependencies' results
-and returns a value (typically a DataFrame — lazily evaluated, so the
-runner sequences *construction*; Spark still schedules the actual work).
-A ``sink`` callback materializes terminal outputs (the create_duckdb
-analog); failures there are stage failures like any other.
+and returns a value (typically a lazy DataFrame). A ``sink`` callback
+materializes terminal outputs (the create_duckdb analog); failures there
+are stage failures like any other.
+
+Shared outputs are computed once per run. A lazy DataFrame handed to N
+consumers is otherwise re-planned and re-executed by each consumer's
+action — in the reference DAG ``publish`` would re-run the whole
+``loan_detail`` plan for each of its four published descendants. So a
+stage's DataFrame with two or more downstream consumers is
+``persist()``-ed as soon as it is returned, the analog of the reference
+materializing its fact table to parquet and reading it back
+(load_accounting_data.py:36). The persist is lazy: it launches no job
+of its own (an eager ``count()`` would scan the whole plan once more);
+the first consumer action fills the cache while doing work it had to do
+anyway. The cache lives exactly as long as the run: every DataFrame the
+run persisted is ``unpersist()``-ed in a ``finally`` when ``run_dag``
+returns or raises, so no cache entry outlives the run and nothing is
+kept in module state. A DataFrame a stage cached itself is left alone.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any, Callable, Mapping
 
@@ -49,6 +64,10 @@ class StageResult:
 
 def run_dag(stages: list[Stage]) -> dict[str, StageResult]:
     """Execute stages in dependency order (insertion-order-stable Kahn).
+
+    A DataFrame result with two or more consumers is cached for the
+    length of the run (see the module docstring); the results returned
+    are no longer cached.
 
     Raises ValueError on duplicate names, unknown deps, or cycles —
     graph bugs are programming errors, not runtime stage failures.
@@ -78,17 +97,27 @@ def run_dag(stages: list[Stage]) -> dict[str, StageResult]:
             done.add(s.name)
         pending = [s for s in pending if s.name not in done]
 
+    consumers = Counter(d for s in stages for d in set(s.deps))
     results: dict[str, StageResult] = {}
-    for s in order:
-        bad = tuple(d for d in s.deps if results[d].status != OK)
-        if bad:
-            results[s.name] = StageResult(SKIPPED, blocked_by=bad)
-            continue
-        try:
-            results[s.name] = StageResult(
-                OK, value=s.fn({d: results[d].value for d in s.deps}))
-        except Exception as exc:  # per-stage isolation: record, keep going
-            results[s.name] = StageResult(FAILED, error=exc)
+    persisted: list[DataFrame] = []  # this run's shared-output cache
+    try:
+        for s in order:
+            bad = tuple(d for d in s.deps if results[d].status != OK)
+            if bad:
+                results[s.name] = StageResult(SKIPPED, blocked_by=bad)
+                continue
+            try:
+                value = s.fn({d: results[d].value for d in s.deps})
+            except Exception as exc:  # per-stage isolation: record, keep going
+                results[s.name] = StageResult(FAILED, error=exc)
+                continue
+            if (consumers[s.name] >= 2 and isinstance(value, DataFrame)
+                    and not value.is_cached):
+                persisted.append(value.persist())
+            results[s.name] = StageResult(OK, value=value)
+    finally:
+        for df in persisted:
+            df.unpersist()
     return results
 
 

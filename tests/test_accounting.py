@@ -76,3 +76,17 @@ def test_settled_summary_drops_null_group(detail, spark):
     assert out.filter("SettledAtMonthCDMX IS NULL").count() == 0
     months = [r.SettledAtMonthCDMX for r in out.collect()]
     assert months == sorted(months)
+
+
+def test_detail_replaces_preexisting_derived_columns(loan_fact_df, detail):
+    # a fact_loan that already carries derived names (stale values): the
+    # derived columns replace them instead of colliding with them
+    stale = loan_fact_df.selectExpr(
+        "*", "TIMESTAMP'1999-01-01 00:00:00' AS IssueMonth",
+        "true AS UnderpaidFlag")
+    out = accounting_detail(stale)
+    assert out.columns == DETAIL_COLUMNS
+    got = {r.UserLoanId: r for r in out.collect()}
+    want = {r.UserLoanId: r for r in detail.collect()}
+    assert got == want
+    assert got["1"].IssueMonth == dt.datetime(2025, 1, 1)

@@ -14,6 +14,9 @@ The old forms below are the r13 implementations, verbatim.
 
 from __future__ import annotations
 
+import datetime as dt
+import importlib
+
 from pyspark.sql import functions as F
 
 
@@ -174,13 +177,24 @@ def test_settlement_pipeline_selectexpr_same_plan(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # waterfall_columns — pre-r14 Column form
 # ---------------------------------------------------------------------------
+def _old_bucket(remaining, amount, tax, rnd):
+    """The retired Column form of operators.waterfall's bucket, verbatim."""
+    total_due = amount + tax
+    full = remaining >= total_due
+    part_amount = rnd(remaining / 1.16)
+    amount_paid = F.when(full, amount).otherwise(part_amount)
+    tax_paid = F.when(full, tax).otherwise(rnd(remaining - part_amount))
+    remaining_after = F.when(full, remaining - total_due).otherwise(F.lit(0.0))
+    return amount_paid, tax_paid, remaining_after
+
+
 def _old_waterfall_columns(df, *, principal="principal", fee="fee",
                            late_fee="late_fee", amount_paid="amount_paid",
                            half_even=False):
     """The r13 Column construction, verbatim."""
     from data_pipeline_foundations_spark.functions.money import round2
-    from data_pipeline_foundations_spark.operators.waterfall import _bucket
 
+    _bucket = _old_bucket
     rnd = (lambda x: F.bround(x, 2)) if half_even else round2
     p, f_, lf = F.col(principal), F.col(fee), F.col(late_fee)
     tax_on_fee = rnd(f_ * 0.16)
@@ -219,6 +233,49 @@ def test_waterfall_columns_selectexpr_same_plan(spark):
         _same(waterfall_columns(base, half_even=he),
               _old_waterfall_columns(base, half_even=he),
               f"waterfall_columns drift (half_even={he})")
+
+
+# ---------------------------------------------------------------------------
+# loan_detail's waterfall step — the retired Column form
+# ---------------------------------------------------------------------------
+def _old_apportion(r):
+    """loan_detail's Column-form waterfall, verbatim."""
+    _bucket = _old_bucket
+    rnd = lambda x: F.bround(x, 2)  # noqa: E731
+    alloc = F.least(F.col("TotalAmountPaid"), F.col("TotalAmountDue"))
+    lf_paid, lf_tax_paid, rem1 = _bucket(alloc, F.col("LateFee"), F.col("TaxOnLateFee"), rnd)
+    r = r.withColumns({"LateFeePaid": lf_paid, "TaxOnLateFeePaid": lf_tax_paid,
+                       "_rem1": rem1})
+    fee_paid, fee_tax_paid, rem2 = _bucket(F.col("_rem1"), F.col("Fee"), F.col("TaxOnFee"), rnd)
+    return (r.withColumns({"FeePaid": fee_paid, "TaxOnFeePaid": fee_tax_paid,
+                           "_rem2": rem2})
+            .withColumn("PrincipalPaid", F.least(F.col("_rem2"), F.col("PrincipalAmount")))
+            .drop("_rem1", "_rem2"))
+
+
+def test_loan_detail_selectexpr_same_plan(spark, loan_inputs, monkeypatch):
+    """Whole-loan_detail pin: the one-parse waterfall == the Column form.
+
+    The Column form materializes the first bucket's remainder as a
+    ``_rem1`` column that the second bucket reads; the one-parse form
+    inlines it. CollapseProject keeps a multiply-referenced CASE in its
+    own Project, so the pin has the optimizer inline always — then both
+    forms must reduce to the same expressions over the same plan."""
+    # the package re-exports the function under the module's name
+    ld = importlib.import_module(
+        "data_pipeline_foundations_spark.pipelines.loan_detail")
+    as_of = dt.datetime(2025, 7, 1, 12, 0, 0)
+    new = ld.loan_detail(loan_inputs, as_of=as_of)
+    monkeypatch.setattr(ld, "_apportion", _old_apportion)
+    old = ld.loan_detail(loan_inputs, as_of=as_of)
+    assert new.columns == old.columns
+    key = "spark.sql.optimizer.collapseProjectAlwaysInline"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        _same(new, old, "loan_detail drift")
+    finally:
+        spark.conf.set(key, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -296,8 +353,6 @@ def _old_settled_summary(detail, *, as_of):
 def test_accounting_functions_selectexpr_same_plan(loan_fact_df):
     """accounting_detail / accounting_summary (era and no-era) /
     settled_summary: new one-parse forms == old Column forms."""
-    import datetime as dt
-
     from data_pipeline_foundations_spark.pipelines.accounting import (
         accounting_detail, accounting_summary, settled_summary,
     )
@@ -325,8 +380,6 @@ def test_accounting_functions_selectexpr_same_plan(loan_fact_df):
 # ---------------------------------------------------------------------------
 def _old_pl02_frame(spark, sf_dir):
     """The r13 pl02 construction, verbatim, minus tracked_persist."""
-    import datetime as dt
-
     from data_pipeline_foundations_spark.functions.datetime_ops import (
         to_cdmx,
     )

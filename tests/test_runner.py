@@ -72,6 +72,115 @@ def test_graph_bugs_raise():
 
 
 # ---------------------------------------------------------------------------
+# shared-output caching: a DataFrame with 2+ consumers is cached for the run
+# ---------------------------------------------------------------------------
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.fixture()
+def empty_cache(spark):
+    """Empty the shared session's cache manager first: other tests may
+    leave cached intermediates behind, and these tests assert that a run
+    leaves none of its own."""
+    spark.catalog.clearCache()
+
+
+@pytest.mark.usefixtures("empty_cache")
+def test_shared_dataframe_cached_during_run_released_after(spark):
+    seen = {}
+
+    def consumer(name):
+        def fn(r):
+            seen[name] = r["src"].is_cached
+            return r["src"].count()
+        return fn
+
+    res = run_dag([
+        Stage("src", lambda r: spark.range(10)),
+        Stage("a", consumer("a"), deps=("src",)),
+        Stage("b", consumer("b"), deps=("src",)),
+    ])
+    assert seen == {"a": True, "b": True}
+    assert res["a"].value == res["b"].value == 10
+    assert not res["src"].value.is_cached
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.usefixtures("empty_cache")
+def test_shared_dataframe_released_when_downstream_raises(spark):
+    cached_at_failure = []
+
+    def boom(r):
+        cached_at_failure.append(r["src"].is_cached)
+        raise RuntimeError("consumer exploded")
+
+    res = run_dag([
+        Stage("src", lambda r: spark.range(5)),
+        Stage("ok", lambda r: r["src"].count(), deps=("src",)),
+        Stage("bad", boom, deps=("src",)),
+    ])
+    assert res["bad"].status == FAILED and cached_at_failure == [True]
+    assert not res["src"].value.is_cached
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.usefixtures("empty_cache")
+def test_shared_dataframe_released_when_run_is_interrupted(spark):
+    # a BaseException escapes run_dag's per-stage isolation; the finally
+    # still releases the run's cache
+    def interrupt(r):
+        raise KeyboardInterrupt
+
+    src, cached = [], []
+    with pytest.raises(KeyboardInterrupt):
+        run_dag([
+            Stage("src", lambda r: src.append(spark.range(5)) or src[0]),
+            Stage("a", lambda r: cached.append(r["src"].is_cached),
+                  deps=("src",)),
+            Stage("b", interrupt, deps=("src",)),
+        ])
+    assert cached == [True] and not src[0].is_cached
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.usefixtures("empty_cache")
+def test_single_consumer_and_non_dataframe_values_not_persisted(spark):
+    seen = {}
+
+    def peek(name):
+        def fn(r):
+            seen[name] = {d: getattr(v, "is_cached", None)
+                          for d, v in r.items()}
+            return 0
+        return fn
+
+    res = run_dag([
+        Stage("one", lambda r: spark.range(3)),
+        Stage("num", lambda r: 7),
+        Stage("x", peek("x"), deps=("one", "num")),
+        Stage("y", peek("y"), deps=("num",)),
+    ])
+    assert seen == {"x": {"one": False, "num": None}, "y": {"num": None}}
+    assert res["num"].value == 7
+    assert _cache_is_empty(spark)
+
+
+def test_stage_owned_cache_is_left_alone(spark):
+    # a value the stage cached itself is the stage's to release
+    own = spark.range(4).cache()
+    try:
+        run_dag([
+            Stage("src", lambda r: own),
+            Stage("a", lambda r: r["src"].count(), deps=("src",)),
+            Stage("b", lambda r: r["src"].count(), deps=("src",)),
+        ])
+        assert own.is_cached
+    finally:
+        own.unpersist()
+
+
+# ---------------------------------------------------------------------------
 # reference ETL DAG over FIXTURES-shaped inputs
 # ---------------------------------------------------------------------------
 @pytest.fixture()
@@ -101,11 +210,16 @@ def etl_inputs(spark, loan_inputs):
     return full
 
 
+@pytest.mark.usefixtures("empty_cache")
 def test_reference_dag_all_green(spark, etl_inputs):
-    published = {}
-    res = run_dag(reference_etl_dag(
-        spark, etl_inputs, as_of=AS_OF,
-        sink=lambda name, df: published.__setitem__(name, df.count())))
+    published, cached = {}, {}
+
+    def sink(name, df):
+        cached[name] = df.is_cached
+        published[name] = df.count()
+
+    res = run_dag(reference_etl_dag(spark, etl_inputs, as_of=AS_OF,
+                                    sink=sink))
     assert {n: r.status for n, r in res.items()} == {
         n: OK for n in res}, {n: r.error for n, r in res.items()
                               if r.status == FAILED}
@@ -113,6 +227,10 @@ def test_reference_dag_all_green(spark, etl_inputs):
     assert published["calendar"] > 0
     # loan 6 (DisbursementFailed) is excluded: 7 fixture loans → 6 fact rows
     assert published["loan_detail"] == 6
+    # loan_detail feeds accounting_detail and publish, so the run cached
+    # it (accounting_detail too, for its three reports) and released both
+    assert cached == {n: n == "loan_detail" for n in published}
+    assert _cache_is_empty(spark)
 
 
 def test_reference_dag_blast_radius(spark, etl_inputs):

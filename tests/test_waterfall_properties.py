@@ -62,3 +62,22 @@ def test_waterfall_matches_python_reference(spark, cases):
         # never over-pays any bucket
         assert lf <= late_fee + 0.011 and fp <= fee + 0.011
         assert pp <= principal + 1e-9
+
+
+def test_waterfall_quotes_column_names(spark):
+    # caller-supplied names with a backtick, a space and a dot stay one
+    # identifier each in the generated SQL
+    df = spark.createDataFrame(
+        [(1, 900.0, 700.0, 200.0, 50.0)],
+        "row_id long, `paid``amt` double, `prin cipal` double, "
+        "`fee.x` double, late_fee double")
+    plain = spark.createDataFrame(
+        [(1, 900.0, 700.0, 200.0, 50.0)],
+        "row_id long, amount_paid double, principal double, fee double, "
+        "late_fee double")
+    cols = ["tax_on_fee", "tax_on_late_fee", "total_due", "late_fee_paid",
+            "tax_on_late_fee_paid", "fee_paid", "tax_on_fee_paid",
+            "principal_paid"]
+    got = waterfall_columns(df, principal="prin cipal", fee="fee.x",
+                            amount_paid="paid`amt").select(cols).first()
+    assert got == waterfall_columns(plain).select(cols).first()
