@@ -48,6 +48,9 @@ STABLE_TOP_N = 34  # widened r6 (99 -> 108) and r9 (137 -> 141, plus the
 # >=~0.8 s inside the min-of-3 probe as the mid-tail grew
 DISAGREE_RATIO = 1.5
 DISAGREE_MIN_SEC = 0.15  # below this, "disagreement" is scheduling jitter
+# The final line is read from the last 2,000 chars of stdout: the line plus
+# its newline must fit whole.
+FINAL_LINE_MAX = 1995
 
 
 def main() -> None:
@@ -105,86 +108,6 @@ def main() -> None:
         stable[name] = round(min(min(timed_run(spec) for _ in range(STABLE_RUNS)),
                                  timings[name]), 3)
 
-    # Production fast-hash variants (VERDICT r3 task #1): the xxhash64
-    # path for the md5-bound dedup family. NOT oracle-checked (DuckDB has
-    # no xxhash64) and kept OUT of `queries`/`value` so the headline
-    # Spark-vs-oracle aggregate stays like-for-like; this dict documents
-    # what the same operators cost when portability is not required.
-    from pyspark.sql import functions as F
-
-    from data_pipeline_foundations_spark.operators.dedup import (
-        cdc_chunk_stats, decontaminate, minhash_lsh_pairs,
-        ngram_containment_pairs, ngram_jaccard_pairs,
-        remove_boilerplate_segments, simhash_pairs,
-    )
-
-    def _fast(fn):
-        def run():
-            t0 = time.perf_counter()
-            fn().write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            release_cached_intermediates()
-            return dt
-        return run
-
-    docs = load(spark, sf_dir, "documents")
-    boiler_docs = docs.withColumn("text", F.expr(
-        "concat('nav menu home about contact rss login ', "
-        "source, ' ', text)"))
-    variant_builders = {
-        "x03_dedup_minhash_lsh":
-            lambda h: minhash_lsh_pairs(docs, hasher=h),
-        "x05_simhash_near_dups":
-            lambda h: simhash_pairs(docs, hasher=h),
-        "x06_ngram_jaccard":
-            lambda h: ngram_jaccard_pairs(docs, hasher=h),
-        "x25_decontamination":
-            lambda h: decontaminate(docs, F.col("doc_id") % 17 == 0,
-                                    hasher=h),
-        "x41_ngram_containment":
-            lambda h: ngram_containment_pairs(docs, hasher=h),
-        "x43_boilerplate_segments":
-            lambda h: remove_boilerplate_segments(boiler_docs, hasher=h),
-        "x69_cdc_chunking":
-            lambda h: cdc_chunk_stats(docs, hasher=h),
-    }
-    # Each xx variant is measured INTERLEAVED with its md5 twin — the
-    # exact same operator call with hasher="md5" — alternating
-    # md5/xx/md5/xx inside ONE probe, min per side (VERDICT r7 #2). Two
-    # rounds of stable-but-separate probes still read xx 1.5-1.9x slower
-    # than the sweep's md5 numbers because host drift between probe
-    # positions dwarfs the hash-kernel delta; alternation puts both
-    # sides in the same noise environment, so the xx:md5 ratio in
-    # `fast_variant_ratio` is drift-free by construction. The twin's
-    # absolute time lands in `fast_md5_twins` so the ratio can be
-    # audited against the sweep's headline numbers.
-    # x03's xx side keeps the JVM HOF pipeline while its md5 side runs the
-    # fused Arrow kernel (no bit-exact Python xxhash64 exists in this env
-    # to port the kernel — SCALING.md's adjudication), so its ratio
-    # measures PATH choice + noise, not hash cost. Marked in the output so
-    # downstream readers don't re-adjudicate it as a hash-kernel signal.
-    PATH_MIXED = {"x03_dedup_minhash_lsh"}
-    fast: dict[str, float] = {}
-    twins: dict[str, float] = {}
-    ratio: dict[str, float] = {}
-    for base, build in sorted(variant_builders.items()):
-        md5_run = _fast(lambda b=build: b("md5"))
-        xx_run = _fast(lambda b=build: b("xx"))
-        # one untimed warmup pair first: the opening run of a cold
-        # operator pays JIT/codegen-cache warmup that decays over ~2
-        # runs — with only STABLE_RUNS timed rounds, that warmup
-        # contaminated min() and read x03's xx at 1.31x in a window
-        # where 6 warm interleaved rounds read 0.88x
-        md5_run(), xx_run()
-        md5_times, xx_times = [], []
-        for _ in range(STABLE_RUNS):
-            md5_times.append(md5_run())
-            xx_times.append(xx_run())
-        fast[f"{base}__xx"] = round(min(xx_times), 3)
-        twins[f"{base}__md5"] = round(min(md5_times), 3)
-        ratio[base] = round(min(xx_times) / max(min(md5_times), 1e-9), 3)
-
     # Floor-vs-work decomposition (VERDICT r9 #4): the raw sweep ratio is
     # dominated by ~60 sub-second queries where Spark pays a multi-stage
     # scheduling floor against DuckDB's 10-100 ms zone-map floor — that
@@ -236,9 +159,6 @@ def main() -> None:
         "queries": timings,
         "stable": stable,
         "oracle": oracle_times,
-        "fast_variants": fast,
-        "fast_md5_twins": twins,
-        "fast_variant_ratio": ratio,
         "sf": sf,
     }))
     # Compact twin of the line above: the full per-query dict can exceed
@@ -254,8 +174,6 @@ def main() -> None:
         "oracle_total": oracle_total,
         "floor_bucket": len(floor_names),
         "floor_spark_sec": floor_spark,
-        "fast_variant_ratio": ratio,
-        "path_mixed_ratios": sorted(PATH_MIXED),
         "sf": sf,
     }))
     # Final line, printed LAST (VERDICT r8 #1, revised r14 per VERDICT
@@ -263,16 +181,8 @@ def main() -> None:
     # its tail-capture window is 2,000 chars, so the full per-query dict
     # (line 1, ~4.8 KB at 156 queries) never reached PERF's per-query
     # comparison (PERF_r13: per_query {}, bench_ok false). The final
-    # line therefore now carries a COMPACT per-query dict that fits the
-    # window: keys are each query's unique registry prefix (the token
-    # before the first "_", e.g. "x03" for x03_dedup_minhash_lsh — full
-    # names stay, unrenamed, in line 1's `queries`), values are the
-    # min over ALL timed runs of that query (sweep min-of-2 merged with
-    # the stable re-probes — bench.py's own header says round-over-round
-    # deltas should be read off `stable` where it exists), 2 decimals.
-    # Size guard: if the registry ever grows the line past the window,
-    # fall back to the old ~120-char headline so the tail ALWAYS ends
-    # with a parseable line carrying the round's headline value.
+    # line therefore carries a COMPACT per-query dict that fits the
+    # window (see final_line).
     headline = {
         "metric": "total_runtime_all_registered_queries",
         "value": total,
@@ -284,17 +194,39 @@ def main() -> None:
         "floor_spark_sec": floor_spark,
         "sf": sf,
     }
-    short = {n: n.split("_")[0] for n in timings}
-    compact = {short[n]: round(min(timings[n], stable.get(n, timings[n])), 2)
-               for n in timings}
-    final = dict(headline)
-    if len(compact) == len(timings):  # prefix collision => keep headline
-        final["queries"] = compact
-    line = json.dumps(final, separators=(",", ":"))
-    if len(line) > 1995:  # line + newline must fit the window whole
-        line = json.dumps(headline, separators=(",", ":"))
-    print(line)
+    print(final_line(headline, timings, stable))
 
+
+def final_line(headline: dict, timings: dict[str, float],
+               stable: dict[str, float]) -> str:
+    """The bounded last stdout line: ``headline`` plus a compact
+    per-query dict. Keys are each query's unique registry prefix (the
+    token before the first "_", e.g. "x03" for x03_dedup_minhash_lsh —
+    full names stay, unrenamed, in line 1's `queries`); values are the
+    min over ALL timed runs of that query (sweep min-of-2 merged with
+    the stable re-probes), 2 decimals.
+
+    Guard: when the dict cannot ride the line — two queries share a
+    prefix, or the line would outgrow the window — the line falls back
+    to the headline plus ``"queries_dropped": true`` and one warning goes
+    to stderr, so the tail ALWAYS ends with a parseable line carrying
+    the round's headline value and the loss is visible.
+    """
+    compact = {n.split("_")[0]: round(min(timings[n],
+                                          stable.get(n, timings[n])), 2)
+               for n in timings}
+    if len(compact) == len(timings):
+        line = json.dumps({**headline, "queries": compact},
+                          separators=(",", ":"))
+        if len(line) <= FINAL_LINE_MAX:
+            return line
+        why = f"{len(line)} chars > {FINAL_LINE_MAX}"
+    else:
+        why = "two queries share a registry prefix"
+    print(f"bench.py: final line drops its per-query dict ({why})",
+          file=sys.stderr)
+    return json.dumps({**headline, "queries_dropped": True},
+                      separators=(",", ":"))
 
 if __name__ == "__main__":
     main()

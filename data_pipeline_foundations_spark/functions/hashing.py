@@ -9,6 +9,13 @@ with a 15-hex-digit prefix (60 bits) parsed as a positive bigint.
 Spark:  conv(substring(md5(s), 1, 15), 16, 10) → decimal-string → bigint
 DuckDB: CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) — verified in
 tests. 60 bits keeps everything positive and inside int64 in both engines.
+
+This is the ONE hash family of the package: every operator hashes
+through :func:`md5_long` / :func:`md5_long_sql`, so every registered
+query that hashes is checked bit-for-bit against its DuckDB oracle
+(tests/test_oracle_parity.py). A JVM-only family such as xxhash64 cannot
+be oracle-checked (DuckDB cannot reproduce it) and measured 0.80-1.01x of
+md5 on six operators (SCALING.md), so it does not earn a second path.
 """
 
 from __future__ import annotations
@@ -35,27 +42,6 @@ def oracle_md5_long(sql_expr: str, seed: int | None = None) -> str:
     return (f"CAST(('0x' || substring(md5({s}), 1, {HEX_DIGITS})) AS BIGINT)")
 
 
-def fast_long(col: Column | str, seed: int | None = None) -> Column:
-    """PRODUCTION-path twin of :func:`md5_long`: xxhash64 (JVM-native,
-    measured ~4x cheaper per token than the md5+conv pipeline), masked to
-    the same positive 60-bit range so every downstream modulus/band/bucket
-    derivation is drop-in compatible.
-
-    NOT oracle-reproducible — DuckDB has no xxhash64 — so registry
-    queries keep md5; operators expose ``hasher="xx"`` for production
-    runs, and bench.py reports the fast-path timings as a separate
-    ``fast_variants`` dict (never mixed into the oracle-checked totals).
-    Equivalence of the two families (same plan shape, same distribution
-    properties) is pinned in tests/test_fast_hash.py.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    args = (c,) if seed is None else (F.lit(f"{seed}|"), c)
-    return F.xxhash64(*args).bitwiseAND(F.lit((1 << 60) - 1))
-
-
-HASHERS = {"md5": md5_long, "xx": fast_long}
-
-
 def md5_long_sql(tok_expr: str, seed: int | None = None) -> str:
     """Spark-SQL string twin of :func:`md5_long` — for operators that
     assemble their expression tree as ONE ``F.expr`` parse instead of a
@@ -66,13 +52,3 @@ def md5_long_sql(tok_expr: str, seed: int | None = None) -> str:
     s = tok_expr if seed is None else f"concat('{seed}|', {tok_expr})"
     return (f"CAST(conv(substring(md5({s}), 1, {HEX_DIGITS}), 16, 10)"
             f" AS BIGINT)")
-
-
-def fast_long_sql(tok_expr: str, seed: int | None = None) -> str:
-    """Spark-SQL string twin of :func:`fast_long` (same rationale as
-    :func:`md5_long_sql`)."""
-    args = tok_expr if seed is None else f"'{seed}|', {tok_expr}"
-    return f"(xxhash64({args}) & {(1 << 60) - 1})"
-
-
-HASHERS_SQL = {"md5": md5_long_sql, "xx": fast_long_sql}

@@ -32,8 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (HASHERS, HASHERS_SQL, md5_long,
-                                 oracle_md5_long)
+from ..functions.hashing import md5_long, md5_long_sql, oracle_md5_long
 from ..functions.sql import sql_ident
 from ..functions.text import tokens
 from ..tables import scale_out
@@ -83,7 +82,7 @@ def _hash_family(k: int) -> list[tuple[int, int]]:
 # Hashed shingles (shared by MinHash and exact-Jaccard)
 # ---------------------------------------------------------------------------
 def with_shingle_hashes(df: DataFrame, text_col: str, n: int = 3,
-                        out: str = "sh", hasher: str = "md5") -> DataFrame:
+                        out: str = "sh") -> DataFrame:
     """Add ``out``: array<long> of word-n-gram shingle hashes (mod HASH_P).
 
     Stage 1 computes the token-hash array once ( _th ); stage 2 folds a
@@ -96,12 +95,11 @@ def with_shingle_hashes(df: DataFrame, text_col: str, n: int = 3,
     query on every invocation; parsing the identical SQL is one round
     trip (~10 ms). Same analyzed expressions, same plan.
     """
-    h = HASHERS_SQL[hasher]
     # The column name is interpolated into a SQL string, so it is quoted:
     # names with spaces, dots or reserved words stay one identifier, and
     # caller-controlled names cannot inject SQL.
     q = sql_ident(text_col)
-    th = f"transform(split({q}, ' '), t -> {h('t')} % {HASH_P})"
+    th = f"transform(split({q}, ' '), t -> {md5_long_sql('t')} % {HASH_P})"
     d = df.withColumn("_th", F.expr(th))
     acc = "_th"
     for j in range(1, n):
@@ -131,26 +129,6 @@ def oracle_shingle_hashes(sql_col: str, n: int = 3) -> tuple[str, str]:
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-def with_minhash(df: DataFrame, text_col: str, n: int = 3,
-                 k: int = MINHASH_K, hasher: str = "md5") -> DataFrame:
-    """Add mh0..mh{k-1}: the k-member MinHash signature of the shingle set.
-
-    One md5 per token; each family member is an O(T) arithmetic pass over
-    the staged shingle-hash column.
-    """
-    d = with_shingle_hashes(df, text_col, n, out="_sh", hasher=hasher)
-
-    def family(a: int, b: int):
-        # arity-1 closure: pyspark treats 2-arg lambdas as (element, index)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(HASH_P)
-
-    return d.select(
-        "*",
-        *[F.array_min(F.transform(F.col("_sh"), family(a, b))).alias(f"mh{i}")
-          for i, (a, b) in enumerate(_hash_family(k))],
-    ).drop("_sh")
-
-
 def _oracle_minhash_ctes(sql_col: str = "text", n: int = 3,
                          k: int = MINHASH_K) -> str:
     """CTE chain ``pre``→``shc``→``sig`` producing doc_id, mh0..mh{k-1}."""
@@ -176,100 +154,52 @@ def _oracle_minhash_ctes(sql_col: str = "text", n: int = 3,
 def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
                       k: int = MINHASH_K, bands: int = LSH_BANDS,
-                      threshold: float = 0.5,
-                      hasher: str = "md5",
-                      arrow: bool = True) -> DataFrame:
+                      threshold: float = 0.5) -> DataFrame:
     """Near-dup candidate pairs via LSH banding + MinHash similarity estimate.
 
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b and
     est_jaccard = (#equal minhashes)/k >= threshold. Docs with fewer than
     n tokens have no shingles and are excluded (their signature is null).
 
-    ``arrow=True`` (default, md5 hasher only): signatures come from one
-    kernel call per document (vectorized.minhash_sig_udf, per-batch
-    token-hash memoization — bit-identical to the HOF pipeline, pinned
-    by tests/test_vectorized), ride the banding self-join as a single
-    array column, and the similarity estimate is computed INLINE on the
-    candidate pairs (a zip_with equality fold over two 8-long arrays —
-    interpreted, but candidates are the post-banding survivors, orders
-    of magnitude fewer than documents). The two signature verification
-    joins of the SQL formulation disappear, the self-join's two sides
-    still share one canonicalized plan (the kernel runs once, its
-    exchange is reused), and the whole operator is ONE lazy plan — no
-    eager persist job. The ``hasher="xx"`` production family keeps the
-    JVM path (xxhash64 is JVM-native and already cheap).
-
-    SQL path: the band self-join's two sides share one canonicalized
-    plan, so Spark reuses the exchange (the signature scan runs once for
-    banding); the verification join re-derives signatures from the same
-    staged scan.
+    Signatures come from one kernel call per document
+    (vectorized.minhash_sig_udf, per-batch token-hash memoization; the
+    output is pinned bit-for-bit to the DuckDB oracle by the x03 parity
+    test), ride the banding self-join as a single array column, and the
+    similarity estimate is computed INLINE on the candidate pairs (a
+    zip_with equality fold over two 8-long arrays — interpreted, but
+    candidates are the post-banding survivors, orders of magnitude fewer
+    than documents). The self-join's two sides share one canonicalized
+    plan (the kernel runs once, its exchange is reused), and the whole
+    operator is ONE lazy plan — no eager persist job.
     """
+    from .vectorized import minhash_sig_udf
+
     r = k // bands
     filtered = scale_out(docs).filter(F.size(tokens(text_col)) >= n)
-    if arrow and hasher == "md5":
-        from .vectorized import minhash_sig_udf
-        sig_udf = minhash_sig_udf(_hash_family(k), n, HASH_P, SHINGLE_C)
-        d = filtered.withColumn("_mh", sig_udf(F.col(text_col)))
-        band_structs = [
-            F.struct(
-                F.lit(j).alias("band_id"),
-                F.concat_ws("|", *[F.col("_mh")[j * r + i].cast("string")
-                                   for i in range(r)]).alias("band_key"))
-            for j in range(bands)
-        ]
-        bands_df = (d.select(F.col(id_col), "_mh",
-                             F.explode(F.array(*band_structs)).alias("b"))
-                    .select(id_col, "_mh", "b.band_id", "b.band_key"))
-        x, y = bands_df.alias("x"), bands_df.alias("y")
-        matches = F.aggregate(
-            F.zip_with(F.col("x._mh"), F.col("y._mh"),
-                       lambda a, b: (a == b).cast("long")),
-            F.lit(0).cast("long"), lambda acc, v: acc + v)
-        return (x.join(y, ["band_id", "band_key"])
-                .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-                .select(F.col(f"x.{id_col}").alias("doc_a"),
-                        F.col(f"y.{id_col}").alias("doc_b"),
-                        (matches / F.lit(float(k))).alias("est_jaccard"))
-                .filter(F.col("est_jaccard") >= threshold)
-                .distinct())
-    # Persist the signature table: (id, k longs) per doc, consumed by the
-    # banding self-join AND both verification sides. (Persisting is safe
-    # and cheap now that the signature expression is staged — caching a
-    # plan with duplicated HOFs would evaluate them per duplicate in the
-    # interpreted cache-build path.)
-    sig = tracked_persist(
-        with_minhash(filtered, text_col, n, k, hasher=hasher)
-        .select(id_col, *[f"mh{i}" for i in range(k)])
-    )
+    sig_udf = minhash_sig_udf(_hash_family(k), n, HASH_P, SHINGLE_C)
+    d = filtered.withColumn("_mh", sig_udf(F.col(text_col)))
     band_structs = [
         F.struct(
             F.lit(j).alias("band_id"),
-            F.concat_ws("|", *[F.col(f"mh{j * r + i}") for i in range(r)]).alias("band_key"),
-        )
+            F.concat_ws("|", *[F.col("_mh")[j * r + i].cast("string")
+                               for i in range(r)]).alias("band_key"))
         for j in range(bands)
     ]
-    bands_df = (
-        sig.select(id_col, F.explode(F.array(*band_structs)).alias("b"))
-        .select(id_col, "b.band_id", "b.band_key")
-    )
+    bands_df = (d.select(F.col(id_col), "_mh",
+                         F.explode(F.array(*band_structs)).alias("b"))
+                .select(id_col, "_mh", "b.band_id", "b.band_key"))
     x, y = bands_df.alias("x"), bands_df.alias("y")
-    pairs = (
-        x.join(y, ["band_id", "band_key"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("doc_a"), F.col(f"y.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-    a = sig.select(F.col(id_col).alias("doc_a"),
-                   *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)])
-    b = sig.select(F.col(id_col).alias("doc_b"),
-                   *[F.col(f"mh{i}").alias(f"b{i}") for i in range(k)])
-    matches = sum(F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-                  for i in range(k))
-    return (
-        pairs.join(a, "doc_a").join(b, "doc_b")
-        .select("doc_a", "doc_b", (matches / F.lit(float(k))).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
+    matches = F.aggregate(
+        F.zip_with(F.col("x._mh"), F.col("y._mh"),
+                   lambda a, b: (a == b).cast("long")),
+        F.lit(0).cast("long"), lambda acc, v: acc + v)
+    return (x.join(y, ["band_id", "band_key"])
+            .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+            .select(F.col(f"x.{id_col}").alias("doc_a"),
+                    F.col(f"y.{id_col}").alias("doc_b"),
+                    (matches / F.lit(float(k))).alias("est_jaccard"))
+            .filter(F.col("est_jaccard") >= threshold)
+            .distinct())
 
 
 def oracle_minhash_lsh_sql(*, n: int = 3, k: int = MINHASH_K,
@@ -305,7 +235,7 @@ def oracle_minhash_lsh_sql(*, n: int = 3, k: int = MINHASH_K,
 # SimHash
 # ---------------------------------------------------------------------------
 def with_simhash(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS,
-                 out: str = "simhash", hasher: str = "md5") -> DataFrame:
+                 out: str = "simhash") -> DataFrame:
     """Add ``out``: token-multiset SimHash — bit b is 1 when the majority
     of token hashes have bit b set.
 
@@ -317,7 +247,6 @@ def with_simhash(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS,
     hash is 60-bit), so only min(bits, 60) counters are computed — the
     64-bit signature costs the same aggregate as a 60-bit one.
     """
-    h = HASHERS_SQL[hasher]
     eff = min(bits, SIMHASH_HASH_BITS)
     # ONE F.expr parse for the token-hash stage (r14, the shingle-tree
     # template): the lambda-HOF form cost a Py4J lambda registration per
@@ -325,7 +254,7 @@ def with_simhash(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS,
     # vs the lambda form in tests/test_r14_optimizations.py.
     q = sql_ident(text_col)
     d = df.withColumn(
-        "_hs", F.expr(f"transform(split({q}, ' '), t -> {h('t')})"))
+        "_hs", F.expr(f"transform(split({q}, ' '), t -> {md5_long_sql('t')})"))
     d = d.withColumn("_cnt", F.expr(
         f"aggregate(_hs, array_repeat(CAST(0 AS BIGINT), {eff}), "
         f"(acc, h) -> transform(acc, (c, i) -> c + (shiftright(h, i) & CAST(1 AS BIGINT))))"
@@ -359,8 +288,7 @@ def oracle_simhash_expr(sql_col: str, bits: int = SIMHASH_BITS) -> str:
 def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = SIMHASH_BITS,
                   band_bits: int = 8, max_hamming: int = 6,
-                  band_combo: int | None = None,
-                  hasher: str = "md5") -> DataFrame:
+                  band_combo: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash banding: docs sharing a band key are
     candidates; keep pairs with hamming distance <= max_hamming.
 
@@ -398,9 +326,9 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     # TWO consumers (both sides of the self-join): without the persist the
     # signature pipeline (per-token md5 + per-bit aggregate — the dominant
     # cost) executes twice. The cached form is tiny: (id, int64).
-    sig = tracked_persist(with_simhash(scale_out(docs), text_col, bits, out="sh",
-                                       hasher=hasher)
-                          .select(id_col, "sh"))
+    sig = tracked_persist(
+        with_simhash(scale_out(docs), text_col, bits, out="sh")
+        .select(id_col, "sh"))
     qid = sql_ident(id_col)
     arr = _simhash_band_structs_sql(band_bits, mask, band_combo, nbands)
     bands_df = (sig.selectExpr(qid, "sh", f"explode({arr}) AS b")
@@ -447,8 +375,7 @@ def _simhash_band_structs_sql(band_bits: int, mask: int, band_combo: int,
 def simhash_pairs_sorted(docs: DataFrame, *, id_col: str = "doc_id",
                          text_col: str = "text", bits: int = SIMHASH_BITS,
                          band_bits: int = 8, max_hamming: int = 6,
-                         band_combo: int | None = None,
-                         hasher: str = "md5") -> DataFrame:
+                         band_combo: int | None = None) -> DataFrame:
     """Manku et al. (WWW'07 "Detecting near-duplicates for web
     crawling") sorted-permuted-fingerprint-table form of
     :func:`simhash_pairs` — OUTPUT-IDENTICAL by the same pigeonhole
@@ -478,8 +405,8 @@ def simhash_pairs_sorted(docs: DataFrame, *, id_col: str = "doc_id",
             f"simhash_pairs_sorted: band_combo={band_combo} breaks the "
             f"recall guarantee at max_hamming={max_hamming} with "
             f"{nbands} bands (needs nbands >= max_hamming + combo)")
-    sig = (with_simhash(scale_out(docs), text_col, bits, out="sh",
-                        hasher=hasher).select(id_col, "sh"))
+    sig = (with_simhash(scale_out(docs), text_col, bits, out="sh")
+           .select(id_col, "sh"))
     qid = sql_ident(id_col)
     arr = _simhash_band_structs_sql(band_bits, mask, band_combo, nbands)
     bands_df = (sig.selectExpr(qid, "sh", f"explode({arr}) AS b")
@@ -535,7 +462,7 @@ def oracle_simhash_pairs_sql(*, bits: int = SIMHASH_BITS, band_bits: int = 8,
 # Exact n-gram Jaccard over an inverted index
 # ---------------------------------------------------------------------------
 def _rare_candidate_payload(docs: DataFrame, id_col: str, text_col: str,
-                            n: int, max_df: int, hasher: str):
+                            n: int, max_df: int):
     """(cand, a, b): blocked candidate pairs annotated with their shared
     RARE-shingle count, plus per-doc payloads (total shingle count + the
     COMMON-stratum shingle array) for exact intersection verification —
@@ -563,7 +490,7 @@ def _rare_candidate_payload(docs: DataFrame, id_col: str, text_col: str,
     # BEFORE the explode and rides the window shuffle as one extra int,
     # so the rollup still sees exact sizes without a second corpus scan.
     inv_df = tracked_persist(
-        with_shingle_hashes(scale_out(docs), text_col, n, out="_sh", hasher=hasher)
+        with_shingle_hashes(scale_out(docs), text_col, n, out="_sh")
         .withColumn("_shd", F.array_distinct("_sh"))
         .withColumn("n_sh", F.size("_shd").cast("long"))
         .select(F.col(id_col), "n_sh", F.explode_outer("_shd").alias("s"))
@@ -608,8 +535,7 @@ def _rare_candidate_payload(docs: DataFrame, id_col: str, text_col: str,
 def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         max_df: int = MAX_SHINGLE_DF,
-                        threshold: float = 0.2,
-                        hasher: str = "md5") -> DataFrame:
+                        threshold: float = 0.2) -> DataFrame:
     """Exact Jaccard over n-gram shingle *sets* for candidate pairs that
     share at least one rare shingle (document frequency <= max_df).
 
@@ -631,7 +557,7 @@ def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     Shuffles move 31-bit shingle hashes and doc ids (longs), never text.
     """
     cand, a, b = _rare_candidate_payload(docs, id_col, text_col, n,
-                                         max_df, hasher)
+                                         max_df)
     # Threshold rewritten to reference `shared` ONCE — jaccard >= t is
     # equivalent to shared * (1+t) >= t * (n_a + n_b) — so when Catalyst
     # pushes the filter into the join condition, array_intersect is
@@ -696,7 +622,7 @@ DECON_N = 5  # eval-overlap n-gram size: longer than the dedup 3-grams —
 
 def decontaminate(docs: DataFrame, bench_pred: Column, *,
                   id_col: str = "doc_id", text_col: str = "text",
-                  n: int = DECON_N, hasher: str = "md5") -> DataFrame:
+                  n: int = DECON_N) -> DataFrame:
     """Flag corpus documents sharing any ``n``-gram with a benchmark set.
 
     ``bench_pred`` selects the benchmark rows; everything else is corpus.
@@ -723,8 +649,7 @@ def decontaminate(docs: DataFrame, bench_pred: Column, *,
     # arrays instead; dropping it AFTER the generate is a cheap long-null
     # check and keeps the pipeline computed exactly once per row.
     # (Measured at sf0.1: 3.2 s -> ~1.1 s.)
-    marked = with_shingle_hashes(scale_out(docs), text_col, n, out="_sh",
-                                 hasher=hasher) \
+    marked = with_shingle_hashes(scale_out(docs), text_col, n, out="_sh") \
         .select(id_col, bench_pred.alias("_is_bench"),
                 F.array_distinct("_sh").alias("sh"))
     bench_s = (marked.filter(F.col("_is_bench"))
@@ -745,7 +670,7 @@ def decontaminate(docs: DataFrame, bench_pred: Column, *,
 
 def decontaminate_two_tier(docs: DataFrame, bench_pred: Column, *,
                            id_col: str = "doc_id", text_col: str = "text",
-                           n: int = DECON_N, hasher: str = "md5",
+                           n: int = DECON_N,
                            bloom_bits: int | None = None) -> DataFrame:
     """:func:`decontaminate`'s >broadcast-limit composition (r12,
     VERDICT r11 #5): a Bloom pre-filter in front of the exact
@@ -800,8 +725,7 @@ def decontaminate_two_tier(docs: DataFrame, bench_pred: Column, *,
     # classifies rows in both trees independently, so a nondeterministic
     # predicate would split rows inconsistently between them.
     def _shingled(src: DataFrame) -> DataFrame:
-        return (with_shingle_hashes(src, text_col, n, out="_sh",
-                                    hasher=hasher)
+        return (with_shingle_hashes(src, text_col, n, out="_sh")
                 .select(id_col, bench_pred.alias("_is_bench"),
                         F.array_distinct("_sh").alias("sh")))
 
@@ -1015,8 +939,7 @@ def dedup_against_versioned_store(spark, batch: DataFrame, root: str, *,
 def ngram_containment_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                             text_col: str = "text", n: int = 3,
                             max_df: int = MAX_SHINGLE_DF,
-                            threshold: float = 0.8,
-                            hasher: str = "md5") -> DataFrame:
+                            threshold: float = 0.8) -> DataFrame:
     """Directed n-gram CONTAINMENT for blocked candidate pairs:
     containment(A→B) = |A∩B| / |A| — the asymmetric twin of Jaccard that
     catches quotes, excerpts, and supersets (a short doc fully embedded
@@ -1028,7 +951,7 @@ def ngram_containment_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     shared-rare counting + common-stratum arrays.
     """
     cand, a, b = _rare_candidate_payload(docs, id_col, text_col, n,
-                                         max_df, hasher)
+                                         max_df)
     # greatest(c_ab, c_ba) >= t  ==  shared >= t * least(n_a, n_b):
     # one reference to `shared`, so the pushed-down join filter evaluates
     # the array_intersect once per candidate (x06 discipline).
@@ -1088,8 +1011,8 @@ def oracle_ngram_containment_sql(*, n: int = 3, max_df: int = MAX_SHINGLE_DF,
 def remove_boilerplate_segments(docs: DataFrame, *, id_col: str = "doc_id",
                                 group_col: str = "source",
                                 text_col: str = "text",
-                                seg_tokens: int = 8, min_df: int = 5,
-                                hasher: str = "md5") -> DataFrame:
+                                seg_tokens: int = 8,
+                                min_df: int = 5) -> DataFrame:
     """Cross-document boilerplate removal: drop repeated token segments.
 
     The line-dedup pass of web-corpus pipelines (CCNet / RefinedWeb
@@ -1113,7 +1036,6 @@ def remove_boilerplate_segments(docs: DataFrame, *, id_col: str = "doc_id",
     bounded by distinct segments, and reassembly state per document is
     its own segments only.
     """
-    h = HASHERS[hasher]
     d = (scale_out(docs)
          .withColumn("_toks", F.split(F.col(text_col), " "))
          .withColumn("_starts", F.sequence(
@@ -1125,12 +1047,11 @@ def remove_boilerplate_segments(docs: DataFrame, *, id_col: str = "doc_id",
                                     " "))))
     # LAZY persist: the segment table feeds the df aggregate AND the
     # flag join-back; without it the split + md5-per-segment scan runs
-    # twice (both consumers live inside the caller's one job — the
-    # x12-SQL-twin persist discipline)
+    # twice (both consumers live inside the caller's one job)
     segs = tracked_persist(
         d.select(F.col(id_col), F.col(group_col),
                  F.posexplode("_segs").alias("seg_id", "seg_text"))
-        .withColumn("fp", h(F.col("seg_text"))),
+        .withColumn("fp", md5_long(F.col("seg_text"))),
         eager=False)
     boiler = (segs.select(group_col, "fp", id_col).distinct()
               .groupBy(group_col, "fp")
@@ -1188,14 +1109,12 @@ def oracle_boilerplate_segments_sql(*, seg_tokens: int = 8, min_df: int = 5,
 
 def boilerplate_profile(docs: DataFrame, *, id_col: str = "doc_id",
                         group_col: str = "source", text_col: str = "text",
-                        seg_tokens: int = 8, min_df: int = 5,
-                        hasher: str = "md5") -> DataFrame:
+                        seg_tokens: int = 8, min_df: int = 5) -> DataFrame:
     """(group, bfps): the per-group boilerplate fingerprint arrays that
     remove_boilerplate_segments detects — the STATIC profile the
     streaming twin (streaming/boilerplate.py) consumes. One row per
     group; chrome segments per source are few, so the array is small and
     the whole profile broadcasts."""
-    h = HASHERS[hasher]
     d = (scale_out(docs)
          .withColumn("_toks", F.split(F.col(text_col), " "))
          .withColumn("_starts", F.sequence(
@@ -1207,7 +1126,7 @@ def boilerplate_profile(docs: DataFrame, *, id_col: str = "doc_id",
                                     " "))))
     segs = (d.select(F.col(id_col), F.col(group_col),
                      F.explode("_segs").alias("seg_text"))
-            .withColumn("fp", h(F.col("seg_text"))))
+            .withColumn("fp", md5_long(F.col("seg_text"))))
     return (segs.select(group_col, "fp", id_col).distinct()
             .groupBy(group_col, "fp")
             .agg(F.count(F.lit(1)).alias("seg_df"))
@@ -1217,8 +1136,8 @@ def boilerplate_profile(docs: DataFrame, *, id_col: str = "doc_id",
 
 
 def dedup_repeated_windows(docs: DataFrame, *, id_col: str = "doc_id",
-                           text_col: str = "text", win_tokens: int = 4,
-                           hasher: str = "md5") -> DataFrame:
+                           text_col: str = "text",
+                           win_tokens: int = 4) -> DataFrame:
     """Exact repeated-substring dedup: remove every duplicated
     ``win_tokens``-token window except its globally-first occurrence.
 
@@ -1294,7 +1213,6 @@ def dedup_repeated_windows(docs: DataFrame, *, id_col: str = "doc_id",
             f"BIGINT); got {id_type.simpleString()} — cast distinct "
             f"string ids to a dense long key first")
 
-    h = HASHERS[hasher]
     k = win_tokens
     d = (scale_out(docs)
          .withColumn("_toks", F.split(F.col(text_col), " "))
@@ -1310,7 +1228,7 @@ def dedup_repeated_windows(docs: DataFrame, *, id_col: str = "doc_id",
         d.select(F.col(id_col), F.posexplode(
             F.when(F.col("_n") >= k, F.transform(
                 F.sequence(F.lit(1), F.col("_n") - k + 1),
-                lambda s: h(F.array_join(F.slice("_toks", s, k), " "))))
+                lambda s: md5_long(F.array_join(F.slice("_toks", s, k), " "))))
             .otherwise(F.array().cast("array<long>"))).alias("_i", "fp"))
         .withColumn("start", F.col("_i").cast("long") + 1)
         .select("fp",
@@ -1392,14 +1310,13 @@ def oracle_repeated_windows_sql(*, win_tokens: int = 4,
 
 
 def cdc_chunk_stats(df: DataFrame, *, text_col: str = "text",
-                    id_col: str = "doc_id", w: int = 4, d: int = 8,
-                    hasher: str = "md5") -> DataFrame:
+                    id_col: str = "doc_id", w: int = 4,
+                    d: int = 8) -> DataFrame:
     """Content-defined chunking audit (LBFS rolling-hash boundaries,
     Muthitacharoen et al. SOSP'01): chunk where the rolling w-gram hash
     is 0 mod d, fingerprint each chunk, and report per-document sharing
     against the whole corpus. Registered as x69 with the md5 oracle
-    hash; ``hasher="xx"`` is the production xxhash64 path (same plan
-    shape, ~4x cheaper per hashed string — bench.py fast_variants).
+    hash.
 
     Shape: boundary detection in-array pre-explode; chunk assembly one
     doc-keyed window + (doc, chunk) aggregate — both codegen'd (the
@@ -1409,7 +1326,6 @@ def cdc_chunk_stats(df: DataFrame, *, text_col: str = "text",
     from pyspark.sql import Window as W
 
     from ..functions.text import shingles, tokens
-    h = HASHERS[hasher]
     base = (df.select(F.col(id_col), tokens(text_col).alias("toks"),
                       shingles(text_col, w).alias("sh"))
             .withColumn(
@@ -1417,7 +1333,7 @@ def cdc_chunk_stats(df: DataFrame, *, text_col: str = "text",
                 F.transform(
                     F.sequence(F.lit(1), F.size("toks")),
                     lambda p: F.when(
-                        p >= w, h(F.get("sh", p - w)) % d == 0)
+                        p >= w, md5_long(F.get("sh", p - w)) % d == 0)
                     .otherwise(F.lit(False)))))
     e = (base.select(id_col,
                      F.posexplode(F.arrays_zip("toks", "trig"))
@@ -1435,7 +1351,7 @@ def cdc_chunk_stats(df: DataFrame, *, text_col: str = "text",
                F.array_sort(F.collect_list(F.struct("pos", "tok")))
                .alias("pt"))
           .select(id_col, "n_toks",
-                  h(F.concat_ws(
+                  md5_long(F.concat_ws(
                       " ", F.transform("pt", lambda x: x["tok"])))
                   .alias("fp")))
     fs = ch.groupBy("fp").agg(

@@ -1,9 +1,9 @@
 """Arrow-vectorized kernels for the similarity family.
 
-Each kernel is the NUMERICALLY IDENTICAL twin of a pure-SQL (higher-order
-function) formulation in operators/similarity.py. That identity is not a
-tolerance claim — it is exact, because the quantized-embedding contract
-makes every reduction an int64 sum:
+Each kernel is the ONE implementation of its operator step, and it is
+NUMERICALLY IDENTICAL to the DuckDB oracle's SQL formulation of the same
+step. That identity is not a tolerance claim — it is exact, because the
+quantized-embedding contract makes every reduction an int64 sum:
 
   - embeddings are scaled once to int64 (``floor(x * 1e6 + 0.5)``),
   - dot products / norms / PQ distances are integer sums (associative —
@@ -12,8 +12,10 @@ makes every reduction an int64 sum:
     individually-rounded IEEE ops (``cast``, ``sqrt``, ``*``, ``/``) that
     every engine (Spark JVM, numpy/libm, DuckDB) rounds identically.
 
-So a registry query may run the vectorized path by default and still hash-
-match the DuckDB oracle bit-for-bit; tests assert kernel == SQL twin.
+So a registry query runs the vectorized path and still hash-matches the
+DuckDB oracle bit-for-bit; tests/test_oracle_parity.py asserts it for every
+registered query that runs a kernel (x03, x08, x12, x20 and x36 among
+them).
 
 Why vectorize at all: HOF lambdas evaluate interpreted, one element at a
 time (and are excluded from codegen subexpression elimination). A 16-bit
@@ -26,8 +28,8 @@ are applied per-row or per-bucket, never per-pair).
 
 Scale notes: pandas_udf kernels stream Arrow batches (bounded memory);
 the per-bucket pair kernel materializes one LSH bucket per group — bucket
-size is governed by the banding parameters, the same contract the
-SQL-join formulation relies on for its join fan-out.
+size is governed by the banding parameters, the same contract a banded
+self-join relies on for its join fan-out.
 """
 
 import numpy as np
@@ -39,8 +41,8 @@ def _require_nonzero_norms(rt: np.ndarray, what: str) -> None:
     """Cosine precondition: every norm strictly positive.
 
     A zero-norm vector or centroid makes the cosine 0/0 = NaN, and
-    np.argmax over NaNs silently picks the first index while the SQL
-    twin's NULL/NaN ordering differs — the bit-for-bit contract breaks
+    np.argmax over NaNs silently picks the first index while the DuckDB
+    oracle's NULL/NaN ordering differs — the bit-for-bit contract breaks
     without any error. Degenerate inputs therefore fail LOUDLY here
     (ADVICE r9): the int-grid quantization ``floor(x*1e6 + 0.5)`` maps
     only the near-zero ball (< 5e-7 per element) to the zero vector, so
@@ -49,8 +51,9 @@ def _require_nonzero_norms(rt: np.ndarray, what: str) -> None:
     if rt.size and not np.all(rt > 0):
         raise ValueError(
             f"zero-norm {what}: cosine undefined (0/0=NaN) and NaN "
-            f"ordering diverges from the SQL twin — reject degenerate "
-            f"inputs upstream or drop all-zero vectors before assignment")
+            f"ordering diverges from the DuckDB oracle — reject "
+            f"degenerate inputs upstream or drop all-zero vectors before "
+            f"assignment")
 
 
 def srp_sig_udf(signs, scale: float):
@@ -58,8 +61,8 @@ def srp_sig_udf(signs, scale: float):
 
     ``signs`` is the (bits x dim) ±1 hyperplane matrix. Projection of the
     SCALED integer vector onto each hyperplane is an exact int64 sum;
-    bit b is set when the projection is > 0 — identical to the SQL twin's
-    per-bit integer folds.
+    bit b is set when the projection is > 0 — identical to the DuckDB
+    oracle's per-bit integer folds.
     """
     sgn = np.asarray(signs, dtype=np.int64)
     bits = sgn.shape[0]
@@ -92,7 +95,7 @@ def bucket_pair_cosines(bands_df, id_col: str, threshold: float,
     a < b, NOT deduped across bands (caller applies .distinct();
     cosines are bit-identical across bands so the dedup is exact).
 
-    The Gram matrix S @ S.T reproduces the SQL twin's idot fold exactly
+    The Gram matrix S @ S.T reproduces the DuckDB oracle's idot fold exactly
     (integer sums); cosine = idot / (sqrt(na2) * sqrt(nb2)) with the same
     three IEEE roundings as the column expression.
     """
@@ -131,7 +134,7 @@ def pq_codes_udf(cents: list, m: int, block: int):
 
     ``cents`` is the collected codebook [(s, cid, cvec)] — a KB-sized
     broadcast-by-closure. Distances are exact int64 sums of squared
-    diffs; argmin ties break to the SMALLEST cid, matching the SQL twin's
+    diffs; argmin ties break to the SMALLEST cid, matching the DuckDB oracle's
     array_min over (d, cid) structs (centroids are scanned in ascending
     cid order, np.argmin keeps the first minimum).
     """
@@ -167,7 +170,7 @@ def pq_adc_totals_udf(cents: list, qsvs: list, m: int, block: int,
 
     This is the classic ADC structure fused into one map stage: the
     kernel assigns this row's PQ codes (exact int64 argmin, ties to the
-    smallest cid — identical to the SQL twin) and immediately sums each
+    smallest cid — identical to the DuckDB oracle) and immediately sums each
     query's precomputed distance-to-centroid table at those codes. The
     (vec, s, cid) code rows never exist as exchanged data — the only
     shuffle left downstream is the per-query top-k.
@@ -231,7 +234,7 @@ def recall_totals_udf(cents: list, qsvs: list, m: int, block: int,
     corpus vector crosses the Arrow boundary ONCE and the downstream
     plan needs a single exchange (the per-query window) to rank both.
     Quantization happens in-kernel from the raw floats; every value is
-    bit-identical to the two-operator composition the SQL twin runs.
+    bit-identical to the two-operator composition the oracle runs.
     """
     by_s = {}
     for s, cid, cvec in sorted((c["s"], c["cid"], c["cvec"]) for c in cents):
@@ -354,17 +357,17 @@ def minhash_sig_udf(family: list, n: int, hash_p: int, shingle_c: int):
     """pandas_udf: raw text -> k-member MinHash signature (array<long>,
     null when the document has fewer than ``n`` tokens).
 
-    The NUMERICALLY IDENTICAL twin of dedup.with_minhash's HOF pipeline
-    (token md5 → rolling-polynomial shingles → k universal-hash minima),
-    one kernel call per document instead of ~k·T interpreted lambda
-    evals. Exactness: the token hash is hashlib.md5 — bit-identical
-    digests to JVM/DuckDB md5 — parsed exactly like md5_long
-    (int(hexdigest[:15], 16), 60 bits) then reduced mod ``hash_p``; all
-    downstream arithmetic is int64 modular math on values < 2^62, so
-    numpy, Spark HOFs, and DuckDB produce the same integers. Token
-    hashes are memoized per batch (documents share most tokens), which
-    is where the kernel beats the JVM path: the md5+conv+decimal
-    pipeline re-hashes every occurrence.
+    NUMERICALLY IDENTICAL to the DuckDB oracle's MinHash CTEs
+    (dedup._oracle_minhash_ctes: token md5 → rolling-polynomial shingles
+    → k universal-hash minima), one kernel call per document instead of
+    ~k·T interpreted lambda evals. Exactness: the token hash is
+    hashlib.md5 — bit-identical digests to JVM/DuckDB md5 — parsed
+    exactly like md5_long (int(hexdigest[:15], 16), 60 bits) then
+    reduced mod ``hash_p``; all downstream arithmetic is int64 modular
+    math on values < 2^62, so numpy, Spark HOFs, and DuckDB produce the
+    same integers. Token hashes are memoized per batch (documents share
+    most tokens), which is where the kernel beats a JVM HOF pipeline:
+    the md5+conv+decimal expression re-hashes every occurrence.
     """
     import hashlib
 
@@ -416,7 +419,7 @@ def ivf_cos_udf(cents: list, probe_sets: list, qsvs: list, scale: float):
     The whole IVF-flat search side fused into ONE map stage (the
     ivfpq_totals_udf shape with exact cosines instead of ADC totals):
     assign the row's list (argmax over the same derived-float centroid
-    cosines as the SQL twin, exact ties to the LARGEST cid), check probe
+    cosines as the DuckDB oracle, exact ties to the LARGEST cid), check probe
     membership, and score against every probing query's vector — one
     int64 matmul per batch, each corpus vector moves once, and the only
     shuffle left downstream is the per-query top-k window. Cosine is the
@@ -528,7 +531,7 @@ def ivf_assign_hier_udf(cents: list, n_groups: int,
     group's member centroids only (ties → largest cid). Routing is
     approximate exactly the way IVF probing is and deterministic:
     every cosine is the derived-float contract over exact ints, so the
-    SQL twin reproduces the whole construction bit-for-bit.
+    DuckDB oracle reproduces the whole construction bit-for-bit.
 
     Returns a struct<gid: long, cid: long> column."""
     rows = sorted(((int(c["cid"]), np.asarray(c["cv"], dtype=np.int64),
@@ -610,7 +613,8 @@ def query_topk_udf(cand_df, qvecs: dict, k: int, extra_col: str = None):
     cosine) for the k best candidates per query — cosine is the derived-
     float contract (exact int Gram / product of sqrts, same roundings as
     the SQL expression), ordering cosine DESC then neighbor_id ASC, so
-    the output is bit-identical to the join + HOF-fold + window twin.
+    the output is bit-identical to the oracle's join + fold + window
+    form.
 
     ``extra_col``: optional double column of ``cand_df`` carried through
     to the output unchanged (ivfpq_rerank_topk passes the ADC total that
@@ -706,7 +710,7 @@ def feature_hash_udf(dim: int):
     (array<long>) via the hashing trick: each token hashes once (the
     portable 60-bit md5), and its ±1 contribution to feature d is bit d
     of the hash (d mod 60). Exact integer sums — bit-identical to the
-    SQL list-HOF twin at any reduction order — so the output plugs
+    oracle's list-HOF form at any reduction order — so the output plugs
     straight into the int-grid similarity contract (idot/qcos) with no
     quantization step.
 

@@ -137,11 +137,15 @@ def accounting_summary(detail: DataFrame, *, as_of: _dt.datetime,
            .agg(*aggs)
            .filter(f"IssueMonthCDMX < CAST('{cutoff}' AS TIMESTAMP)"))
     if era is not None:
-        out = (out.selectExpr(
+        # ``era`` is a caller's string: it enters the plan as a literal
+        # (the detail_2025 form), never spliced into SQL text
+        ratio = (F.col("_era_fee_cents").cast("double")
+                 / F.col("_era_prin_cents").cast("double"))
+        out = (out.select(
                    "*",
-                   f"CASE WHEN IssueMonthCDMX >= CAST('{era}' AS TIMESTAMP)"
-                   " THEN CAST(_era_fee_cents AS DOUBLE)"
-                   " / CAST(_era_prin_cents AS DOUBLE) END AS era_fee_ratio")
+                   F.when(F.col("IssueMonthCDMX")
+                          >= F.lit(era).cast("timestamp"), ratio)
+                   .alias("era_fee_ratio"))
                .drop("_era_fee_cents", "_era_prin_cents"))
     return out.orderBy("IssueMonthCDMX")
 

@@ -1298,7 +1298,7 @@ def x61_ann_recall(spark, sf_dir):
     (operators/similarity.ann_recall): one model collect, one Arrow map
     stage scoring both rankings per corpus vector, one shared per-query
     exchange for both row_number windows — bit-identical to composing
-    cosine_topk + pq_topk (the SQL twin still runs the composition;
+    cosine_topk + pq_topk (the DuckDB oracle still runs the composition;
     equality of the two Spark paths pinned in tests/test_similarity.py).
     Scale shape: each vector moves once; only (query, neighbor, score)
     longs shuffle; output is n_queries rows."""

@@ -235,7 +235,7 @@ def x20_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     x08 SRP-LSH). Runs the fused Arrow path (r5): the model is ONE
     map-side-combined aggregate collected in one non-AQE job, the search
     ONE kernel stage (assign → probe check → cosine) + the top-k window
-    — bit-equal to the SQL twin (pinned in tests/test_vectorized.py)."""
+    — bit-equal to the DuckDB oracle (tests/test_oracle_parity.py)."""
     return ivf_topk(load(spark, sf_dir, "embeddings"))
 
 

@@ -24,18 +24,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import HASHERS
+from ..functions.hashing import md5_long
 
 
 def clean_stream(docs: DataFrame, boiler_profile: DataFrame, *,
                  id_col: str = "doc_id", group_col: str = "source",
-                 text_col: str = "text", seg_tokens: int = 8,
-                 hasher: str = "md5") -> DataFrame:
+                 text_col: str = "text",
+                 seg_tokens: int = 8) -> DataFrame:
     """Strip each streamed document's chrome segments against the static
     per-group profile. Returns (id, group, n_segments, n_boilerplate,
     clean_text) — bit-identical to the batch operator's output for the
     same profile."""
-    h = HASHERS[hasher]
     d = (docs.join(F.broadcast(boiler_profile), group_col, "left")
          .withColumn("_toks", F.split(F.col(text_col), " "))
          .withColumn("_starts", F.sequence(
@@ -47,8 +46,9 @@ def clean_stream(docs: DataFrame, boiler_profile: DataFrame, *,
                                     " ")))
          .withColumn("_kept", F.filter(
              "_segs",
-             lambda g: ~F.coalesce(F.array_contains(F.col("bfps"), h(g)),
-                                   F.lit(False)))))
+             lambda g: ~F.coalesce(
+                 F.array_contains(F.col("bfps"), md5_long(g)),
+                 F.lit(False)))))
     return d.select(
         F.col(id_col), F.col(group_col),
         F.size("_segs").cast("long").alias("n_segments"),

@@ -36,8 +36,8 @@ from ..operators.dedup import with_shingle_hashes
 
 def decontamination_gate_stream(docs: DataFrame, bitset_words: list[int],
                                 *, id_col: str = "doc_id",
-                                text_col: str = "text", n: int = 5,
-                                hasher: str = "md5") -> DataFrame:
+                                text_col: str = "text",
+                                n: int = 5) -> DataFrame:
     """Flag each streamed document against the benchmark bitset.
 
     Returns (id, n_shingles, n_bloom_hits, flagged) — one row per input
@@ -45,7 +45,7 @@ def decontamination_gate_stream(docs: DataFrame, bitset_words: list[int],
     int64 list (build and probe must share the hashed-key family)."""
     from ..operators.sketches import bloom_filter_array
 
-    d = (with_shingle_hashes(docs, text_col, n, out="_sh", hasher=hasher)
+    d = (with_shingle_hashes(docs, text_col, n, out="_sh")
          .withColumn("_shd", F.coalesce(F.array_distinct("_sh"),
                                         F.expr("array()").cast("array<long>")))
          .withColumn("_bs", bloom_filter_array(F.col("_shd"), bitset_words)))

@@ -28,24 +28,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import HASHERS
+from ..functions.hashing import md5_long
 
 
 def dup_window_profile(docs: DataFrame, *, id_col: str = "doc_id",
-                       text_col: str = "text", win_tokens: int = 4,
-                       hasher: str = "md5") -> DataFrame:
+                       text_col: str = "text",
+                       win_tokens: int = 4) -> DataFrame:
     """(fp, n_occurrences) for every window fingerprint occurring more
     than once in ``docs`` — the static profile the stream consumes. One
     fingerprint-keyed map-side-combined shuffle; persist it to the
     warehouse (bucketed on fp) for an Exchange-free stream probe."""
-    h = HASHERS[hasher]
     k = win_tokens
     d = (docs.withColumn("_toks", F.split(F.col(text_col), " "))
          .withColumn("_n", F.size("_toks")))
     wins = d.select(F.col(id_col), F.posexplode(
         F.when(F.col("_n") >= k, F.transform(
             F.sequence(F.lit(1), F.col("_n") - k + 1),
-            lambda s: h(F.array_join(F.slice("_toks", s, k), " "))))
+            lambda s: md5_long(
+                F.array_join(F.slice("_toks", s, k), " "))))
         .otherwise(F.array().cast("array<long>"))).alias("_i", "fp"))
     return (wins.groupBy("fp")
             .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -54,13 +54,12 @@ def dup_window_profile(docs: DataFrame, *, id_col: str = "doc_id",
 
 def mask_stream(docs: DataFrame, dup_profile: DataFrame, *,
                 id_col: str = "doc_id", text_col: str = "text",
-                win_tokens: int = 4, watermark: str = "1 hour",
-                hasher: str = "md5") -> DataFrame:
+                win_tokens: int = 4,
+                watermark: str = "1 hour") -> DataFrame:
     """Mask every profiled span in each streamed document. Returns
     (id, n_tokens, n_dup_windows, n_removed_tokens, clean_text) — the
     batch operator's schema, with n_dup_windows counting this document's
     masked window occurrences. Input must carry ``event_ts``."""
-    h = HASHERS[hasher]
     k = win_tokens
     d = (docs.withWatermark("event_ts", watermark)
          .withColumn("_toks", F.split(F.col(text_col), " "))
@@ -71,7 +70,7 @@ def mask_stream(docs: DataFrame, dup_profile: DataFrame, *,
                      F.posexplode_outer(
                          F.when(F.col("_n") >= k, F.transform(
                              F.sequence(F.lit(1), F.col("_n") - k + 1),
-                             lambda s: h(F.array_join(
+                             lambda s: md5_long(F.array_join(
                                  F.slice("_toks", s, k), " "))))
                          .otherwise(F.array().cast("array<long>")))
                      .alias("_i", "fp"))

@@ -90,3 +90,36 @@ def test_detail_replaces_preexisting_derived_columns(loan_fact_df, detail):
     want = {r.UserLoanId: r for r in detail.collect()}
     assert got == want
     assert got["1"].IssueMonth == dt.datetime(2025, 1, 1)
+
+
+def test_accounting_summary_era_is_a_literal_not_sql(detail, spark):
+    """``era`` enters the plan as a literal, never as SQL text: a
+    quote-bearing value cannot rewrite the era CASE into "always true".
+    Under ANSI casts (the Spark 4 default) the malformed literal fails
+    loudly; without them it is a null boundary, so no month before
+    2024-01 gets an era_fee_ratio."""
+    from pyspark.sql import functions as F
+
+    # the fixture's months are all 2024-12 or later: add a copy two
+    # years earlier so there are months the injection would light up
+    early = detail.withColumn(
+        "IssueMonthCDMX",
+        F.add_months("IssueMonthCDMX", -24).cast("timestamp"))
+    era = "2024-01-01' AS TIMESTAMP) OR TRUE OR CAST('x"
+
+    def summary():  # built per setting: a cast fixes its mode when resolved
+        return accounting_summary(detail.unionByName(early),
+                                  as_of=LOAN_AS_OF, era=era)
+
+    ansi0 = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            summary().collect()
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        rows = summary().collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi0)
+    before = [r for r in rows if r.IssueMonthCDMX < dt.datetime(2024, 1, 1)]
+    assert before
+    assert all(r.era_fee_ratio is None for r in before)

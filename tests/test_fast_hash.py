@@ -1,123 +1,52 @@
-"""Dual-path hashing (VERDICT r3 task #1): the xxhash64 production path
-must be a drop-in twin of the md5 oracle path — same positive 60-bit
-range, same plan SHAPE (the physical strategy must not depend on which
-hash fills the signature column), and statistically equivalent
-band/bucket distribution (so LSH recall/selectivity carries over)."""
+"""The package's one hash family (functions.hashing.md5_long): positive
+60-bit range, deterministic, seeded members independent, and a ~uniform
+band/bucket distribution (what LSH recall/selectivity rests on)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_pipeline_foundations_spark.functions.hashing import (
-    fast_long, md5_long,
-)
-from data_pipeline_foundations_spark.operators import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.functions.hashing import md5_long
 from data_pipeline_foundations_spark.operators.dedup import (
-    HASH_P, minhash_lsh_pairs, ngram_jaccard_pairs, with_shingle_hashes,
+    HASH_P, with_shingle_hashes,
 )
 from data_pipeline_foundations_spark.tables import load
 
 
 def test_fast_long_range_and_determinism(spark):
+    """md5_long: every value in [0, 2^60), the seeded family member
+    differs, and re-evaluation gives the same values."""
     df = spark.range(2000).select(
         F.concat(F.lit("tok"), F.col("id")).alias("s"))
-    got = df.select(md5_long("s").alias("m"), fast_long("s").alias("x"),
-                    fast_long("s", seed=7).alias("xs")).collect()
+    got = df.select(md5_long("s").alias("m"),
+                    md5_long("s", seed=7).alias("ms")).collect()
     for r in got:
         assert 0 <= r.m < 2 ** 60
-        assert 0 <= r.x < 2 ** 60
-        assert 0 <= r.xs < 2 ** 60
-        assert r.x != r.xs  # seeded family member is independent
+        assert 0 <= r.ms < 2 ** 60
+        assert r.m != r.ms  # seeded family member is independent
     # deterministic across evaluations
-    again = {(r.s, r.x) for r in df.select(
-        "s", fast_long("s").alias("x")).collect()}
-    assert again == {(f"tok{i}", r.x) for i, r in enumerate(got)}
+    again = {(r.s, r.m) for r in df.select(
+        "s", md5_long("s").alias("m")).collect()}
+    assert again == {(f"tok{i}", r.m) for i, r in enumerate(got)}
 
 
 def test_bucket_distribution_equivalence(spark):
-    """Both hash families spread tokens ~uniformly over LSH-style buckets:
+    """The hash spreads tokens ~uniformly over LSH-style buckets:
     chi-square-ish bound — no bucket holds more than 3x the expected
     share on 20k distinct tokens into 64 buckets."""
     n, buckets = 20_000, 64
     df = spark.range(n).select(
         F.concat(F.lit("w"), F.col("id")).alias("s"))
-    for h in (md5_long, fast_long):
-        counts = (df.select((h("s") % buckets).alias("b"))
-                  .groupBy("b").count().collect())
-        assert len(counts) == buckets
-        assert max(r["count"] for r in counts) < 3 * (n / buckets)
-
-
-def test_same_plan_shape_both_hashers(spark, sf_dir):
-    """The physical plan must be hash-agnostic: same exchange count, same
-    join strategies — only the hash expression differs."""
-    import re
-    docs = load(spark, sf_dir, "documents")
-    shapes = {}
-    for hasher in ("md5", "xx"):
-        df = ngram_jaccard_pairs(docs, hasher=hasher)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        release_cached_intermediates()
-        shapes[hasher] = (plan.count("Join"), plan.count("Aggregate"),
-                          plan.count("Window"),
-                          len(re.findall(r"Repartition", plan)))
-    assert shapes["md5"] == shapes["xx"]
-
-
-def test_fast_path_produces_sane_pairs(spark, sf_dir):
-    """The xx path runs end-to-end and produces structurally valid output
-    (the exact pair set legitimately differs from md5 — different hash,
-    different band collisions — but the contract fields must hold)."""
-    docs = load(spark, sf_dir, "documents")
-    rows = minhash_lsh_pairs(docs, hasher="xx").collect()
-    release_cached_intermediates()
-    for r in rows:
-        assert r.doc_a < r.doc_b
-        assert 0.0 <= r.est_jaccard <= 1.0
-    rows2 = ngram_jaccard_pairs(docs, hasher="xx").collect()
-    release_cached_intermediates()
-    for r in rows2:
-        assert r.doc_a < r.doc_b
-        assert 0.0 < r.jaccard <= 1.0
-        assert r.shared >= 1
+    counts = (df.select((md5_long("s") % buckets).alias("b"))
+              .groupBy("b").count().collect())
+    assert len(counts) == buckets
+    assert max(r["count"] for r in counts) < 3 * (n / buckets)
 
 
 def test_shingle_pipeline_stays_in_range(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").limit(200)
-    for hasher in ("md5", "xx"):
-        arrs = (with_shingle_hashes(docs, "text", 3, out="sh", hasher=hasher)
-                .select("sh").collect())
-        for row in arrs:
-            for v in row.sh:
-                assert 0 <= v < HASH_P
-
-
-def test_fast_path_new_consumers(spark, sf_dir):
-    """The round-4 hasher= consumers (containment pairs, boilerplate
-    removal) run end-to-end on the xx path with their contracts intact;
-    boilerplate detection is hash-family-INVARIANT (equality of segment
-    texts is what's detected, so md5 and xx must flag the same rows)."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_foundations_spark.operators.dedup import (
-        ngram_containment_pairs, remove_boilerplate_segments,
-    )
-    docs = load(spark, sf_dir, "documents")
-    rows = ngram_containment_pairs(docs, hasher="xx").collect()
-    release_cached_intermediates()
-    for r in rows:
-        assert r.doc_a < r.doc_b
-        assert max(r.containment_ab, r.containment_ba) >= 0.8
-
-    hdr = ("concat('nav menu home about contact rss login ', source,"
-           " ' ', text)")
-    d = docs.withColumn("text", F.expr(hdr))
-    by_hasher = {}
-    for hasher in ("md5", "xx"):
-        by_hasher[hasher] = {
-            r.doc_id: (r.n_segments, r.n_boilerplate, r.clean_text)
-            for r in remove_boilerplate_segments(d, hasher=hasher).collect()}
-        release_cached_intermediates()
-    assert by_hasher["md5"] == by_hasher["xx"]
+    arrs = (with_shingle_hashes(docs, "text", 3, out="sh")
+            .select("sh").collect())
+    for row in arrs:
+        for v in row.sh:
+            assert 0 <= v < HASH_P

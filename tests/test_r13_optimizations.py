@@ -17,15 +17,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def _old_shingle_form(df, text_col, n, hasher="md5"):
+def _old_shingle_form(df, text_col, n):
     """The pre-r13 lambda-HOF construction, verbatim."""
-    from data_pipeline_foundations_spark.functions.hashing import HASHERS
+    from data_pipeline_foundations_spark.functions.hashing import md5_long
     from data_pipeline_foundations_spark.operators.dedup import (
         HASH_P, SHINGLE_C,
     )
 
-    h = HASHERS[hasher]
-    th = F.transform(F.split(F.col(text_col), " "), lambda t: h(t) % HASH_P)
+    th = F.transform(F.split(F.col(text_col), " "),
+                     lambda t: md5_long(t) % HASH_P)
     d = df.withColumn("_th", th)
     acc = F.col("_th")
     for j in range(1, n):
@@ -38,23 +38,20 @@ def _old_shingle_form(df, text_col, n, hasher="md5"):
 
 def test_shingle_expr_parse_same_plan(spark, sf_dir):
     """The F.expr one-parse tree canonicalizes to the SAME plan as the
-    lambda form — for both hashers and both registry n values."""
+    lambda form — for both registry n values."""
     from data_pipeline_foundations_spark.operators.dedup import (
         with_shingle_hashes,
     )
     from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    for hasher in ("md5", "xx"):
-        for n in (3, 5):
-            new = (with_shingle_hashes(docs, "text", n, out="sh",
-                                       hasher=hasher)
-                   .select("doc_id", "sh"))
-            old = _old_shingle_form(docs, "text", n, hasher) \
-                .select("doc_id", "sh")
-            assert new._jdf.queryExecution().optimizedPlan().sameResult(
-                old._jdf.queryExecution().optimizedPlan()), \
-                f"plan drift for hasher={hasher} n={n}"
+    for n in (3, 5):
+        new = (with_shingle_hashes(docs, "text", n, out="sh")
+               .select("doc_id", "sh"))
+        old = _old_shingle_form(docs, "text", n).select("doc_id", "sh")
+        assert new._jdf.queryExecution().optimizedPlan().sameResult(
+            old._jdf.queryExecution().optimizedPlan()), \
+            f"plan drift for n={n}"
 
 
 def test_words_literal_equals_lit_list(spark):

@@ -518,17 +518,17 @@ def test_pl02_selectexpr_same_plan(spark, sf_dir, monkeypatch):
 # ---------------------------------------------------------------------------
 # simhash family (x04/x05) — pre-r14 Column forms
 # ---------------------------------------------------------------------------
-def _old_with_simhash(df, text_col, bits=64, out="simhash", hasher="md5"):
+def _old_with_simhash(df, text_col, bits=64, out="simhash"):
     """The r13 lambda-HOF token-hash stage, verbatim."""
-    from data_pipeline_foundations_spark.functions.hashing import HASHERS
+    from data_pipeline_foundations_spark.functions.hashing import md5_long
     from data_pipeline_foundations_spark.operators.dedup import (
         SIMHASH_HASH_BITS,
     )
 
-    h = HASHERS[hasher]
     eff = min(bits, SIMHASH_HASH_BITS)
     d = df.withColumn(
-        "_hs", F.transform(F.split(F.col(text_col), " "), lambda t: h(t)))
+        "_hs", F.transform(F.split(F.col(text_col), " "),
+                           lambda t: md5_long(t)))
     d = d.withColumn("_cnt", F.expr(
         f"aggregate(_hs, array_repeat(CAST(0 AS BIGINT), {eff}), "
         f"(acc, h) -> transform(acc, (c, i) -> c + (shiftright(h, i) & CAST(1 AS BIGINT))))"
@@ -559,8 +559,7 @@ def _old_simhash_band_structs(keys, mask, band_combo, nbands):
 
 
 def _old_simhash_pairs(docs, *, id_col="doc_id", text_col="text", bits=64,
-                       band_bits=8, max_hamming=6, band_combo=None,
-                       hasher="md5"):
+                       band_bits=8, max_hamming=6, band_combo=None):
     """The r13 construction, verbatim (persist via the live
     tracked_persist symbol, so the pin's monkeypatch covers both
     sides)."""
@@ -572,8 +571,8 @@ def _old_simhash_pairs(docs, *, id_col="doc_id", text_col="text", bits=64,
     if band_combo is None:
         band_combo = 2 if nbands >= max_hamming + 2 else 1
     sig = caching.tracked_persist(
-        _old_with_simhash(scale_out(docs), text_col, bits, out="sh",
-                          hasher=hasher).select(id_col, "sh"))
+        _old_with_simhash(scale_out(docs), text_col, bits, out="sh")
+        .select(id_col, "sh"))
     keys = [F.shiftright(F.col("sh"), j * band_bits).bitwiseAND(F.lit(mask))
             for j in range(nbands)]
     band_structs = _old_simhash_band_structs(keys, mask, band_combo, nbands)
@@ -594,7 +593,7 @@ def _old_simhash_pairs(docs, *, id_col="doc_id", text_col="text", bits=64,
 
 
 def test_simhash_selectexpr_same_plan(spark, sf_dir, monkeypatch):
-    """with_simhash (both hashers) and simhash_pairs (combo 1 and 2):
+    """with_simhash and simhash_pairs (combo 1 and 2):
     new one-parse forms == old Column forms."""
     from data_pipeline_foundations_spark.operators import caching
     from data_pipeline_foundations_spark.operators.dedup import (
@@ -603,12 +602,9 @@ def test_simhash_selectexpr_same_plan(spark, sf_dir, monkeypatch):
     from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    for hasher in ("md5", "xx"):
-        _same(with_simhash(docs, "text", hasher=hasher)
-              .select("doc_id", "simhash"),
-              _old_with_simhash(docs, "text", hasher=hasher)
-              .select("doc_id", "simhash"),
-              f"with_simhash drift (hasher={hasher})")
+    _same(with_simhash(docs, "text").select("doc_id", "simhash"),
+          _old_with_simhash(docs, "text").select("doc_id", "simhash"),
+          "with_simhash drift")
     monkeypatch.setattr(caching, "tracked_persist",
                         lambda df, eager=True: df)
     for combo in (1, 2):

@@ -155,7 +155,7 @@ def test_stored_codes_search_matches_fused_kernel(spark, sf_dir):
     from data_pipeline_foundations_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
-    fused = sorted(map(tuple, pq_topk(emb, arrow=True).collect()))
+    fused = sorted(map(tuple, pq_topk(emb).collect()))
     model = build_ivfpq_model(emb)
     codes = encode_corpus(emb, model)
     assert codes.columns == ["vec_id", "cid", "codes"]

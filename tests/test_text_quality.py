@@ -201,21 +201,16 @@ def test_repeated_window_dedup_semantics(spark):
          (3, "p q r s t"),        # unique prose -> untouched
          (4, "u v")],             # shorter than the window -> no windows
         "doc_id long, text string")
-    outs = {}
-    for hasher in ("md5", "xx"):
-        rows = {r.doc_id: r for r in dedup_repeated_windows(
-            docs, win_tokens=4, hasher=hasher).collect()}
-        assert rows[1].clean_text == "a b c d e"
-        assert rows[1].n_dup_windows == 0
-        assert rows[2].clean_text == "x y w"
-        assert rows[2].n_dup_windows == 1
-        assert rows[2].n_removed_tokens == 4
-        assert rows[3].clean_text == "p q r s t"
-        assert rows[4].clean_text == "u v"
-        assert rows[4].n_tokens == 2 and rows[4].n_removed_tokens == 0
-        outs[hasher] = {d: (r.n_dup_windows, r.n_removed_tokens,
-                            r.clean_text) for d, r in rows.items()}
-    assert outs["md5"] == outs["xx"]
+    rows = {r.doc_id: r for r in dedup_repeated_windows(
+        docs, win_tokens=4).collect()}
+    assert rows[1].clean_text == "a b c d e"
+    assert rows[1].n_dup_windows == 0
+    assert rows[2].clean_text == "x y w"
+    assert rows[2].n_dup_windows == 1
+    assert rows[2].n_removed_tokens == 4
+    assert rows[3].clean_text == "p q r s t"
+    assert rows[4].clean_text == "u v"
+    assert rows[4].n_tokens == 2 and rows[4].n_removed_tokens == 0
 
 
 def test_repeated_window_dedup_requires_integral_id(spark):

@@ -1,60 +1,29 @@
-"""Arrow kernel == SQL twin equality pins (the quantized-embedding
-contract's load-bearing claim): for every similarity operator with a
-vectorized path, the Arrow kernel must produce BIT-IDENTICAL rows to the
-pure-HOF formulation — not approximately, exactly — because registry
-queries run the kernel while the DuckDB oracle mirrors the SQL twin.
+"""Arrow kernel guards (the quantized-embedding contract's load-bearing
+preconditions).
+
+Each Arrow kernel is its operator's ONE implementation, and its output is
+compared bit-for-bit — floats included — against the DuckDB oracle by
+tests/test_oracle_parity.py, at the registered inputs and kwargs:
+
+  - minhash_sig_udf (minhash_lsh_pairs):   x03_dedup_minhash_lsh
+  - srp_sig_udf (srp_bucket_neighbors):    x08_srp_ann
+  - bucket_pair_cosines
+    (cosine_near_dup_pairs, threshold 0.4): x12_embedding_near_dup
+  - ivf_cos_udf (ivf_topk):                x20_ivf_ann
+  - pq_adc_totals_udf (pq_topk):           x36_pq_ann
+
 Exactness holds because every reduction is an int64 sum and every float
-is derived from exact ints by identically-rounded IEEE ops."""
+is derived from exact ints by identically-rounded IEEE ops. This module
+keeps what the parity suite cannot see: degenerate inputs that would
+break the contract must fail loudly."""
 
 from __future__ import annotations
-
-import pytest
-
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
-from data_pipeline_foundations_spark.operators.similarity import (
-    cosine_near_dup_pairs, ivf_topk, pq_topk, srp_bucket_neighbors,
-)
-from data_pipeline_foundations_spark.tables import load
-
-
-def _rows(df):
-    out = sorted(tuple(r) for r in df.collect())
-    release_cached_intermediates()
-    return out
-
-
-@pytest.mark.parametrize("op,kwargs", [
-    (srp_bucket_neighbors, {}),
-    (cosine_near_dup_pairs, {"threshold": 0.4}),
-    (ivf_topk, {}),
-    (pq_topk, {}),
-], ids=["srp", "near_dup", "ivf", "pq"])
-def test_arrow_equals_sql_twin(spark, sf_dir, op, kwargs):
-    emb = load(spark, sf_dir, "embeddings")
-    arrow = _rows(op(emb, arrow=True, **kwargs))
-    sql = _rows(op(emb, arrow=False, **kwargs))
-    assert arrow == sql  # bit-identical, floats included
-
-
-def test_minhash_arrow_equals_sql_twin(spark, sf_dir):
-    """The r5 MinHash kernel (hashlib md5 + numpy modular arithmetic +
-    inline candidate estimation) must reproduce the HOF/join formulation
-    bit-for-bit — including est_jaccard's single IEEE division."""
-    from data_pipeline_foundations_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    docs = load(spark, sf_dir, "documents")
-    arrow = _rows(minhash_lsh_pairs(docs, arrow=True))
-    sql = _rows(minhash_lsh_pairs(docs, arrow=False))
-    assert arrow == sql and len(arrow) > 0
 
 
 def test_zero_norm_inputs_fail_loudly(spark):
     """Degenerate (zero-norm) vectors and centroids must raise, not
     silently NaN-route (ADVICE r9): 0/0 cosines make np.argmax pick the
-    first NaN index while the SQL twin's NULL ordering differs, so the
+    first NaN index while the DuckDB oracle's NULL ordering differs, so the
     bit-for-bit contract would break without any signal. All three IVF
     kernels reject them — centroids at closure build, vectors in-kernel."""
     import numpy as np
