@@ -287,42 +287,29 @@ def oracle_simhash_expr(sql_col: str, bits: int = SIMHASH_BITS) -> str:
 
 def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = SIMHASH_BITS,
-                  band_bits: int = 8, max_hamming: int = 6,
-                  band_combo: int | None = None) -> DataFrame:
+                  band_bits: int = 8, max_hamming: int = 6) -> DataFrame:
     """Near-dup pairs by SimHash banding: docs sharing a band key are
     candidates; keep pairs with hamming distance <= max_hamming.
 
-    ``band_combo`` (r10): index CONCATENATIONS of that many bands
-    instead of single bands — C(nbands, combo) tables with
-    combo·band_bits-wide keys. The r10 1000× probe killed the
-    single-band form at 5M docs: an 8-bit band key has 256 buckets, so
-    candidate volume follows tables·n²/keyspace ≈ n²/256·8 — ~390G
-    join rows at 5M docs (the banding saturates once n >> keyspace).
-    Pigeonhole makes the 2-combo OUTPUT-IDENTICAL, not merely similar:
-    hamming <= max_hamming flips at most max_hamming bands, so
-    nbands - max_hamming bands are clean; with nbands >= max_hamming+2
-    some clean PAIR of bands exists and the pair's concatenated key
-    matches — every hamming <= max_hamming pair stays a candidate
-    under both schemes, extra candidates differ but die in the exact
-    hamming filter, and both outputs equal "all pairs with hamming <=
-    max_hamming" (pinned). The 16-bit keyspace cuts candidates 75× at
-    5M docs; the law is still n²/keyspace — for corpora where even
-    that saturates (~20-30M docs), the measured escape is DEEPER combos
-    (band_combo=3 with band_bits=7: 2^21 keyspace, 32x candidate cut —
-    see simhash_pairs_sorted's docstring and SCALING.md r11 part 5 for
-    why Manku's sorted-scan form itself loses to this join at exactly
-    the volumes where a next tier matters). Default: auto — combo 2
-    whenever the guarantee holds (nbands >= max_hamming + 2), else
-    single-band."""
+    The index is chosen from the inputs (r10): CONCATENATIONS of two
+    bands — C(nbands, 2) tables with 2·band_bits-wide keys — whenever
+    nbands >= max_hamming + 2, single bands otherwise. The r10 1000×
+    probe killed the single-band form at 5M docs: an 8-bit band key has
+    256 buckets, so candidate volume follows tables·n²/keyspace ≈
+    n²/256·8 — ~390G join rows at 5M docs (the banding saturates once
+    n >> keyspace). Pigeonhole makes the 2-combo OUTPUT-IDENTICAL, not
+    merely similar: hamming <= max_hamming flips at most max_hamming
+    bands, so nbands - max_hamming bands are clean; with nbands >=
+    max_hamming+2 some clean PAIR of bands exists and the pair's
+    concatenated key matches — every hamming <= max_hamming pair stays
+    a candidate under both schemes, extra candidates differ but die in
+    the exact hamming filter, and both outputs equal "all pairs with
+    hamming <= max_hamming" (oracle parity covers each side: x05 at 64
+    bits takes the 2-combo, 32 bits takes single bands). The 16-bit
+    keyspace cuts candidates 75× at 5M docs."""
     nbands = bits // band_bits
     mask = (1 << band_bits) - 1
-    if band_combo is None:
-        band_combo = 2 if nbands >= max_hamming + 2 else 1
-    if band_combo > 1 and nbands < max_hamming + band_combo:
-        raise ValueError(
-            f"simhash_pairs: band_combo={band_combo} breaks the recall "
-            f"guarantee at max_hamming={max_hamming} with {nbands} bands "
-            f"(needs nbands >= max_hamming + combo)")
+    band_combo = 2 if nbands >= max_hamming + 2 else 1
     # TWO consumers (both sides of the self-join): without the persist the
     # signature pipeline (per-token md5 + per-bit aggregate — the dominant
     # cost) executes twice. The cached form is tiny: (id, int64).
@@ -349,12 +336,11 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
 
 def _simhash_band_structs_sql(band_bits: int, mask: int, band_combo: int,
                               nbands: int) -> str:
-    """The (band_id, band_key) struct ARRAY shared by the bucket-join and
-    sorted-table forms — single bands or combo-concatenated keys — as one
-    SQL string over the ``sh`` signature column (r14 one-parse form; the
-    Column list cost ~10 Py4J round trips per struct × C(nbands, combo)
-    structs per invocation). sameResult pin vs the Column form in
-    tests/test_r14_optimizations.py."""
+    """The (band_id, band_key) struct ARRAY of :func:`simhash_pairs` —
+    single bands or combo-concatenated keys — as one SQL string over the
+    ``sh`` signature column (r14 one-parse form; the Column list cost
+    ~10 Py4J round trips per struct × C(nbands, combo) structs per
+    invocation)."""
     from itertools import combinations
 
     keys = [f"(shiftright(sh, {j * band_bits}) & {mask})"
@@ -370,70 +356,6 @@ def _simhash_band_structs_sql(band_bits: int, mask: int, band_combo: int,
                 key = f"({key} * {mask + 1} + {keys[i]})"
             structs.append(f"struct({c} AS band_id, {key} AS band_key)")
     return "array(" + ", ".join(structs) + ")"
-
-
-def simhash_pairs_sorted(docs: DataFrame, *, id_col: str = "doc_id",
-                         text_col: str = "text", bits: int = SIMHASH_BITS,
-                         band_bits: int = 8, max_hamming: int = 6,
-                         band_combo: int | None = None) -> DataFrame:
-    """Manku et al. (WWW'07 "Detecting near-duplicates for web
-    crawling") sorted-permuted-fingerprint-table form of
-    :func:`simhash_pairs` — OUTPUT-IDENTICAL by the same pigeonhole
-    argument (each band combination plays the role of one block
-    permutation's leading bits; a hamming <= h pair has some clean
-    combination whenever nbands >= h + combo).
-
-    Where the bucket-join form shuffles the (id, key) projection TWICE
-    (both self-join sides) and generates candidates inside the join,
-    this form shuffles it ONCE — groupBy(band_id, band_key) with
-    collect_list — and generates each key-run's pairs scan-local with
-    one higher-order transform over the sorted run (Spark's shuffled
-    sort IS Manku's table sort; a run of equal leading bits is exactly
-    his probe range). The trade, measured in SCALING.md r11: pair
-    generation inside a HOF is interpreted (~0.1-1 us/candidate) while
-    join-side candidate generation is whole-stage-codegen'd — so the
-    sorted form wins only when the keyspace keeps runs SMALL (high
-    combo) and loses when candidates dominate; it exists to settle the
-    \">50M docs\" tier question with numbers rather than as the default.
-    """
-    nbands = bits // band_bits
-    mask = (1 << band_bits) - 1
-    if band_combo is None:
-        band_combo = 2 if nbands >= max_hamming + 2 else 1
-    if band_combo > 1 and nbands < max_hamming + band_combo:
-        raise ValueError(
-            f"simhash_pairs_sorted: band_combo={band_combo} breaks the "
-            f"recall guarantee at max_hamming={max_hamming} with "
-            f"{nbands} bands (needs nbands >= max_hamming + combo)")
-    sig = (with_simhash(scale_out(docs), text_col, bits, out="sh")
-           .select(id_col, "sh"))
-    qid = sql_ident(id_col)
-    arr = _simhash_band_structs_sql(band_bits, mask, band_combo, nbands)
-    bands_df = (sig.selectExpr(qid, "sh", f"explode({arr}) AS b")
-                .selectExpr(f"{qid} AS i", "sh",
-                            "b.band_id", "b.band_key"))
-    runs = (bands_df.groupBy("band_id", "band_key")
-            .agg(F.sort_array(F.collect_list(F.struct("i", "sh")))
-                 .alias("g"))
-            .filter(F.size("g") >= 2))
-    # all i<j pairs of a run, scan-local: element k pairs with the
-    # k+1.. tail (the array is sorted by id, so doc_a < doc_b holds by
-    # construction); far pairs die on the hamming predicate inside the
-    # same HOF before anything is emitted
-    pair_arr = F.flatten(F.transform(
-        F.col("g"),
-        lambda x, k: F.filter(
-            F.transform(
-                F.slice(F.col("g"), k + F.lit(2),
-                        F.greatest(F.size("g") - k - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["i"].alias("doc_a"), y["i"].alias("doc_b"),
-                    F.bit_count(x["sh"].bitwiseXOR(y["sh"]))
-                    .alias("hamming"))),
-            lambda p: p["hamming"] <= F.lit(max_hamming))))
-    return (runs.select(F.explode(pair_arr).alias("p"))
-            .select("p.doc_a", "p.doc_b", "p.hamming")
-            .distinct())
 
 
 def oracle_simhash_pairs_sql(*, bits: int = SIMHASH_BITS, band_bits: int = 8,
@@ -700,7 +622,8 @@ def decontaminate_two_tier(docs: DataFrame, bench_pred: Column, *,
     holds to ~2M benchmark shingles; beyond it the trickle grows
     smoothly (never a cliff — at fill f the pass rate is f^K) and the
     exact join keeps output identical. ``bloom_bits`` overrides the
-    auto-size for callers that know their benchmark.
+    auto-size for callers that know their benchmark; it must be a
+    positive multiple of 64.
 
     Scale shape — the regime where this beats :func:`decontaminate`:
     when the benchmark's distinct-shingle table outgrows the broadcast
@@ -716,8 +639,8 @@ def decontaminate_two_tier(docs: DataFrame, bench_pred: Column, *,
     broadcast while the benchmark side is small and a survivor-sized
     shuffle join beyond it, which is exactly the routing the two-tier
     design wants."""
-    from .sketches import (bloom_bits_for, bloom_pack_keys,
-                           bloom_positions_hashed_for)
+    from .sketches import (bloom_bits_for, bloom_filter_col,
+                           bloom_pack_keys)
     # ONE shared shingle+select helper for both trees (r14, ADVICE r13:
     # the two copies differed only in the scale_out wrapper, and a future
     # edit to one select list would silently desynchronize the
@@ -758,9 +681,7 @@ def decontaminate_two_tier(docs: DataFrame, bench_pred: Column, *,
     keys = [r[0] for r in bench_s.collect()]
     if bloom_bits is None:
         bloom_bits = bloom_bits_for(len(keys))
-    positions = bloom_positions_hashed_for(bloom_bits)
     words = bloom_pack_keys(keys, bloom_bits)
-    from .sketches import bloom_filter_col
     # scalar probe AFTER the explode, not an array HOF before it: the
     # HOF lambda is interpreted per element (the x53 2.5x adjudication,
     # plans/quality.py) while this expression tree codegens — and the
@@ -769,8 +690,7 @@ def decontaminate_two_tier(docs: DataFrame, bench_pred: Column, *,
               .select(id_col, F.size("sh").cast("long").alias("n_shingles"),
                       F.explode_outer("sh").alias("s"))
               .filter(F.col("s").isNotNull())
-              .filter(bloom_filter_col(F.col("s"), words,
-                                       positions=positions)))
+              .filter(bloom_filter_col(F.col("s"), words)))
     return (corpus.join(bench_s, "s")
             .groupBy(id_col, "n_shingles")
             .agg(F.count(F.lit(1)).alias("n_shared"))

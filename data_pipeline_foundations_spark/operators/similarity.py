@@ -42,14 +42,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql import sql_ident
 from ..tables import scale_out
 
 EMB_SCALE = 1_000_000.0  # quantization grid: 1e-6 — shared by all tiers
 
 
 def int_vec(col: Column | str) -> Column:
-    """array<float> -> array<long>: the 1e-6-grid quantized vector."""
-    c = F.col(col) if isinstance(col, str) else col
+    """array<float> -> array<long>: the 1e-6-grid quantized vector. A
+    column name is quoted, so a dot in it never reads as a struct field."""
+    c = F.col(sql_ident(col)) if isinstance(col, str) else col
     return F.transform(c, lambda x: F.floor(
         x.cast("double") * F.lit(EMB_SCALE) + F.lit(0.5)).cast("long"))
 
@@ -152,97 +154,38 @@ def oracle_cosine_topk_sql(*, n_queries: int = 10, k: int = 5) -> str:
 def hard_negatives(emb: DataFrame, *, id_col: str = "vec_id",
                    vec_col: str = "embedding", label_col: str = "label",
                    n_queries: int = 10, k: int = 5) -> DataFrame:
-    """ANN-mined hard negatives for contrastive training: for each of the
-    first ``n_queries`` vectors, the ``k`` nearest corpus vectors whose
-    label DIFFERS from the query's — the highest-similarity wrong-label
-    examples, exactly the pairs a contrastive objective learns most from
-    (x58's hash-drawn negatives are the cheap uniform alternative; these
-    are the curriculum's hard tier). Returns (query_id, query_label,
-    negative_id, negative_label, rank, cosine).
+    """Exact hard negatives for contrastive training (the registered x86
+    plan): for each of the first ``n_queries`` vectors, the ``k``
+    nearest corpus vectors whose label DIFFERS from the query's — the
+    highest-similarity wrong-label examples, exactly the pairs a
+    contrastive objective learns most from (x58's hash-drawn negatives
+    are the cheap uniform alternative; these are the curriculum's hard
+    tier). Returns (query_id, query_label, negative_id, negative_label,
+    rank, cosine). At 100 TB the production path is
+    :func:`hard_negatives_ann` (shards the query set over the IVF
+    candidate pool, x20's quantizer); this exact form is the
+    ground-truth / evaluation tier.
 
-    Same shape and scale contract as :func:`cosine_topk`: the query side
-    is tiny → broadcast (the label-mismatch predicate rides the same
-    non-equi broadcast join as x07's self-exclusion), the corpus never
-    shuffles until the per-query top-k window, and each corpus vector is
-    scored once per query. At 100 TB the mining cost is one corpus scan
-    per query batch — the production path is :func:`hard_negatives_ann`
-    (shards the query set over the IVF candidate pool, x20's quantizer);
-    this exact form is the ground-truth / evaluation tier.
+    Each Arrow batch becomes ONE int64 numpy matmul against the
+    broadcast query matrix — the oracle's exact quantized-int dots
+    (floor(x·1e6 + 0.5) in float64, int64 accumulation, |dot| ≤
+    dim·(max|v|·1e6)² ≪ 2^63) and IEEE cosine (d / (qrt·rt)). The
+    Column form with a label-mismatch broadcast NESTED-LOOP join and a
+    per-pair F.aggregate/zip_with dot read 4× slower at 2M vectors
+    (SCALING.md r12 part 6).
 
-    Zero-norm vectors (r13, ADVICE): cosine is undefined for them, and
-    the two engines' NaN orderings disagree (numpy lexsort ranks NaN
-    last, a Spark Window's DESC ranks it first), so both forms and the
-    oracle DROP zero-norm rows up front — on either side of the pair.
-    That keeps the bit-equality pin between this form and
-    :func:`hard_negatives_vectorized` valid on ANY input, not just
-    corpora that happen to have no zero vector.
-    """
-    from pyspark.sql import Window as W
-    base = (scale_out(emb)
-            .select(F.col(id_col), F.col(label_col),
-                    int_vec(vec_col).alias("sv"))
-            .withColumn("n2", idot("sv", "sv"))
-            .filter(F.col("n2") > 0)
-            .withColumn("rt", F.sqrt(F.col("n2").cast("double"))))
-    q = (emb.select(F.col(id_col), F.col(label_col),
-                    int_vec(vec_col).alias("qv"))
-         .filter(F.col(id_col) < n_queries)
-         .withColumn("qn2", idot("qv", "qv"))
-         .filter(F.col("qn2") > 0)
-         .withColumn("qrt", F.sqrt(F.col("qn2").cast("double")))
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(label_col).alias("query_label"), "qv", "qrt"))
-    joined = (
-        base.join(F.broadcast(q), F.col(label_col) != F.col("query_label"))
-        .select(
-            "query_id", "query_label",
-            F.col(id_col).alias("negative_id"),
-            F.col(label_col).alias("negative_label"),
-            (idot("qv", "sv").cast("double")
-             / (F.col("qrt") * F.col("rt"))).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                          F.col("negative_id").asc())
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "query_label", "negative_id",
-                    "negative_label", F.col("rank").cast("int").alias("rank"),
-                    "cosine"))
-
-
-def hard_negatives_vectorized(emb: DataFrame, *, id_col: str = "vec_id",
-                              vec_col: str = "embedding",
-                              label_col: str = "label",
-                              n_queries: int = 10, k: int = 5) -> DataFrame:
-    """:func:`hard_negatives`, Arrow-batched — since r13 THE REGISTERED
-    x86 plan (VERDICT r12 #1): the dense-linear-algebra form of the
-    brute-force mining scan. The JVM form's r12 2M-vector probe read
-    3.84× behind the columnar oracle with a named cause — the
-    label-mismatch predicate forces a broadcast NESTED-LOOP join and
-    every (query, corpus) pair pays the interpreted
-    F.aggregate/zip_with dot-product HOF. Here each Arrow batch becomes
-    ONE int64 numpy matmul against the broadcast query matrix — the
-    same exact quantized-int dots (floor(x·1e6 + 0.5) in float64, int64
-    accumulation, |dot| ≤ dim·(max|v|·1e6)² ≪ 2^63), the same IEEE
-    cosine (d / (qrt·rt)), so output is BIT-IDENTICAL to
-    :func:`hard_negatives` (pinned in tests/test_similarity.py at four
-    scale factors); the JVM form stays in-tree as the oracle-shaped
-    reference the pin runs against.
-
-    Zero-norm vectors are dropped on both sides (r13, ADVICE) — see
-    :func:`hard_negatives`; without the drop, numpy lexsort (NaN last)
-    and the JVM Window (NaN first) would rank NaN cosines differently
-    and the equality pin could be invalidated by data.
+    Zero-norm vectors (r13, ADVICE): cosine is undefined for them, so
+    this form and the oracle DROP zero-norm rows up front — on either
+    side of the pair. Without the drop, numpy lexsort (NaN last) and
+    DuckDB's window ordering would rank NaN cosines differently.
 
     Scale shape: the query side is a KB-scale driver artifact (x42's
     collect discipline); the corpus streams through mapInPandas once,
     each batch emitting at most n_queries·k pre-trimmed survivors
     (per-batch top-k under the SAME total order (cosine desc, id asc)
-    keeps the global top-k by pigeonhole), and the terminal window
-    ranks ~n_queries·k·n_batches rows. Python is the right side of the
-    UDF tradeoff here because the work is one BLAS-shaped matmul per
-    batch, not per-row interpretation."""
+    keeps the global top-k by pigeonhole — batch-local top-k then a
+    global merge, as in REPOSE), and the terminal window ranks
+    ~n_queries·k·n_batches rows."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window as W
@@ -450,7 +393,7 @@ def hard_negative_ann_recall(emb: DataFrame, *, id_col: str = "vec_id",
     Scale shape: both sides are the registered operators' plans
     unchanged; the join is n_queries·k rows against n_queries·k rows —
     driver-free, dimension-sized."""
-    truth = (hard_negatives_vectorized(
+    truth = (hard_negatives(
         emb, id_col=id_col, vec_col=vec_col, label_col=label_col,
         n_queries=n_queries, k=k)
         .select("query_id", "negative_id"))
@@ -627,6 +570,20 @@ def _collect_no_aqe(df: DataFrame) -> list:
         conf.set("spark.sql.adaptive.enabled", aqe0)
 
 
+def _quantized_sums(vec_col: str, dim: int) -> Column:
+    """``vec``: the exact per-dimension bigint sums of ``vec_col`` on the
+    1e-6 grid (the int_vec quantization, inlined per element), as ONE
+    parsed aggregate — the IVF centroid numerator. ``vec_col`` is quoted,
+    so any caller column name is safe."""
+    v = sql_ident(vec_col)
+    return F.expr(
+        "array(" + ", ".join(
+            f"sum(cast(floor(cast({v}[{i}] as double) * "
+            f"{EMB_SCALE} + 0.5) as bigint))"
+            for i in range(dim)) + ")"
+    ).alias("vec")
+
+
 def _ivf_model_rows(emb: DataFrame, id_col: str, vec_col: str,
                     k_clusters: int, seed: int, dim: int,
                     n_queries: int = 0,
@@ -666,12 +623,7 @@ def _ivf_model_rows(emb: DataFrame, id_col: str, vec_col: str,
     base0 = emb.withColumn(
         "bucket",
         _md5(F.col(id_col).cast("string"), seed=seed) % k_clusters)
-    sum_arr = F.expr(
-        "array(" + ", ".join(
-            f"sum(cast(floor(cast({vec_col}[{i}] as double) * "
-            f"{EMB_SCALE} + 0.5) as bigint))"
-            for i in range(dim)) + ")"
-    ).alias("vec")
+    sum_arr = _quantized_sums(vec_col, dim)
     cent_part = (base0.groupBy("bucket")
                  .agg(F.count(F.lit(1)).alias("cnt"), sum_arr)
                  .select(F.lit(0).alias("kind"),
@@ -781,7 +733,7 @@ def ivf_topk(emb: DataFrame, *, id_col: str = "vec_id",
     qids = [int(r[id_col]) for r in qrows]
     qid_arr = F.array(*[F.lit(q).cast("long") for q in qids])
     scored = (emb
-              .select(F.col(id_col), F.col(vec_col).alias("_v"))
+              .select(F.col(id_col), F.col(sql_ident(vec_col)).alias("_v"))
               .withColumn("_cos", cos_udf("_v"))
               .select(F.col(id_col).alias("neighbor_id"),
                       F.posexplode("_cos").alias("qi", "cosine"))
@@ -1202,12 +1154,7 @@ def _ivfpq_artifacts(emb: DataFrame, id_col: str, vec_col: str, dim: int,
     base0 = emb.withColumn(
         "bucket",
         _md5(F.col(id_col).cast("string"), seed=ivf_seed) % k_clusters)
-    sum_arr = F.expr(
-        "array(" + ", ".join(
-            f"sum(cast(floor(cast({vec_col}[{i}] as double) * "
-            f"{EMB_SCALE} + 0.5) as bigint))"
-            for i in range(dim)) + ")"
-    ).alias("vec")
+    sum_arr = _quantized_sums(vec_col, dim)
     ivf_part = (base0.groupBy("bucket")
                 .agg(F.count(F.lit(1)).alias("cnt"), sum_arr)
                 .select(F.lit(0).alias("kind"), F.lit(-1).alias("s"),
@@ -1792,12 +1739,7 @@ def train_ivf_centroids(emb: DataFrame, *, id_col: str = "vec_id",
 
     cents_rows, _ = _ivf_model_rows(emb, id_col, vec_col, k_clusters,
                                     seed, dim)
-    sum_arr = F.expr(
-        "array(" + ", ".join(
-            f"sum(cast(floor(cast(_v[{i}] as double) * "
-            f"{EMB_SCALE} + 0.5) as bigint))"
-            for i in range(dim)) + ")"
-    ).alias("vec")
+    sum_arr = _quantized_sums("_v", dim)
     for _ in range(max(0, iters)):
         asg = (emb.select(F.col(vec_col).alias("_v"))
                .withColumn("cid",

@@ -306,9 +306,9 @@ def oracle_cms_ctes(key_sql: str, src_sql: str) -> str:
 # Bloom filter — the mergeable MEMBERSHIP sketch completing the trio
 # ---------------------------------------------------------------------------
 # Bloom, "Space/time trade-offs in hash coding with allowable errors",
-# CACM 1970. Same portability discipline: bit positions are md5 portable
-# hashes under K distinct seeds, the filter is the DISTINCT set of set
-# positions (union-mergeable), membership is "all K positions set" —
+# CACM 1970. Same portability discipline: bit positions are exact-int
+# hashes under K distinct constants, the filter is the DISTINCT set of
+# set positions (union-mergeable), membership is "all K positions set" —
 # one-sided like CMS (no false negatives), pinned by tests. The
 # oracle-checkable form materializes the filter as a position TABLE and
 # tests membership with a broadcast equi-join (positions die map-side);
@@ -321,15 +321,14 @@ BLOOM_B = 1 << 14            # bits
 # and each row costs one hash per PROBED shingle — the probe side is the
 # corpus, so K is the multiplier on the expensive side.
 BLOOM_K = 2                  # positions per key
-BLOOM_SEED0 = 201
 # Universal-hash family for keys that are ALREADY uniform hashes (the
 # shingle pipeline's md5-derived longs): production Blooms never re-md5
 # a hashed long — position k is one multiply-add mod p mod B (the
 # Kirsch–Mitzenmacher observation: independent cheap mixes of one good
 # hash preserve the false-positive bound). Constants are md5-derived
 # driver-side, not RNG state; the same exact-int arithmetic runs in
-# DuckDB, so decisions stay bit-identical cross-engine. The md5 family
-# (bloom_positions) remains the general form for raw/string keys.
+# DuckDB, so decisions stay bit-identical cross-engine. Keys must be
+# non-negative longs; every caller probes 60-bit shingle hashes.
 _BLOOM_P = 2_147_483_647     # 2^31 - 1
 
 
@@ -342,35 +341,18 @@ def _bloom_family(k: int) -> tuple[int, int]:
     return ((h(f"BLA{k}") % (_BLOOM_P - 1)) + 1, h(f"BLB{k}") % _BLOOM_P)
 
 
-def bloom_positions(col, k: int):
-    from ..functions.hashing import md5_long
-    return md5_long(col.cast("string"), seed=BLOOM_SEED0 + k) % BLOOM_B
-
-
-def bloom_positions_hashed(col, k: int):
-    """Position k of an already-hashed NON-NEGATIVE long key: one
-    multiply-add mod p — no md5. The leading ``% p`` reduce keeps
-    a·(col % p) < 2^62 for every non-negative int64 key."""
+def bloom_positions(col, k: int, bits: int = BLOOM_B):
+    """Position k of an already-hashed NON-NEGATIVE long key in a
+    ``bits``-bit set: one multiply-add mod p — no md5. The leading
+    ``% p`` reduce keeps a·(col % p) < 2^62 for every non-negative int64
+    key. A non-default ``bits`` (r13, ADVICE) is for key sets that scale
+    with the data: the fixed BLOOM_B = 2^14 saturates once the keyed set
+    outgrows ~m/K bits — at |keys| ≈ m the per-probe fill is
+    1 − e^{−K·n/m} → 1 and the filter passes everything. Build and probe
+    agree as long as both use the same ``bits``."""
     a, b = _bloom_family(k)
     return ((F.lit(a) * (col % F.lit(_BLOOM_P)) + F.lit(b))
-            % F.lit(_BLOOM_P)) % F.lit(BLOOM_B)
-
-
-def bloom_positions_hashed_for(bits: int):
-    """:func:`bloom_positions_hashed` for a NON-default bitset size
-    (r13, ADVICE): the fixed BLOOM_B = 2^14 saturates once the keyed
-    set outgrows ~m/K bits — at |keys| ≈ m the per-probe fill is
-    1 − e^{−K·n/m} → 1 and the filter passes everything, so callers
-    whose key set scales with the data (decontaminate_two_tier's
-    benchmark side) must size m from a key count instead of inheriting
-    the demo constant. Same multiply-add family, same constants — only
-    the terminal fold changes, so build and probe agree as long as both
-    use the same ``bits``."""
-    def pos(col, k: int):
-        a, b = _bloom_family(k)
-        return ((F.lit(a) * (col % F.lit(_BLOOM_P)) + F.lit(b))
-                % F.lit(_BLOOM_P)) % F.lit(bits)
-    return pos
+            % F.lit(_BLOOM_P)) % F.lit(bits)
 
 
 def bloom_bits_for(n_keys: int, *, floor_bits: int = BLOOM_B,
@@ -389,26 +371,23 @@ def bloom_bits_for(n_keys: int, *, floor_bits: int = BLOOM_B,
     return bits
 
 
-def oracle_bloom_positions_hashed(key_sql: str, k: int) -> str:
+def oracle_bloom_positions(key_sql: str, k: int) -> str:
     a, b = _bloom_family(k)
     return (f"((({a} * (({key_sql}) % {_BLOOM_P}) + {b}) % {_BLOOM_P})"
             f" % {BLOOM_B})")
 
 
-def bloom_build(keys: DataFrame, key_col: str,
-                positions=bloom_positions) -> DataFrame:
-    """(pos): the distinct set-bit table of the key set. Union-mergeable
-    across shards by construction (distinct of a union). ``positions``
-    picks the hash family — md5 (default, any key type) or
-    :func:`bloom_positions_hashed` for already-hashed long keys; build
-    and probe must use the SAME family."""
-    pos = F.array(*[positions(F.col(key_col), k)
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
+    """(pos): the distinct set-bit table of the key set over BLOOM_B
+    bits. Union-mergeable across shards by construction (distinct of a
+    union)."""
+    pos = F.array(*[bloom_positions(F.col(key_col), k)
                     for k in range(BLOOM_K)])
     return (keys.select(F.explode(pos).alias("pos")).distinct())
 
 
 def bloom_hits(items: DataFrame, item_key: str,
-               bloom: DataFrame, positions=bloom_positions) -> DataFrame:
+               bloom: DataFrame) -> DataFrame:
     """Rows of ``items`` whose key tests POSITIVE (all K positions set):
     K successive broadcast LEFT SEMI joins, one per hash row — misses
     die map-side at the first unset position and NOTHING shuffles (the
@@ -420,7 +399,7 @@ def bloom_hits(items: DataFrame, item_key: str,
         raise ValueError("bloom_hits: items must not carry a _pos column")
     out = items
     for k in range(BLOOM_K):
-        out = (out.withColumn("_pos", positions(F.col(item_key), k))
+        out = (out.withColumn("_pos", bloom_positions(F.col(item_key), k))
                .join(F.broadcast(bloom.withColumnRenamed("pos", "_pos")),
                      "_pos", "leftsemi")
                .drop("_pos"))
@@ -433,8 +412,8 @@ def bloom_bitset_words(bloom: DataFrame, *, bits: int = BLOOM_B) -> list[int]:
     the \"real bitset inside a kernel\" the module note promises: the
     filter is FIXED-SIZE regardless of corpus scale, so collecting it is
     the production shape (same class as an IVF centroid model). ``bits``
-    must match the family the positions were built with
-    (:func:`bloom_positions_hashed_for`)."""
+    must match the ``bits`` the positions were built with
+    (:func:`bloom_positions`)."""
     words = [0] * (bits // 64)
     for (p,) in bloom.collect():
         words[p >> 6] |= 1 << (p & 63)
@@ -450,20 +429,11 @@ def _words_literal(words: list[int]):
     words of an auto-sized 2^17-bit bloom, paid at PLAN BUILD time on
     every query invocation — while one ``F.expr("array(...L)")`` parse
     of the same values is ~7 ms at any size. Same Literal node in the
-    plan either way.
-
-    Empty ``words`` (reachable only via a caller-supplied
-    ``bloom_bits < 64``) needs an explicit cast: a bare ``array()``
-    types as ``array<void>`` and breaks the element_at/bit_get probes
-    at analysis, where the old ``F.lit([]).cast('array<long>')`` form
-    stayed typed (r14, ADVICE r13)."""
-    if not words:
-        return F.expr("array()").cast("array<long>")
+    plan either way."""
     return F.expr("array(" + ",".join(f"{int(w)}L" for w in words) + ")")
 
 
-def bloom_filter_array(arr, words: list[int],
-                       positions=bloom_positions_hashed):
+def bloom_filter_array(arr, words: list[int]):
     """Scan-local Bloom survivors of an ``array<long>`` key column: keeps
     the keys whose K positions are ALL set, as ONE higher-order filter
     over the array — no explode, no joins. The fused form of
@@ -477,42 +447,28 @@ def bloom_filter_array(arr, words: list[int],
     the 16 KB string per call. Two lessons are baked in: HOF lambdas
     are interpreted AND excluded from codegen CSE (module docstring of
     operators/dedup.py), so the per-element position hash must be
-    CHEAP — the default family is the multiply-add one for hashed
-    longs; an md5-per-probe family measured 4-10x slower here.
-
-    ``positions`` may be a sized family
-    (:func:`bloom_positions_hashed_for`) when ``words`` was packed for
-    a non-default bitset; the words array rides the plan as ONE
-    F.lit(list) literal column, not a per-element F.array tree — at the
-    auto-sized cap (2^24 bits = 262144 words) an element-wise Py4J
-    expression tree would dwarf the plan while a single literal stays
-    one serialized constant."""
-    bw = _words_literal(words)
-
-    def probe(s):
-        cond = None
-        for k in range(BLOOM_K):
-            pos = positions(s, k)
-            word = F.element_at(bw, F.shiftright(pos, 6).cast("int") + 1)
-            hit = F.bit_get(word, pos.bitwiseAND(F.lit(63))) == 1
-            cond = hit if cond is None else (cond & hit)
-        return cond
-
-    return F.filter(arr, probe)
+    CHEAP — the family is the multiply-add one for hashed longs; an
+    md5-per-probe family measured 4-10x slower here. Each element is
+    probed by :func:`bloom_filter_col`."""
+    return F.filter(arr, lambda s: bloom_filter_col(s, words))
 
 
 def bloom_pack_keys(keys: list[int], bits: int) -> list[int]:
     """Pack a collected key list straight into the bits/64 words bitset,
     driver-side (r13): one numpy multiply-add per hash row over the
     whole key vector — the same family arithmetic as
-    :func:`bloom_positions_hashed_for` on the same non-negative 60-bit
-    keys (a·(k % P) + b < 2^62 never overflows int64), so the words are
+    :func:`bloom_positions` on the same non-negative 60-bit keys
+    (a·(k % P) + b < 2^62 never overflows int64), so the words are
     bit-identical to building the position table in Spark and packing
     it (pinned in tests). Lets a caller that already collects the key
     set (decontaminate_two_tier sizes the bitset from it) skip the
-    separate distinct-positions job."""
+    separate distinct-positions job. ``bits`` must be a positive
+    multiple of 64: the probes read the size back as 64 · len(words)."""
     import numpy as np
 
+    if bits <= 0 or bits % 64:
+        raise ValueError(
+            f"bloom_pack_keys: bits={bits} must be a positive multiple of 64")
     kv = np.asarray(keys, dtype=np.int64) % _BLOOM_P
     words = np.zeros(bits // 64, dtype=np.uint64)
     for k in range(BLOOM_K):
@@ -525,8 +481,7 @@ def bloom_pack_keys(keys: list[int], bits: int) -> list[int]:
     return [int(w) for w in out]
 
 
-def bloom_filter_col(col, words: list[int],
-                     positions=bloom_positions_hashed):
+def bloom_filter_col(col, words: list[int]):
     """Boolean membership probe of a SCALAR long key column against the
     packed ``words`` bitset — the codegen form of the packed-bitset
     probe (r13): where :func:`bloom_filter_array` pays the interpreted-
@@ -535,28 +490,20 @@ def bloom_filter_col(col, words: list[int],
     plain expression tree — element_at + bit_get per hash row — that
     whole-stage codegen compiles, while the broadcast artifact stays
     O(bits) (the words literal), never O(keys) like the position-table
-    semi joins. ``positions`` must be the same (possibly sized) family
-    the words were packed with."""
+    semi joins. The bitset size is ``64 * len(words)``; the words ride
+    the plan as ONE literal column, not a per-element F.array tree — at
+    the auto-sized cap (2^24 bits = 262144 words) an element-wise Py4J
+    expression tree would dwarf the plan while a single literal stays
+    one serialized constant."""
     bw = _words_literal(words)
+    bits = 64 * len(words)
     cond = None
     for k in range(BLOOM_K):
-        pos = positions(col, k)
+        pos = bloom_positions(col, k, bits)
         word = F.element_at(bw, F.shiftright(pos, 6).cast("int") + 1)
         hit = F.bit_get(word, pos.bitwiseAND(F.lit(63))) == 1
         cond = hit if cond is None else (cond & hit)
     return cond
-
-
-def oracle_bloom_ctes(key_sql: str, src_sql: str) -> str:
-    """CTE ``bloom_bits`` (pos) over ``src_sql``'s ``key_sql`` keys."""
-    from ..functions.hashing import oracle_md5_long
-    selects = "\n        UNION\n        ".join(
-        f"SELECT ({oracle_md5_long(f'CAST({key_sql} AS VARCHAR)', seed=BLOOM_SEED0 + k)})"
-        f" % {BLOOM_B} AS pos FROM {src_sql}"
-        for k in range(BLOOM_K))
-    return f"""bloom_bits AS (
-        {selects}
-    )"""
 
 
 # -- Mergeable quantile sketch (log2-octave bins, quartile sub-bins) ----

@@ -21,11 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def violation_rules(*rules: tuple[str, Column]) -> list[tuple[str, Column]]:
-    """Identity helper for readability at call sites."""
-    return list(rules)
-
-
 def constraint_report(df: DataFrame,
                       rules: list[tuple[str, Column]],
                       unique: list[tuple[str, list[str]]] | None = None

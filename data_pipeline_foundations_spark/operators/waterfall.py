@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..functions.money import bround2_sql, round2_sql
+from ..functions.money import bround2_sql, oracle_round2, round2_sql
 from ..functions.sql import sql_ident
 
 
@@ -97,9 +97,7 @@ def oracle_waterfall_sql() -> str:
     loan; buckets derive from o_totalprice; paid = discounted lineitem
     revenue. Expression tree matches waterfall_columns step for step.
     """
-    def r2(e: str) -> str:
-        # engine-agnostic half-up, mirrors functions.money.round2
-        return f"(CAST(FLOOR(({e}) * 100.0 + 0.5) AS BIGINT) / 100.0)"
+    r2 = oracle_round2
 
     return f"""
     WITH paid AS (

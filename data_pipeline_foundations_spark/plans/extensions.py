@@ -100,7 +100,8 @@ def x05_simhash_near_dups(spark, sf_dir):
     """SimHash near-dup pairs via byte-banding + hamming<=6 filter.
     Registered form (r11): 64-bit signature, 8 bands, auto 2-band
     combination index — the configuration that survives 5M docs
-    (SCALING.md r10 part 5); 32-bit stays a legacy knob."""
+    (SCALING.md r10 part 5); 32-bit signatures take the single-band
+    index automatically."""
     return simhash_pairs(load(spark, sf_dir, "documents"))
 
 
@@ -2777,25 +2778,23 @@ def _oracle_hard_negatives() -> str:
 
 @query("x86_hard_negative_mining", oracle=_oracle_hard_negatives())
 def x86_hard_negative_mining(spark, sf_dir):
-    """Brute-force hard negatives (operators/similarity
-    .hard_negatives_vectorized): for each of the first 10 query
-    vectors, the 5 nearest corpus vectors with a DIFFERENT label — the
-    highest-similarity wrong-label examples a contrastive objective
-    learns most from. x58 draws cheap uniform negatives; this is the
-    hard tier the mining literature (DPR, ANCE) actually ships.
+    """Brute-force hard negatives (operators/similarity.hard_negatives):
+    for each of the first 10 query vectors, the 5 nearest corpus
+    vectors with a DIFFERENT label — the highest-similarity wrong-label
+    examples a contrastive objective learns most from. x58 draws cheap
+    uniform negatives; this is the hard tier the mining literature
+    (DPR, ANCE) actually ships.
 
-    r13 (VERDICT r12 #1): the registered plan is now the Arrow-batched
-    matmul form — the r12-registered JVM form (broadcast nested-loop
-    join + interpreted per-pair HOF dot) measured 2.6× behind the
-    oracle at 2M vectors while this form, pinned bit-equal to it at
-    four scale factors, measured 0.66×. The corpus streams through ONE
-    mapInPandas stage (one int64 matmul per batch, n_queries·k
-    survivors out) into the per-query top-k window; the JVM form stays
-    in-tree as the pin's oracle-shaped reference, and x93 is the
-    ANN-routed production tier above both."""
-    from ..operators.similarity import hard_negatives_vectorized
+    r13 (VERDICT r12 #1): the registered plan is the Arrow-batched
+    matmul form — the r12 JVM form (broadcast nested-loop join +
+    interpreted per-pair HOF dot) measured 2.6× behind the oracle at
+    2M vectors while this form measured 0.66×. The corpus streams
+    through ONE mapInPandas stage (one int64 matmul per batch,
+    n_queries·k survivors out) into the per-query top-k window; x93 is
+    the ANN-routed production tier above it."""
+    from ..operators.similarity import hard_negatives
 
-    return hard_negatives_vectorized(load(spark, sf_dir, "embeddings"))
+    return hard_negatives(load(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------

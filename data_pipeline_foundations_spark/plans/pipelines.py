@@ -13,7 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import round2, round2_sql
+from ..functions.money import (
+    oracle_round2, oracle_scaled_long, round2, round2_sql,
+)
 from ..operators.calendar import calendar_dim, oracle_calendar_sql
 from ..operators.waterfall import oracle_waterfall_sql, waterfall_columns
 from ..registry import query
@@ -72,14 +74,10 @@ def d11_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PL01_AS_OF = "2025-12-31"  # injectable "now" anchor (SURVEY.md D7)
 
 
-def _r2(e: str) -> str:
-    return f"(CAST(FLOOR(({e}) * 100.0 + 0.5) AS BIGINT) / 100.0)"
-
-
 def _oracle_pl01_ctes() -> str:
     """The settlement chain's CTE block (everything up to ``settled``),
     shared by pl01's final projection and pl02's accounting summaries."""
-    r2 = _r2
+    r2 = oracle_round2
 
     def chan(flag: str) -> str:
         return f"""
@@ -165,7 +163,7 @@ def _oracle_pl01_ctes() -> str:
 
 def _oracle_pl01_sql() -> str:
     """DuckDB twin of pl01 — same operator chain, same money arithmetic."""
-    r2 = _r2
+    r2 = oracle_round2
     return f"""{_oracle_pl01_ctes()}
     SELECT loan_id, customer_id,
            CASE o_orderstatus WHEN 'F' THEN 'Fulfilled' WHEN 'O' THEN 'Open'
@@ -404,14 +402,11 @@ def _oracle_pl02_sql() -> str:
     import datetime as _dt
 
     from ..pipelines.accounting import _last_day_prev_month
-    r2 = _r2
+    r2 = oracle_round2
     # cutoff derived from the SAME anchor the Spark side uses, so a
     # change to _PL02_AS_OF can never silently desynchronize the twins
     cutoff = _last_day_prev_month(
         _dt.datetime.fromisoformat(_PL02_AS_OF + " 00:00:00")).isoformat()
-
-    def cts(e: str) -> str:  # exact cents
-        return f"CAST(FLOOR(({e}) * 100.0 + 0.5) AS BIGINT)"
 
     def cdmx(e: str) -> str:
         return (f"CAST(({e}) AT TIME ZONE 'UTC' "
@@ -469,12 +464,12 @@ def _oracle_pl02_sql() -> str:
     ), referral AS (
         SELECT date_trunc('month', {cdmx('o_orderdate')}) AS ref_month,
                COUNT(*) AS n_ref,
-               SUM({cts('o_totalprice')}) / 100.0 AS ref_amt
+               SUM({oracle_scaled_long('o_totalprice', 100.0)}) / 100.0 AS ref_amt
         FROM orders WHERE o_orderstatus = 'F' GROUP BY 1
     ), era AS (
         SELECT issue_month AS era_month,
-               CAST(SUM({cts('fee')}) AS DOUBLE)
-                   / CAST(SUM({cts('principal')}) AS DOUBLE) AS era_ratio
+               CAST(SUM({oracle_scaled_long('fee', 100.0)}) AS DOUBLE)
+                   / CAST(SUM({oracle_scaled_long('principal', 100.0)}) AS DOUBLE) AS era_ratio
         FROM detail
         WHERE issue_month >= TIMESTAMP '{_PL02_ERA} 00:00:00'
         GROUP BY 1

@@ -939,15 +939,15 @@ _BLOOM_BENCH_MOD = 17  # x25's pseudo-benchmark: every 17th doc
 
 def _oracle_bloom_decon_sql() -> str:
     from ..operators.dedup import DECON_N
-    from ..operators.sketches import BLOOM_K, oracle_bloom_positions_hashed
+    from ..operators.sketches import BLOOM_K, oracle_bloom_positions
     from ..operators.dedup import oracle_shingle_hashes
     th, sh_expr = oracle_shingle_hashes("text", DECON_N)
     bit_selects = "\n        UNION\n        ".join(
-        f"SELECT {oracle_bloom_positions_hashed('s', k)} AS pos FROM bench"
+        f"SELECT {oracle_bloom_positions('s', k)} AS pos FROM bench"
         for k in range(BLOOM_K))
     probe_selects = "\n        UNION ALL\n        ".join(
         f"SELECT doc_id, n_shingles, s, "
-        f"{oracle_bloom_positions_hashed('s', k)} AS pos FROM corpus"
+        f"{oracle_bloom_positions('s', k)} AS pos FROM corpus"
         for k in range(BLOOM_K))
     return f"""
     WITH pre AS (
@@ -998,9 +998,7 @@ def x53_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     input shrinks to the bloom survivors."""
     from ..operators.caching import tracked_persist
     from ..operators.dedup import DECON_N
-    from ..operators.sketches import (
-        bloom_build, bloom_hits, bloom_positions_hashed,
-    )
+    from ..operators.sketches import bloom_build, bloom_hits
     from ..operators.dedup import with_shingle_hashes
     # not persisted (x25's discipline): the bench slice re-scans 1/17th
     # of the corpus under a pushed row filter, cheaper than caching the
@@ -1019,25 +1017,19 @@ def x53_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull()).distinct(),
         eager=False)
-    # r11 (VERDICT r10 #2): positions use the hashed-long family — the
-    # shingles are already md5-derived, so each probe is one
-    # multiply-add mod p instead of one fresh md5; the md5-per-probe
-    # cost was the dominant per-decade term in BOTH engines at the r10
-    # 1000x row. The probes stay the explode + K broadcast semi-join
-    # composition, NOT the scan-local HOF filter: the fused
-    # bloom_filter_array form was built and measured 2.5x SLOWER at
-    # sf0.1 (interpreted per-element lambda eval vs the codegen'd
-    # explode + map-side join probe; the joins never shuffle, so
-    # "re-touching the exploded stream" is pipelined, not a pass) —
-    # adjudication in SCALING.md r11.
+    # The probes are the explode + K broadcast semi-join composition,
+    # NOT the scan-local HOF filter: the fused bloom_filter_array form
+    # was built and measured 2.5x SLOWER at sf0.1 (interpreted
+    # per-element lambda eval vs the codegen'd explode + map-side join
+    # probe; the joins never shuffle, so "re-touching the exploded
+    # stream" is pipelined, not a pass) — adjudication in SCALING.md r11.
     corpus = (marked.filter(~F.col("_is_bench"))
               .select("doc_id",
                       F.size("sh").cast("long").alias("n_shingles"),
                       F.explode_outer("sh").alias("s"))
               .filter(F.col("s").isNotNull()))
-    bloom = bloom_build(bench, "s", positions=bloom_positions_hashed)
-    survivors = bloom_hits(corpus, "s", bloom,
-                           positions=bloom_positions_hashed)
+    bloom = bloom_build(bench, "s")
+    survivors = bloom_hits(corpus, "s", bloom)
     # ONE broadcast left join marks exact membership on the survivor
     # stream, and ONE aggregate produces both counts — the two-agg +
     # doc_id-join formulation paid a second survivor pass plus a third

@@ -10,7 +10,7 @@ sync (S13, sources/metabase.py).
 
 Scale note: ``saveAsTable`` keeps the data as parquet under the warehouse
 dir — the "load" is a distributed write, not a single-writer file like the
-reference's .duckdb. Partition columns pass straight through.
+reference's .duckdb.
 """
 
 from __future__ import annotations
@@ -19,20 +19,16 @@ from pyspark.sql import SparkSession
 
 
 def build_warehouse(spark: SparkSession, table_map: dict[str, str],
-                    *, database: str = "default",
-                    partition_by: dict[str, list[str]] | None = None) -> list[str]:
+                    *, database: str = "default") -> list[str]:
     """S6 — (re)build managed tables from a parquet-path → table-name map.
 
     Overwrite per table ≙ CREATE OR REPLACE. Returns the loaded names.
     """
     loaded = []
-    partition_by = partition_by or {}
     for path, table in table_map.items():
-        writer = (spark.read.parquet(path)
-                  .write.mode("overwrite").format("parquet"))
-        if table in partition_by:
-            writer = writer.partitionBy(*partition_by[table])
-        writer.saveAsTable(f"{database}.{table}")
+        (spark.read.parquet(path)
+         .write.mode("overwrite").format("parquet")
+         .saveAsTable(f"{database}.{table}"))
         loaded.append(table)
     return loaded
 

@@ -67,16 +67,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def clear_cache(spark: SparkSession) -> None:
-    """Drop the per-session load() memo (r14, ADVICE r13): the memoized
-    DataFrame holds an eagerly-resolved file index, so tooling/tests that
-    replace parquet files under an sf_dir mid-session must call this (or
-    use a fresh session) before re-loading, or later executions read a
-    stale listing / fail on deleted files."""
-    if getattr(spark, "_graft_table_cache", None):
-        spark._graft_table_cache = {}
-
-
 def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition iff the scan is under-parallelized.
 
@@ -92,13 +82,3 @@ def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so SQL-form queries can run via ``spark.sql``.
-
-    Views are lazy — registering all of them costs only parquet footer reads.
-    """
-    for name in names:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -556,29 +556,6 @@ def test_label_centroid_is_floor_integer_mean(spark, sf_dir):
         assert r["cosine"] == expect
 
 
-def test_hard_negatives_vectorized_bit_equal(spark, sf_dir):
-    """r12: the Arrow-batched numpy scorer (one int64 matmul per batch,
-    per-batch top-k pre-trim) returns EXACTLY the registered JVM form's
-    frame — same quantized ints, same IEEE cosine doubles, same ranks.
-    This is the pin behind calling it an in-tree escape rather than an
-    approximation."""
-    from data_pipeline_foundations_spark.operators.similarity import (
-        hard_negatives, hard_negatives_vectorized,
-    )
-    from data_pipeline_foundations_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    key = ["query_id", "rank"]
-    a = (hard_negatives(emb).toPandas()
-         .sort_values(key).reset_index(drop=True))
-    b = (hard_negatives_vectorized(emb).toPandas()
-         .sort_values(key).reset_index(drop=True))
-    assert len(a) > 0
-    assert a.astype({"query_label": "int64",
-                     "negative_label": "int64"}).equals(
-        b.astype({"query_label": "int64", "negative_label": "int64"}))
-
-
 def test_hard_negatives_ann_full_probe_equals_brute(spark, sf_dir):
     """x93's exactness pin: with nprobe = k_clusters every inverted
     list is probed, so the ANN tier's candidate pool is the whole
@@ -587,7 +564,7 @@ def test_hard_negatives_ann_full_probe_equals_brute(spark, sf_dir):
     would mean the routing changes scores (it may only ever drop
     candidates)."""
     from data_pipeline_foundations_spark.operators.similarity import (
-        hard_negatives_ann, hard_negatives_vectorized,
+        hard_negatives, hard_negatives_ann,
     )
     from data_pipeline_foundations_spark.tables import load
 
@@ -595,7 +572,7 @@ def test_hard_negatives_ann_full_probe_equals_brute(spark, sf_dir):
     key = ["query_id", "rank"]
     full = (hard_negatives_ann(emb, k_clusters=16, nprobe=16).toPandas()
             .sort_values(key).reset_index(drop=True))
-    brute = (hard_negatives_vectorized(emb).toPandas()
+    brute = (hard_negatives(emb).toPandas()
              .sort_values(key).reset_index(drop=True))
     assert len(full) > 0
     assert full.astype({"query_label": "int64",
@@ -626,14 +603,16 @@ def test_hard_negative_ann_recall_shape_and_subset(spark, sf_dir):
     assert (full["recall"] == 1.0).all()
 
 
-def test_hard_negatives_zero_norm_dropped_both_forms(spark):
-    """r13 (ADVICE): zero-norm vectors make cosine NaN, and the two
-    engines' NaN orders disagree (numpy lexsort ranks NaN last, the JVM
-    Window's DESC ranks it first) — so BOTH forms drop zero-norm rows,
-    query- and corpus-side, and the equality pin holds on data that
-    contains them."""
+def test_hard_negatives_zero_norm_dropped_both_forms(spark, tmp_path):
+    """r13 (ADVICE): zero-norm vectors make cosine NaN, and NaN ranks
+    differently across engines (numpy lexsort puts it last) — so
+    hard_negatives and its oracle both drop zero-norm rows, query- and
+    corpus-side, and agree exactly on data that contains them."""
+    import duckdb
+    import pandas as pd
+
     from data_pipeline_foundations_spark.operators.similarity import (
-        hard_negatives, hard_negatives_vectorized,
+        hard_negatives, oracle_hard_negatives_sql,
     )
 
     rows = []
@@ -643,17 +622,40 @@ def test_hard_negatives_zero_norm_dropped_both_forms(spark):
         else:
             vec = [((i * 7 + j * 13) % 11 - 5) / 10.0 for j in range(8)]
         rows.append((i, i % 3, vec))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<double>")
+    path = str(tmp_path / "embeddings.parquet")
+    (pd.DataFrame(rows, columns=["vec_id", "label", "embedding"])
+     .astype({"label": "int32"}).to_parquet(path, index=False))
     key = ["query_id", "rank"]
-    a = (hard_negatives(emb, k=4).toPandas()
-         .sort_values(key).reset_index(drop=True))
-    b = (hard_negatives_vectorized(emb, k=4).toPandas()
-         .sort_values(key).reset_index(drop=True))
+    types = {"query_label": "int64", "negative_label": "int64",
+             "rank": "int64"}
+    a = (hard_negatives(spark.read.parquet(path), k=4).toPandas()
+         .sort_values(key).reset_index(drop=True).astype(types))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    o = (con.execute(oracle_hard_negatives_sql(k=4)).fetchdf()
+         .sort_values(key).reset_index(drop=True).astype(types))
+    con.close()
     assert len(a) > 0
     assert 3 not in set(a["query_id"])          # zero-norm query dropped
     assert 15 not in set(a["negative_id"])      # zero-norm corpus dropped
     assert a["cosine"].notna().all()
-    assert a.astype({"query_label": "int64",
-                     "negative_label": "int64"}).equals(
-        b.astype({"query_label": "int64", "negative_label": "int64"}))
+    assert a.equals(o[a.columns])
+
+
+def test_ivf_builders_accept_any_vector_column_name(spark, sf_dir):
+    """The IVF and IVF-PQ model builders quote the caller's vector column
+    in their one-parse sums expression: a name with a space or a dot
+    gives the same rows and the same model as the default name."""
+    from data_pipeline_foundations_spark.operators.similarity import (
+        build_ivfpq_model,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    want_rows = sorted(map(tuple, ivf_topk(emb).collect()))
+    want_model = build_ivfpq_model(emb)
+    for name in ("emb v", "emb.v"):
+        renamed = emb.withColumnRenamed("embedding", name)
+        got = sorted(map(tuple, ivf_topk(renamed, vec_col=name).collect()))
+        assert got == want_rows, name
+        assert build_ivfpq_model(renamed, vec_col=name) == want_model, name
+    release_cached_intermediates()

@@ -261,8 +261,8 @@ def test_q21_bucketed_twin_fact_side_exchange_free(spark):
 
 def test_partitioned_layout_gets_dynamic_partition_pruning(spark):
     """The third 100 TB layout lever next to bucketing and compaction:
-    a fact written with partitionBy(month) (build_warehouse's
-    partition_by option) must let Catalyst prune partitions at RUNTIME
+    a fact written with partitionBy(month) must let Catalyst prune
+    partitions at RUNTIME
     from a selective dim filter — the dim's surviving join keys become
     a dynamicpruningexpression partition filter on the fact scan, so a
     two-month query reads two directories of a 100 TB table instead of

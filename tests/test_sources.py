@@ -944,3 +944,19 @@ def test_replicate_and_squash_across_schema_boundary(spark, tmp_path):
     rows = {(r.id, r.val, r.score) for r in
             read_versioned(spark, store).collect()}
     assert rows == {(1, "a", None), (2, "b", 7)}
+
+
+def test_load_memoizes_plan_not_results(spark, sf_dir):
+    """Same DataFrame object per (session, sf_dir, table); rows equal a
+    fresh un-memoized read; the events ns→us conversion survives."""
+    from data_pipeline_foundations_spark.tables import load, table_path
+
+    a = load(spark, sf_dir, "nation")
+    b = load(spark, sf_dir, "nation")
+    assert a is b
+    fresh = spark.read.parquet(table_path(sf_dir, "nation"))
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple,
+                                                         fresh.collect()))
+    ev = load(spark, sf_dir, "events")
+    assert dict(ev.dtypes)["ts"].startswith("timestamp")  # ns→us applied
+    assert load(spark, sf_dir, "events") is ev

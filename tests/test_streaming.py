@@ -251,7 +251,7 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, tmp_path):
         DECON_N, with_shingle_hashes,
     )
     from data_pipeline_foundations_spark.operators.sketches import (
-        bloom_bitset_words, bloom_build, bloom_positions_hashed,
+        bloom_bitset_words, bloom_build,
     )
     from data_pipeline_foundations_spark.plans.quality import (
         _BLOOM_BENCH_MOD,
@@ -268,8 +268,7 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, tmp_path):
                  "text", DECON_N, out="_sh")
              .select(F.explode_outer(F.array_distinct("_sh")).alias("s"))
              .filter(F.col("s").isNotNull()).distinct())
-    bits = bloom_bitset_words(
-        bloom_build(bench, "s", positions=bloom_positions_hashed))
+    bits = bloom_bitset_words(bloom_build(bench, "s"))
     corpus = docs.filter(F.col("doc_id") % _BLOOM_BENCH_MOD != 0)
 
     want = {r.doc_id: (r.n_shingles, r.n_bloom_hits, r.flagged)

@@ -351,7 +351,8 @@ def test_two_tier_bitset_autosize_and_any_size_identity(spark, sf_dir):
     to [2^14, 2^24] — and the composition's output is IDENTICAL at any
     bitset size (the no-false-negatives + exact-verify identity), so a
     deliberately saturated 2^14 filter and a roomy 2^20 one must both
-    reproduce the auto-sized result row-for-row."""
+    reproduce the auto-sized result row-for-row. A size the packed words
+    cannot hold exactly (not a positive multiple of 64) is refused."""
     from data_pipeline_foundations_spark.operators.dedup import (
         decontaminate_two_tier,
     )
@@ -377,61 +378,89 @@ def test_two_tier_bitset_autosize_and_any_size_identity(spark, sf_dir):
              .toPandas().sort_values(key).reset_index(drop=True))
     assert len(auto) > 0
     assert auto.equals(small) and auto.equals(roomy)
+    for bad in (100, 0):
+        with pytest.raises(ValueError, match="multiple of 64"):
+            decontaminate_two_tier(docs, pred, bloom_bits=bad)
 
 
 def test_bloom_families_and_fused_probe_agree(spark):
-    """The two Bloom probe shapes decide IDENTICALLY per key within one
-    hash family: bloom_hits (explode + K broadcast semi-joins — the
-    registered x53 shape) == bloom_filter_array (scan-local HOF over the
-    packed bitset words — the array-shaped primitive), on both the
-    hashed-long family and the md5 family. Also pins one-sidedness for
-    the hashed family: every true member survives (no false
-    negatives)."""
+    """The two Bloom probe shapes decide IDENTICALLY per key:
+    bloom_hits (explode + K broadcast semi-joins — the registered x53
+    shape) == bloom_filter_array (scan-local HOF over the packed bitset
+    words — the array-shaped primitive). Also pins one-sidedness: every
+    true member survives (no false negatives)."""
     from pyspark.sql import functions as F
 
     from data_pipeline_foundations_spark.operators.sketches import (
         bloom_bitset_words, bloom_build, bloom_filter_array, bloom_hits,
-        bloom_positions, bloom_positions_hashed,
     )
 
     keys = spark.range(0, 400).select((F.col("id") * 7919 % 104729)
                                       .alias("s"))
     members = keys.filter("s % 3 = 0")
-    for fam in (bloom_positions_hashed, bloom_positions):
-        bloom = bloom_build(members, "s", positions=fam)
-        via_joins = sorted(r.s for r in
-                           bloom_hits(keys, "s", bloom, positions=fam)
-                           .collect())
-        words = bloom_bitset_words(bloom)
-        via_hof = sorted(
-            r.s for r in keys.select(
-                F.explode(bloom_filter_array(F.array("s"), words,
-                                             positions=fam)).alias("s"))
-            .collect())
-        assert via_joins == via_hof
-        assert set(r.s for r in members.collect()) <= set(via_joins)
+    bloom = bloom_build(members, "s")
+    via_joins = sorted(r.s for r in bloom_hits(keys, "s", bloom).collect())
+    words = bloom_bitset_words(bloom)
+    via_hof = sorted(
+        r.s for r in keys.select(
+            F.explode(bloom_filter_array(F.array("s"), words)).alias("s"))
+        .collect())
+    assert via_joins == via_hof
+    assert set(r.s for r in members.collect()) <= set(via_joins)
 
 
 def test_bloom_pack_keys_bit_identical_to_spark_build(spark):
     """r13: the driver-side numpy packer (one collect, no distinct-
-    positions job) produces the EXACT words the Spark
-    bloom_build→bloom_bitset_words path does, for default and sized
-    bitsets — the pin behind decontaminate_two_tier's one-job model
-    collect."""
+    positions job) produces the EXACT words the Spark position table
+    packs to, for default and sized bitsets — the pin behind
+    decontaminate_two_tier's one-job model collect."""
     from pyspark.sql import functions as F
 
     from data_pipeline_foundations_spark.operators.sketches import (
-        BLOOM_B, bloom_bitset_words, bloom_build, bloom_pack_keys,
-        bloom_positions_hashed_for,
+        BLOOM_B, BLOOM_K, bloom_bitset_words, bloom_build, bloom_pack_keys,
+        bloom_positions,
     )
 
     keys = [(i * 7919 % 104729) for i in range(500)] + [0, 1, (1 << 60) - 1]
     kdf = spark.createDataFrame([(k,) for k in keys], "s long")
-    for bits in (BLOOM_B, 1 << 17):
-        fam = bloom_positions_hashed_for(bits)
-        spark_words = bloom_bitset_words(
-            bloom_build(kdf, "s", positions=fam), bits=bits)
-        assert bloom_pack_keys(keys, bits) == spark_words
+    assert (bloom_pack_keys(keys, BLOOM_B)
+            == bloom_bitset_words(bloom_build(kdf, "s")))
+    bits = 1 << 17
+    table = kdf.select(F.explode(F.array(*[
+        bloom_positions(F.col("s"), k, bits) for k in range(BLOOM_K)]))
+        .alias("pos")).distinct()
+    assert bloom_pack_keys(keys, bits) == bloom_bitset_words(table,
+                                                             bits=bits)
+
+
+def test_words_literal_equals_lit_list(spark):
+    """The one-parse array literal carries the packed words exactly,
+    including negative (two's-complement packed) words."""
+    from data_pipeline_foundations_spark.operators.sketches import (
+        _words_literal,
+    )
+
+    words = [0, 1, -1, 2**62, -(2**62), 123456789123456789]
+    got = (spark.range(1).select(_words_literal(words).alias("w"))
+           .collect()[0]["w"])
+    assert got == words
+
+
+def test_bloom_probe_matches_after_literal_change(spark):
+    """bloom_filter_col over bloom_pack_keys' words flags every packed
+    key (no false negatives by construction)."""
+    from data_pipeline_foundations_spark.operators.sketches import (
+        bloom_filter_col, bloom_pack_keys,
+    )
+
+    keys = [7, 99, 12345, 2**59 + 11]
+    words = bloom_pack_keys(keys, 1 << 14)
+    probe = (spark.createDataFrame([(k,) for k in keys + [5, 6, 8888]],
+                                   "s long")
+             .select("s", bloom_filter_col(F.col("s"), words).alias("hit")))
+    got = {r["s"]: bool(r["hit"]) for r in probe.collect()}
+    for k in keys:
+        assert got[k], f"packed key {k} must probe true (no false negatives)"
 
 
 def test_repeated_window_dedup_differential(spark):
@@ -635,62 +664,23 @@ def test_qsketch_quantile_error_bound(spark):
             assert lo <= exact <= lo + width, (s, name, lo, exact)
 
 
-def test_simhash_band_combo_output_identical(spark, sf_dir):
-    """The r10 banding upgrade is OUTPUT-identical, not approximate:
-    with nbands >= max_hamming + 2, pigeonhole guarantees every
-    hamming <= max_hamming pair a clean band PAIR, so the 2-combo
-    index (16-bit keys, 28 tables) returns exactly the single-band
-    index's pairs — the 75x candidate cut is free. Also pins the
-    guarantee guard: a combo that breaks the recall bound raises."""
-    import pytest as _pytest
-
+def test_simhash_band_combo_output_identical(spark, sf_dir, duck):
+    """The single-band side of simhash_pairs' automatic index choice:
+    a 32-bit signature has 4 bands, fewer than max_hamming + 2, so no
+    clean band PAIR is guaranteed and the operator takes single bands —
+    its pairs must equal the oracle's exactly. x05's oracle parity
+    covers the 64-bit 2-combo side."""
     from data_pipeline_foundations_spark.operators.dedup import (
-        simhash_pairs,
+        oracle_simhash_pairs_sql, simhash_pairs,
     )
     from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # the 64-bit signature is the REGISTERED configuration (r11): 8
-    # bands, so the hamming<=6 pigeonhole leaves >=2 clean bands and
-    # combo-2 holds — auto (the x05 default) must equal both explicit
-    # forms
-    single = sorted(tuple(r) for r in
-                    simhash_pairs(docs, band_combo=1).collect())
-    combo = sorted(tuple(r) for r in
-                   simhash_pairs(docs, band_combo=2).collect())
-    auto = sorted(tuple(r) for r in simhash_pairs(docs).collect())
-    assert single == combo == auto
-    # the legacy 32-bit form has only 4 bands: no clean-pair guarantee
-    # exists, so auto must STAY single-band there and an explicit
-    # combo-2 request raises
-    with _pytest.raises(ValueError, match="recall guarantee"):
-        simhash_pairs(docs, bits=32, band_combo=2)
-    with _pytest.raises(ValueError, match="recall guarantee"):
-        simhash_pairs(docs, band_combo=3)
-
-
-def test_simhash_sorted_table_form_output_identical(spark, sf_dir):
-    """The Manku sorted-permuted-table form (VERDICT r10 #7) returns
-    exactly the bucket-join operator's pairs — in the registered
-    configuration AND in the deeper combo-3 / 7-bit-band configuration
-    (9 bands >= max_hamming + 3, the >50M-doc keyspace tier) — and its
-    guard enforces the same pigeonhole bound."""
-    import pytest as _pytest
-
-    from data_pipeline_foundations_spark.operators.dedup import (
-        simhash_pairs, simhash_pairs_sorted,
-    )
-    from data_pipeline_foundations_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bucket = sorted(tuple(r) for r in simhash_pairs(docs).collect())
-    srt = sorted(tuple(r) for r in simhash_pairs_sorted(docs).collect())
-    deep = sorted(tuple(r) for r in
-                  simhash_pairs_sorted(docs, band_bits=7, band_combo=3)
-                  .collect())
-    assert bucket == srt == deep
-    with _pytest.raises(ValueError, match="recall guarantee"):
-        simhash_pairs_sorted(docs, band_combo=4)
+    got = sorted(tuple(r) for r in simhash_pairs(docs, bits=32).collect())
+    want = sorted(tuple(r) for r in duck.execute(
+        oracle_simhash_pairs_sql(bits=32)).fetchall())
+    assert len(got) > 0
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
