@@ -17,6 +17,23 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: half
+    the host's ``MemTotal``, at most 24g. In local mode the driver JVM is
+    the whole cluster; a heap larger than the host ends in the kernel's
+    OOM killer, not in a Spark error. 24g where ``meminfo`` cannot be
+    read (a host without /proc)."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mib = int(line.split()[1]) // 1024
+                    return f"{min(24 << 10, mib // 2)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "24g"
+
+
 def get_spark(app_name: str = "data_pipeline_foundations_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -47,7 +64,8 @@ def get_spark(app_name: str = "data_pipeline_foundations_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")

@@ -2,7 +2,9 @@
 
 readers    — schema-explicit parquet/CSV/JSON/JDBC readers (S1/S2/S4) and
              the Excel bridge (S10-adjacent, import-gated).
-warehouse  — managed-table warehouse build + catalog reconciliation (S6/S7).
+warehouse  — warehouse build as catalog tables over byte-copied snapshot
+             versions (no Spark job over the rows) + catalog
+             reconciliation (S6/S7).
 connector  — folder-feed connector: the Google Drive surface (S3/S4/S10/S11)
              re-expressed over an injectable filesystem backend; the REST
              backend is a stub by design (no Google libs in scope).

@@ -8,27 +8,105 @@ too: pre-rebuild backup + retention (S8, :func:`backup_before_rebuild`),
 lock-retry connects (S9, sources/resilience.py), and the Metabase schema
 sync (S13, sources/metabase.py).
 
-Scale note: ``saveAsTable`` keeps the data as parquet under the warehouse
-dir — the "load" is a distributed write, not a single-writer file like the
-reference's .duckdb.
+The reference copies every table because a ``.duckdb`` file is a single
+store. Spark's catalog can point a table at parquet where it lies, so the
+build runs no Spark job over the rows: each rebuild copies the source's
+files byte for byte through the Hadoop FS into the table's next snapshot
+version under ``<spark.sql.warehouse.dir>/_snapshots/<db>/<table>/
+v_NNNNNNNN`` and re-points the catalog table at it. The only Spark work
+left is the parquet schema read of the table creation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..functions.sql import sql_ident
+
+
+def _catalog_name(spark: SparkSession, name: str) -> str:
+    """``name`` as the session catalog stores it: lowercased unless
+    ``spark.sql.caseSensitive`` is on. Snapshot roots and the reconcile's
+    ``keep`` use this form, so ``Fact_Loan`` and ``fact_loan`` are one
+    table everywhere."""
+    if spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true":
+        return name
+    return name.lower()
+
+
+def _table_name(database: str, table: str) -> str:
+    return f"{sql_ident(database)}.{sql_ident(table)}"
+
+
+def _snapshots_base(spark: SparkSession) -> str:
+    """``<spark.sql.warehouse.dir>/_snapshots``, FS-qualified. A sibling of
+    the managed-table directories, so dropping a managed table of the same
+    name never touches a snapshot."""
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    fs, p, _ = _fs(spark, wh.rstrip("/") + "/_snapshots")
+    return fs.makeQualified(p).toString()
+
+
+def _fill_snapshot(spark: SparkSession, src: str, dst: str) -> None:
+    """Copy the files of ``src`` (a directory or a single file) byte for
+    byte into the version directory ``dst`` through the Hadoop FS, then
+    commit it by writing its _SUCCESS marker last. No Spark job; the copy
+    shares nothing with the source, so neither an overwrite of a Spark
+    output directory nor an in-place rewrite of a single file (pandas
+    truncates the reference's ``data/*.parquet``) reaches the table."""
+    fs, s, jvm = _fs(spark, src)
+    dfs, d, _ = _fs(spark, dst)
+    Path = jvm.org.apache.hadoop.fs.Path
+    if dfs.exists(d):           # uncommitted leftover of a crashed build
+        dfs.delete(d, True)
+    dfs.mkdirs(d)
+    st = fs.getFileStatus(s)
+    for child in (fs.listStatus(s) if st.isDirectory() else [st]):
+        name = child.getPath().getName()
+        if name != "_SUCCESS":
+            jvm.org.apache.hadoop.fs.FileUtil.copy(
+                fs, child.getPath(), dfs, Path(d, name), False,
+                spark._jsc.hadoopConfiguration())
+    dfs.create(Path(d, "_SUCCESS"), False).close()
+
 
 def build_warehouse(spark: SparkSession, table_map: dict[str, str],
                     *, database: str = "default") -> list[str]:
-    """S6 — (re)build managed tables from a parquet-path → table-name map.
+    """S6 — (re)build catalog tables from a parquet-path → table-name map.
 
-    Overwrite per table ≙ CREATE OR REPLACE. Returns the loaded names.
+    Per table ≙ CREATE OR REPLACE, without a Spark job over the rows:
+    snapshot the source as the table's next version
+    (:func:`_fill_snapshot`), drop the old table and create the new one
+    over that version (metadata only; the same drop-then-create window
+    ``saveAsTable(mode="overwrite")`` has; a Hive-partitioned source has
+    its ``key=value`` partitions registered), then prune all but the new
+    and the previous version, so a reader that resolved the table before
+    the flip keeps reading. Returns the loaded names.
     """
+    base = _snapshots_base(spark)
+    db = _catalog_name(spark, database)
     loaded = []
     for path, table in table_map.items():
-        (spark.read.parquet(path)
-         .write.mode("overwrite").format("parquet")
-         .saveAsTable(f"{database}.{table}"))
+        root = f"{base}/{db}/{_catalog_name(spark, table)}"
+        before = list_versions(spark, root)
+        _, target = _next_version(root, before)
+        _fill_snapshot(spark, path, target)
+        name = _table_name(database, table)
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            spark.catalog.createTable(name, path=target, source="parquet")
+            # the catalog tracks a partitioned table's partitions and
+            # starts with none: without this it reads 0 rows. A listing,
+            # not catalog.listColumns, whose iterator runs Spark jobs
+            if _hive_partition_subdirs(spark, target):
+                spark.catalog.recoverPartitions(name)
+        except Exception:
+            # e.g. a name the catalog rejects: leave no orphan snapshot
+            fs, _, jvm = _fs(spark, root)
+            fs.delete(jvm.org.apache.hadoop.fs.Path(
+                target if before else root), True)
+            raise
+        _prune_versions(spark, before, keep_versions=2)
         loaded.append(table)
     return loaded
 
@@ -47,18 +125,34 @@ def build_bucketed(spark: SparkSession, parquet_path: str, table: str, *,
     (spark.read.parquet(parquet_path)
      .write.mode("overwrite").format("parquet")
      .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-     .saveAsTable(f"{database}.{table}"))
+     .saveAsTable(_table_name(database, table)))
 
 
 def reconcile_catalog(spark: SparkSession, keep: set[str],
                       *, database: str = "default") -> list[str]:
     """S7 — drop tables in ``database`` that are not in ``keep``
-    (create_duckdb.py:82-88: SHOW TABLES minus the desired map)."""
+    (create_duckdb.py:82-88: SHOW TABLES minus the desired map). ``keep``
+    is matched the way the catalog normalises names (case-insensitively
+    by default). Views and temporary views are left alone. A dropped
+    table that :func:`build_warehouse` built also loses its snapshot
+    root, so the DROP frees its files as it does in the reference."""
+    base = _snapshots_base(spark) + "/"
+    keep = {_catalog_name(spark, k) for k in keep}
     dropped = []
     for t in spark.catalog.listTables(database):
-        if t.tableType != "VIEW" and t.name not in keep:
-            spark.sql(f"DROP TABLE IF EXISTS {database}.`{t.name}`")
-            dropped.append(t.name)
+        if t.isTemporary or t.tableType == "VIEW" or t.name in keep:
+            continue
+        name = _table_name(database, t.name)
+        loc = next((r.data_type for r in spark.sql(
+            f"DESCRIBE TABLE EXTENDED {name}").collect()
+            if r.col_name == "Location"), "")
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        # <base>/<db>/<table>/v_NNNNNNNN → delete <base>/<db>/<table>
+        root = loc.rsplit("/", 1)[0]
+        if root.startswith(base) and root[len(base):].count("/") == 1:
+            fs, p, _ = _fs(spark, root)
+            fs.delete(p, True)
+        dropped.append(t.name)
     return dropped
 
 
@@ -207,6 +301,25 @@ def list_versions(spark: SparkSession, root: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
+def _next_version(root: str, vs: list[tuple[int, str]]) -> tuple[int, str]:
+    """(number, directory) of the version after the committed ``vs`` of
+    ``root``."""
+    n = vs[-1][0] + 1 if vs else 1
+    return n, root.rstrip("/") + "/" + _VERSION_FMT.format(n)
+
+
+def _prune_versions(spark: SparkSession, vs: list[tuple[int, str]], *,
+                    keep_versions: int) -> None:
+    """After a commit, delete the versions of the PRE-commit list ``vs``
+    but its newest ``keep_versions - 1``: with the new version,
+    ``keep_versions`` stay. Pruning from the pre-commit list, not a fresh
+    listing, means a writer committing in between can never shift the
+    kept tail onto (and delete) the version in-flight readers resolve."""
+    for _, d in vs[:max(0, len(vs) - keep_versions + 1)]:
+        fs, p, _ = _fs(spark, d)
+        fs.delete(p, True)
+
+
 def current_version_dir(spark: SparkSession, root: str) -> str | None:
     vs = list_versions(spark, root)
     return vs[-1][1] if vs else None
@@ -245,8 +358,7 @@ def write_versioned(spark: SparkSession, root: str, df,
                 f"add-only evolution commits freely — pass "
                 f"allow_incompatible=True to break the contract "
                 f"explicitly")
-    nxt = (vs[-1][0] + 1) if vs else 1
-    target = root.rstrip("/") + "/" + _VERSION_FMT.format(nxt)
+    nxt, target = _next_version(root, vs)
     w = df.write.mode("errorifexists").format("parquet")
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -496,14 +608,7 @@ def compact_versioned(spark: SparkSession, root: str, *,
         return None
     new_dir = write_versioned(
         spark, root, spark.read.parquet(cur).repartition(n_out))
-    # Prune from the PRE-commit snapshot of the version list: a writer
-    # committing between our write and the prune must never shift the
-    # kept tail onto (and delete) the pre-compaction current version
-    # that in-flight readers still resolve. vs[-(keep_versions-1):]
-    # plus the new version = keep_versions retained.
-    fs, _, jvm = _fs(spark, root)
-    for v, d in vs[:-(keep_versions - 1)]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
+    _prune_versions(spark, vs, keep_versions=keep_versions)
     return new_dir
 
 
@@ -539,15 +644,11 @@ def squash_versioned(spark: SparkSession, root: str, *,
     if distinct:
         df = df.distinct()
     new_dir = write_versioned(spark, root, df)
-    # Prune from the PRE-squash snapshot (see compact_versioned): a
-    # concurrent commit between write_versioned and the prune must not
-    # shift the kept tail onto the pre-squash current version. Note a
-    # concurrent commit also means the squash is no longer the full
-    # union — callers coordinating writers get exact state; lone-writer
-    # stores (the dedup fingerprint ledger) are always exact.
-    fs, _, jvm = _fs(spark, root)
-    for v, d in vs[:-(keep_versions - 1)]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
+    # A concurrent commit between write_versioned and the prune means the
+    # squash is no longer the full union — callers coordinating writers
+    # get exact state; lone-writer stores (the dedup fingerprint ledger)
+    # are always exact.
+    _prune_versions(spark, vs, keep_versions=keep_versions)
     return new_dir
 
 

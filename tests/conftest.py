@@ -15,8 +15,16 @@ SMOKE_SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("tests", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # Managed tables and warehouse snapshots go to a per-session temp dir,
+    # never to ./spark-warehouse: the suite runs from any cwd and leaves
+    # nothing in the checkout. Appended, so it wins over a caller's value.
+    wh = tmp_path_factory.mktemp("warehouse")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_EXTRA_CONF", ";".join(filter(None, [
+            os.environ.get("SPARK_GRAFT_EXTRA_CONF"),
+            f"spark.sql.warehouse.dir={wh}"])))
+        s = get_spark("tests", shuffle_partitions=8)
     yield s
 
 

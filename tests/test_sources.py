@@ -42,6 +42,175 @@ def test_warehouse_build_and_reconcile(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+
+# ---------------------------------------------------------------------------
+# build_warehouse snapshots: catalog tables over copied versions
+# ---------------------------------------------------------------------------
+
+
+def _table_dir(spark, name: str) -> str:
+    """Local path of the directory the catalog table ``name`` reads."""
+    loc = next(r.data_type for r in spark.sql(
+        f"DESCRIBE TABLE EXTENDED {name}").collect()
+        if r.col_name == "Location")
+    return loc.removeprefix("file:")
+
+
+def _ids(df) -> list[int]:
+    return sorted(r.id for r in df.collect())
+
+
+@pytest.fixture
+def wh_table(spark):
+    """A table name whose catalog entry and snapshots go at teardown."""
+    name = "snap_t"
+    yield name
+    reconcile_catalog(spark, keep={t.name for t in spark.catalog.listTables()
+                                   if t.name != name})
+
+
+def test_warehouse_snapshot_survives_source_overwrite(spark, tmp_path,
+                                                      wh_table):
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    build_warehouse(spark, {src: wh_table})
+    spark.range(100, 107).write.mode("overwrite").parquet(src)
+    assert _ids(spark.table(wh_table)) == list(range(5))
+
+
+def test_warehouse_reader_survives_rebuild_and_retention(spark, tmp_path,
+                                                         wh_table):
+    """A DataFrame resolved before a rebuild keeps reading its version;
+    the build keeps the current and the previous version only."""
+    from data_pipeline_foundations_spark.sources.warehouse import (
+        list_versions,
+    )
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    build_warehouse(spark, {src: wh_table})
+    held = spark.table(wh_table)
+    root = os.path.dirname(_table_dir(spark, wh_table))
+    spark.range(10, 17).write.mode("overwrite").parquet(src)
+    build_warehouse(spark, {src: wh_table})
+    assert _ids(held) == list(range(5))
+    assert _ids(spark.table(wh_table)) == list(range(10, 17))
+    build_warehouse(spark, {src: wh_table})
+    assert [v for v, _ in list_versions(spark, root)] == [2, 3]
+    assert not os.path.exists(os.path.join(root, "v_00000001"))
+    assert _ids(spark.table(wh_table)) == list(range(10, 17))
+
+
+def test_warehouse_copies_single_file_source(spark, tmp_path, wh_table):
+    """pandas rewrites a single parquet file in place (same inode); a
+    link would change under the table, so single files are copied."""
+    import pandas as pd
+
+    src = str(tmp_path / "loan.parquet")
+    pd.DataFrame({"id": [1, 2, 3]}).to_parquet(src)
+    build_warehouse(spark, {src: wh_table})
+    inode = os.stat(src).st_ino
+    pd.DataFrame({"id": [7, 8, 9, 10]}).to_parquet(src)
+    assert os.stat(src).st_ino == inode
+    assert _ids(spark.table(wh_table)) == [1, 2, 3]
+
+
+def test_warehouse_partitioned_source(spark, tmp_path, wh_table):
+    """A Hive-partitioned source (``k=…`` subdirectories) reads back in
+    full: the catalog starts a partitioned table with no partitions
+    registered, so the build must recover them, on every rebuild."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "src")
+    spark.range(6).withColumn("k", F.col("id") % 3) \
+        .write.partitionBy("k").parquet(src)
+    for _ in range(2):
+        build_warehouse(spark, {src: wh_table})
+        rows = spark.table(wh_table).collect()
+        assert sorted((r.id, r.k) for r in rows) == [
+            (i, i % 3) for i in range(6)]
+    assert spark.table(wh_table).filter("k = 1").count() == 2
+
+
+def test_warehouse_mixed_case_names(spark, tmp_path):
+    """The catalog lowercases names; the snapshot root and the rebuild's
+    own reconcile follow it, so ``Case_T`` and ``case_t`` are one table
+    with one version history, and a rebuild keeps what it just built."""
+    from data_pipeline_foundations_spark.sources.warehouse import (
+        list_versions, rebuild_warehouse,
+    )
+    src = str(tmp_path / "src")
+    spark.range(4).write.parquet(src)
+    spark.sql("CREATE DATABASE IF NOT EXISTS Case_DB")
+    try:
+        out = rebuild_warehouse(spark, {src: "Case_T"}, database="Case_DB")
+        assert out["loaded"] == ["Case_T"] and out["dropped"] == []
+        assert _ids(spark.table("case_db.case_t")) == list(range(4))
+        root = os.path.dirname(_table_dir(spark, "case_db.case_t"))
+        assert root.endswith("/_snapshots/case_db/case_t")
+        build_warehouse(spark, {src: "case_t"}, database="case_db")
+        assert [v for v, _ in list_versions(spark, root)] == [1, 2]
+        assert reconcile_catalog(spark, keep={"CASE_T"},
+                                 database="case_db") == []
+        assert reconcile_catalog(spark, keep=set(),
+                                 database="Case_DB") == ["case_t"]
+        assert not os.path.exists(root)
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS case_db CASCADE")
+
+
+def test_reconcile_removes_snapshot_root(spark, tmp_path, wh_table):
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    build_warehouse(spark, {src: wh_table})
+    root = os.path.dirname(_table_dir(spark, wh_table))
+    keep = {t.name for t in spark.catalog.listTables()} - {wh_table}
+    assert reconcile_catalog(spark, keep=keep) == [wh_table]
+    assert not os.path.exists(root)
+
+
+def test_warehouse_quotes_identifiers(spark, tmp_path):
+    """``123.1e3`` lexes as numbers unless quoted; the catalog accepts
+    both names. A name the catalog rejects fails loudly and leaves no
+    snapshot behind."""
+    from pyspark.errors import AnalysisException
+
+    from data_pipeline_foundations_spark.sources.warehouse import (
+        build_bucketed,
+    )
+    src = str(tmp_path / "src")
+    spark.range(4).write.parquet(src)
+    spark.sql("CREATE DATABASE IF NOT EXISTS `123`")
+    try:
+        assert build_warehouse(spark, {src: "1e3"}, database="123") == ["1e3"]
+        assert _ids(spark.table("`123`.`1e3`")) == list(range(4))
+        root = os.path.dirname(_table_dir(spark, "`123`.`1e3`"))
+        build_bucketed(spark, src, "2e3", bucket_col="id", n_buckets=2,
+                       database="123")
+        assert _ids(spark.table("`123`.`2e3`")) == list(range(4))
+        assert sorted(reconcile_catalog(spark, keep=set(), database="123")) \
+            == ["1e3", "2e3"]
+        assert not [t for t in spark.catalog.listTables("123")
+                    if not t.isTemporary]
+        assert not os.path.exists(root)
+        with pytest.raises(AnalysisException,
+                           match="INVALID_SCHEMA_OR_RELATION_NAME"):
+            build_warehouse(spark, {src: "fact-loan"}, database="123")
+        assert not os.path.exists(os.path.join(os.path.dirname(root),
+                                               "fact-loan"))
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS `123` CASCADE")
+
+
+def test_reconcile_keeps_temporary_views(spark):
+    spark.range(3).createOrReplaceTempView("tmp_v")
+    try:
+        keep = {t.name for t in spark.catalog.listTables()
+                if not t.isTemporary}
+        assert "tmp_v" not in reconcile_catalog(spark, keep=keep)
+        assert spark.table("tmp_v").count() == 3
+    finally:
+        spark.catalog.dropTempView("tmp_v")
+
 def test_csv_reader_explicit_schema(spark, tmp_path):
     p = tmp_path / "t.csv"
     p.write_text("id,amount,label\n1,150,a\n2,,b\n")
