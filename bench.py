@@ -28,9 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.registry import all_queries
 from data_pipeline_foundations_spark.session import get_spark
 from data_pipeline_foundations_spark.tables import TABLES, load
@@ -72,22 +70,17 @@ def main() -> None:
     # md5/regexp-heavy plan shape); run 2 is steady-state. Taking the min
     # also shields the recorded numbers from transient host noise (this
     # harness shares a VM — multi-second stalls on trivial scans were
-    # observed under load). clearCache between runs drops per-query
-    # persists, so every timed execution is a full computation with no
-    # cross-run cached-intermediate reuse and no memory accumulation
-    # across the 52-query sweep.
+    # observed under load). Each run has its own cache scope, released
+    # after the clock stops, so every timed execution is a full
+    # computation with no cross-run cached-intermediate reuse and no
+    # memory accumulation across the sweep.
     queries = all_queries()
 
     def timed_run(spec) -> float:
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - t0
-        # clearCache drops per-query persists; the release call also
-        # drains localCheckpoint RDDs (iterative operators), which
-        # clearCache does not cover.
-        spark.catalog.clearCache()
-        release_cached_intermediates()
-        return dt
+        with cache_scope():  # released after the clock stops
+            t0 = time.perf_counter()
+            spec.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            return time.perf_counter() - t0
 
     timings: dict[str, float] = {}
     disagree: set[str] = set()

@@ -1,2 +1,2 @@
 from . import calendar, waterfall  # noqa: F401
-from .caching import release_cached_intermediates, tracked_persist  # noqa: F401
+from .caching import cache_scope, tracked_persist  # noqa: F401

@@ -1,59 +1,79 @@
-"""Tracked persistence for operator-internal intermediates.
+"""Cache scopes: the one lifetime of every persisted or checkpointed
+intermediate in the package.
 
 The dedup/similarity operators persist small derived tables (signatures,
 inverted indexes) because they feed multiple consumers — both sides of a
 self-join plus a verification join — and Spark's exchange reuse does not
-reliably kick in for those shapes. The persist is correct for one-shot
-driver runs (bench.py calls ``spark.catalog.clearCache()`` between
-queries), but a long-lived session that invokes the operators repeatedly
-would otherwise accumulate cached tables indefinitely.
+reliably kick in for those shapes; iterative operators cut lineage with
+``localCheckpoint``. A long-lived session would accumulate both, so
+every such call goes through :func:`tracked_persist` or
+:func:`local_checkpoint`, which register it in the calling thread's
+innermost :func:`cache_scope`; leaving the scope unpersists it, blocking.
+The returned DataFrames are lazy and read those intermediates, so the
+caller opens the scope around the build AND the terminal action::
 
-Contract: operators call :func:`tracked_persist` instead of
-``df.persist()``; callers running many operator invocations in one
-session call :func:`release_cached_intermediates` after consuming each
-result (i.e. after the terminal action — the returned DataFrames are
-lazy, so releasing *before* the action would recompute the intermediate
-once per consumer and defeat the persist).
+    with cache_scope():
+        rows = plan(spark, sf_dir).collect()
+
+Scopes live in one ``ContextVar`` and a new thread starts with an empty
+context, so a release on one thread never unpersists another thread's
+cache (Spark keys its cache by plan: two threads persisting the SAME
+plan share one entry). Calls outside every scope land in the thread's
+implicit scope, released only by the deprecated
+:func:`release_cached_intermediates`.
 """
 
 from __future__ import annotations
 
+import warnings
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
+
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-# Strong references on purpose: the persisted table must stay reachable
-# until the caller releases it — the operator's local variable dies when
-# the operator returns, but the cache entry it created does not.
-_LIVE: list[DataFrame] = []
-
-# localCheckpoint-backed RDDs (iterative operators): tracked by JVM RDD id
-# because ``df.unpersist()`` only touches the Dataset cache, not the RDD
-# a LogicalRDD scan reads from.
-_LIVE_RDDS: list[tuple[SparkContext, int]] = []
+# The calling thread's scopes, outermost (the implicit one) first. A
+# scope holds persisted DataFrames and localCheckpoint RDD ids: a
+# checkpoint's blocks belong to the RDD its plan scans, which
+# ``df.unpersist()`` does not reach.
+_SCOPES: ContextVar[tuple[list, ...]] = ContextVar("cache_scopes", default=())
 
 
-def track_checkpoint_rdds(sc: SparkContext, rdd_ids: set[int]) -> None:
-    """Register localCheckpoint RDD ids for later release.
-
-    Used by iterative operators (connected_components) whose RESULT is
-    backed by a checkpointed RDD: it must outlive the operator call, but
-    the session must still be able to reclaim it via
-    :func:`release_cached_intermediates`.
-    """
-    for rid in rdd_ids:
-        _LIVE_RDDS.append((sc, rid))
+def _scopes() -> tuple[list, ...]:
+    if not _SCOPES.get():
+        _SCOPES.set(([],))
+    return _SCOPES.get()
 
 
-def unpersist_rdd_ids(sc: SparkContext, rdd_ids: set[int],
-                      blocking: bool = False) -> None:
-    """Unpersist RDDs by id (localCheckpoint blocks included).
+def _rdd_id(df: DataFrame) -> int:
+    """Id of the RDD a checkpointed DataFrame's ``LogicalRDD`` scans."""
+    return df._jdf.queryExecution().analyzed().rdd().id()
 
-    ``SparkContext.unpersistRDD`` is ``private[spark]`` in Scala, which
-    compiles to a public JVM method — stable across Spark 3.x/4.x and the
-    only handle to a checkpoint RDD whose DataFrame wrapper is gone.
-    """
-    for rid in rdd_ids:
-        sc._jsc.sc().unpersistRDD(rid, blocking)
+
+def _release(held: list) -> int:
+    n = len(held)
+    while held:
+        entry = held.pop()
+        if isinstance(entry, DataFrame):
+            entry.unpersist(True)
+        else:  # unpersistRDD is private[spark]: a public JVM method
+            SparkContext._active_spark_context._jsc.sc().unpersistRDD(
+                entry, True)
+    return n
+
+
+@contextmanager
+def cache_scope() -> Iterator[list]:
+    """Release, on exit, everything this thread registered inside the
+    block; yields the list of what the scope holds."""
+    held: list = []
+    token = _SCOPES.set(_scopes() + (held,))
+    try:
+        yield held
+    finally:
+        _SCOPES.reset(token)
+        _release(held)
 
 
 def persistent_rdd_ids(sc: SparkContext) -> set[int]:
@@ -63,7 +83,7 @@ def persistent_rdd_ids(sc: SparkContext) -> set[int]:
 
 
 def tracked_persist(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK) and register it for later release.
+    """Persist ``df`` (MEMORY_AND_DISK) in the innermost scope.
 
     ``eager=True`` (default) materializes the cache with a count() before
     returning. This is deliberate, not a convenience: every caller feeds
@@ -74,25 +94,32 @@ def tracked_persist(df: DataFrame, eager: bool = True) -> DataFrame:
     pass makes every downstream consumer a cache hit (measured: x06
     4.9 s → ~1.7 s at sf0.1).
     """
-    df.persist()
+    _scopes()[-1].append(df.persist())
     if eager:
         df.count()
-    _LIVE.append(df)
     return df
 
 
-def release_cached_intermediates() -> int:
-    """Unpersist every tracked intermediate; returns how many were released.
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` in the innermost scope, which
+    holds the id of the RDD the checkpointed plan scans (a diff of the
+    session's persistent RDDs would also catch another thread's)."""
+    out = df.localCheckpoint(eager=True)
+    _scopes()[-1].append(_rdd_id(out))
+    return out
 
-    Safe to call at any time; releasing an already-unpersisted DataFrame
-    is a no-op in Spark.
-    """
-    n = 0
-    while _LIVE:
-        _LIVE.pop().unpersist(True)
-        n += 1
-    while _LIVE_RDDS:
-        sc, rid = _LIVE_RDDS.pop()
-        sc._jsc.sc().unpersistRDD(rid, True)
-        n += 1
-    return n
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free a :func:`local_checkpoint` of the innermost scope before the
+    scope exits (an iterative operator's superseded round)."""
+    rid = _rdd_id(df)
+    _scopes()[-1].remove(rid)
+    _release([rid])
+
+
+def release_cached_intermediates() -> int:
+    """Deprecated: open a :func:`cache_scope` instead. Releases the calling
+    thread's implicit scope and returns how many entries it held."""
+    warnings.warn("release_cached_intermediates() is deprecated; use "
+                  "`with cache_scope():`", DeprecationWarning, stacklevel=2)
+    return _release(_scopes()[0])

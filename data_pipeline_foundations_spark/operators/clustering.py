@@ -53,9 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .caching import (
-    persistent_rdd_ids, track_checkpoint_rdds, unpersist_rdd_ids,
-)
+from .caching import local_checkpoint, release_checkpoint
 
 MAX_CC_ROUNDS = 25
 
@@ -115,8 +113,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
     feeds nothing once round k is compared against it — it is freed
     immediately, keeping peak storage at TWO edge-set snapshots
     regardless of round count. The FINAL snapshot backs the returned
-    DataFrame, so it is registered with the caching registry and
-    reclaimed by the caller's ``release_cached_intermediates()``.
+    DataFrame, so it lives until the caller's ``cache_scope()`` exits.
     """
     sc = vertices.sparkSession.sparkContext
     if checkpoint_dir is not None:
@@ -133,28 +130,23 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
         if current is None:
             sc.setCheckpointDir(checkpoint_dir)
 
-    def _rm(paths: set[str]) -> None:
-        for p in paths:
-            jp = sc._jvm.org.apache.hadoop.fs.Path(p)
-            jp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jp, True)
+    def snapshot(df: DataFrame) -> DataFrame:
+        if checkpoint_dir is None:
+            return local_checkpoint(df)
+        return df.checkpoint(eager=True)
 
-    def snapshot(df: DataFrame) -> tuple[DataFrame, set]:
-        if checkpoint_dir is not None:
-            # reliable checkpoint: track the written file so round k-1's
-            # files are deleted when round k materializes (ADVICE r3 —
-            # otherwise every round's snapshot survives the whole run).
-            out = df.checkpoint(eager=True)
-            f = out.rdd.getCheckpointFile()
-            return out, ({f} if f else set())
-        before = persistent_rdd_ids(sc)
-        out = df.localCheckpoint(eager=True)
-        return out, persistent_rdd_ids(sc) - before
-
-    def release(ids_or_paths: set) -> None:
-        if checkpoint_dir is not None:
-            _rm(ids_or_paths)
+    def release(snap: DataFrame) -> None:
+        if checkpoint_dir is None:
+            release_checkpoint(snap)
         else:
-            unpersist_rdd_ids(sc, ids_or_paths)
+            # reliable checkpoint: delete round k-1's files when round k
+            # materializes (ADVICE r3 — otherwise every round's snapshot
+            # survives the whole run).
+            f = snap.rdd.getCheckpointFile()
+            if f:
+                jp = sc._jvm.org.apache.hadoop.fs.Path(f)
+                jp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(
+                    jp, True)
 
     def _is_star_forest(edge_df: DataFrame) -> bool:
         # The fixed point IS "disjoint stars rooted at each local min"
@@ -174,7 +166,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
                         "hi", "leftsemi")))
         return viol.limit(1).count() == 0
 
-    e, prev_ids = snapshot(
+    e = snapshot(
         edges.select(F.greatest(src, dst).alias("hi"),
                      F.least(src, dst).alias("lo"))
         .filter(F.col("hi") != F.col("lo")).distinct())
@@ -220,7 +212,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
         members = sorted({v for row_ in parent.items() for v in row_}
                          | set(parent))
         label_rows = [(v, find(v)) for v in members]
-        release(prev_ids)
+        release(e)
         spark = vertices.sparkSession
         from pyspark.sql import types as T
         label_schema = T.StructType([T.StructField("v", id_type),
@@ -239,9 +231,9 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
     for _ in range(max_rounds + 1):
         converged = _is_star_forest(e)
         if not converged:
-            nxt, new_ids = snapshot(_small_star(_large_star(e)))
-            release(prev_ids)
-            prev_ids, e = new_ids, nxt
+            nxt = snapshot(_small_star(_large_star(e)))
+            release(e)
+            e = nxt
         if converged:
             # Star forest: every non-root appears exactly once as hi
             # with its component min as lo; roots label themselves.
@@ -262,12 +254,10 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
             singletons = (vertices.select(F.col(id_col).alias("v"))
                           .join(participants, "v", "leftanti")
                           .select("v", F.col("v").alias("label")))
-            if checkpoint_dir is None:
-                track_checkpoint_rdds(sc, prev_ids)
             return (labels.unionByName(singletons)
                     .select(F.col("v").alias(id_col),
                             F.col("label").alias("cluster_id")))
-    release(prev_ids)
+    release(e)
     raise RuntimeError(
         f"connected_components: star fixed point not reached after "
         f"{max_rounds} large-star/small-star rounds (raise max_rounds)")

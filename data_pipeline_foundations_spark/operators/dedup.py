@@ -36,7 +36,7 @@ from ..functions.hashing import md5_long, md5_long_sql, oracle_md5_long
 from ..functions.sql import sql_ident
 from ..functions.text import tokens
 from ..tables import scale_out
-from .caching import tracked_persist
+from .caching import local_checkpoint, tracked_persist
 
 # MinHash family size and LSH banding: K = BANDS * ROWS_PER_BAND.
 MINHASH_K = 8
@@ -768,9 +768,8 @@ def dedup_against_store(spark, batch: DataFrame, store_table: str, *,
     refreshes every cached plan that reads the store table, and the
     survivors' plan does: a lazy (or merely cached) result re-evaluated
     after the append would anti-join against its own output and come
-    back empty. The checkpoint breaks that lineage; it is registered
-    with the caching registry for the caller's
-    ``release_cached_intermediates()``.
+    back empty. The checkpoint breaks that lineage; it lives until the
+    caller's ``cache_scope()`` exits.
 
     The store is a parquet table bucketed+sorted on ``fp_col``
     (sources/warehouse.py discipline): the per-batch anti-join probe pays
@@ -778,7 +777,6 @@ def dedup_against_store(spark, batch: DataFrame, store_table: str, *,
     the "pay the shuffle once at load" contract applied to dedup state.
     First call bootstraps an empty store.
     """
-    from .caching import persistent_rdd_ids, track_checkpoint_rdds
     full = f"{database}.{store_table}"
     if not spark.catalog.tableExists(full):
         (spark.createDataFrame([], f"{fp_col} long")
@@ -801,12 +799,9 @@ def dedup_against_store(spark, batch: DataFrame, store_table: str, *,
                 f"buckets but n_buckets={n_buckets} was requested; pass "
                 f"n_buckets={existing} (the store's spec is immutable "
                 f"after creation)")
-    sc = spark.sparkContext
-    before = persistent_rdd_ids(sc)
-    survivors = incremental_dedup(
+    survivors = local_checkpoint(incremental_dedup(
         batch, spark.table(full), id_col=id_col,
-        text_col=text_col, fp_col=fp_col).localCheckpoint(eager=True)
-    track_checkpoint_rdds(sc, persistent_rdd_ids(sc) - before)
+        text_col=text_col, fp_col=fp_col))
     (survivors.select(fp_col)
      .write.mode("append").format("parquet")
      .bucketBy(n_buckets, fp_col).sortBy(fp_col)
@@ -840,18 +835,13 @@ def dedup_against_versioned_store(spark, batch: DataFrame, root: str, *,
     deltas — its state model is current-version-only).
     """
     from ..sources.warehouse import list_versions, write_versioned
-    from .caching import persistent_rdd_ids, track_checkpoint_rdds
     dirs = [d for _, d in list_versions(spark, root)]
     if dirs:
         history = spark.read.parquet(*dirs).select(fp_col)
     else:
         history = spark.createDataFrame([], f"{fp_col} long")
-    sc = spark.sparkContext
-    before = persistent_rdd_ids(sc)
-    survivors = incremental_dedup(
-        batch, history, id_col=id_col,
-        text_col=text_col, fp_col=fp_col).localCheckpoint(eager=True)
-    track_checkpoint_rdds(sc, persistent_rdd_ids(sc) - before)
+    survivors = local_checkpoint(incremental_dedup(
+        batch, history, id_col=id_col, text_col=text_col, fp_col=fp_col))
     write_versioned(spark, root, survivors.select(fp_col))
     return survivors
 

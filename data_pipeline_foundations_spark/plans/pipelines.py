@@ -590,7 +590,7 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fire across the two (different grouping keys), so tracked_persist
     # materializes the settlement chain ONCE — O(orders) rows, the
     # standard materialize-the-fact-once shape for a multi-report job;
-    # released by release_cached_intermediates after the action.
+    # released when the caller's cache_scope() exits after the action.
     from ..operators.caching import tracked_persist
     detail = tracked_persist(accounting_detail(mapped))
     as_of = _dt.datetime.fromisoformat(_PL02_AS_OF + " 00:00:00")

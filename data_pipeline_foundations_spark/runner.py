@@ -28,10 +28,11 @@ materializing its fact table to parquet and reading it back
 (load_accounting_data.py:36). The persist is lazy: it launches no job
 of its own (an eager ``count()`` would scan the whole plan once more);
 the first consumer action fills the cache while doing work it had to do
-anyway. The cache lives exactly as long as the run: every DataFrame the
-run persisted is ``unpersist()``-ed in a ``finally`` when ``run_dag``
-returns or raises, so no cache entry outlives the run and nothing is
-kept in module state. A DataFrame a stage cached itself is left alone.
+anyway. The cache lives exactly as long as the run: ``run_dag`` runs
+the stages in one ``cache_scope()`` (operators/caching.py), which
+unpersists the shared outputs, and whatever the stages registered
+themselves with ``tracked_persist``, when the run returns or raises. A
+DataFrame a stage cached itself is not persisted again.
 """
 
 from __future__ import annotations
@@ -42,6 +43,8 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .operators.caching import cache_scope, tracked_persist
 
 OK, FAILED, SKIPPED = "ok", "failed", "skipped"
 
@@ -99,8 +102,7 @@ def run_dag(stages: list[Stage]) -> dict[str, StageResult]:
 
     consumers = Counter(d for s in stages for d in set(s.deps))
     results: dict[str, StageResult] = {}
-    persisted: list[DataFrame] = []  # this run's shared-output cache
-    try:
+    with cache_scope():  # this run's shared-output cache
         for s in order:
             bad = tuple(d for d in s.deps if results[d].status != OK)
             if bad:
@@ -113,11 +115,8 @@ def run_dag(stages: list[Stage]) -> dict[str, StageResult]:
                 continue
             if (consumers[s.name] >= 2 and isinstance(value, DataFrame)
                     and not value.is_cached):
-                persisted.append(value.persist())
+                tracked_persist(value, eager=False)
             results[s.name] = StageResult(OK, value=value)
-    finally:
-        for df in persisted:
-            df.unpersist()
     return results
 
 

@@ -125,9 +125,9 @@ def read_json_quarantine(spark: SparkSession, path: str,
     The caller's ``schema`` object is never mutated (StructType.add
     appends in place and returns self — building the widened schema from
     ``schema.fields`` keeps the corrupt-record column out of the user's
-    object). The one-pass parse is held via ``tracked_persist`` so
-    ``release_tracked()`` (the session-level cache discipline every other
-    operator uses) frees it.
+    object). The one-pass parse is held via ``tracked_persist``, so the
+    caller's ``cache_scope()`` (the cache discipline every other operator
+    uses) frees it.
     """
     from ..operators.caching import tracked_persist
     cr = "_corrupt_record"

@@ -135,24 +135,27 @@ def reconcile_catalog(spark: SparkSession, keep: set[str],
     is matched the way the catalog normalises names (case-insensitively
     by default). Views and temporary views are left alone. A dropped
     table that :func:`build_warehouse` built also loses its snapshot
-    root, so the DROP frees its files as it does in the reference."""
+    root, so the DROP frees its files as it does in the reference.
+    Catalog commands only: no Spark job runs (``catalog.listTables``'s
+    iterator would run several)."""
     base = _snapshots_base(spark) + "/"
     keep = {_catalog_name(spark, k) for k in keep}
     dropped = []
-    for t in spark.catalog.listTables(database):
-        if t.isTemporary or t.tableType == "VIEW" or t.name in keep:
+    for t in spark.sql(f"SHOW TABLES IN {sql_ident(database)}").collect():
+        if t.isTemporary or t.tableName in keep:
             continue
-        name = _table_name(database, t.name)
-        loc = next((r.data_type for r in spark.sql(
-            f"DESCRIBE TABLE EXTENDED {name}").collect()
-            if r.col_name == "Location"), "")
+        name = _table_name(database, t.tableName)
+        info = {r.col_name: r.data_type for r in spark.sql(
+            f"DESCRIBE TABLE EXTENDED {name}").collect()}
+        if info.get("Type") == "VIEW":
+            continue
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         # <base>/<db>/<table>/v_NNNNNNNN → delete <base>/<db>/<table>
-        root = loc.rsplit("/", 1)[0]
+        root = info.get("Location", "").rsplit("/", 1)[0]
         if root.startswith(base) and root[len(base):].count("/") == 1:
             fs, p, _ = _fs(spark, root)
             fs.delete(p, True)
-        dropped.append(t.name)
+        dropped.append(t.tableName)
     return dropped
 
 
@@ -527,6 +530,8 @@ def replicate_incremental(spark: SparkSession, src_root: str,
     """
     from pyspark.sql import functions as F
 
+    from ..operators.caching import cache_scope, tracked_persist
+
     src = read_versioned(spark, src_root)
     if not list_versions(spark, dst_root):
         return write_versioned(spark, dst_root, src)
@@ -554,14 +559,15 @@ def replicate_incremental(spark: SparkSession, src_root: str,
     # other key instead of re-entering the delta on every sync
     j = o.join(n, F.col(f"o.{id_col}").eqNullSafe(F.col(f"n.{id_col}")),
                "full_outer")
-    delta = (j.filter(F.col("o._fp").isNull()
-                      | F.col("n._fp").isNull()
-                      | (F.col("o._fp") != F.col("n._fp")))
-             .select(F.when(F.col("o._fp").isNull(), F.col(f"n.{id_col}"))
-                     .otherwise(F.col(f"o.{id_col}")).alias(id_col),
-                     F.col("n._fp").isNull().alias("gone"))
-             .persist())  # plain persist: released below, not registry-tracked
-    try:
+    with cache_scope():
+        delta = tracked_persist(
+            j.filter(F.col("o._fp").isNull()
+                     | F.col("n._fp").isNull()
+                     | (F.col("o._fp") != F.col("n._fp")))
+            .select(F.when(F.col("o._fp").isNull(), F.col(f"n.{id_col}"))
+                    .otherwise(F.col(f"o.{id_col}")).alias(id_col),
+                    F.col("n._fp").isNull().alias("gone")),
+            eager=False)
         if delta.count() == 0:  # one job: materializes AND checks
             return None
         survivors = dst.join(
@@ -576,8 +582,6 @@ def replicate_incremental(spark: SparkSession, src_root: str,
         return write_versioned(
             spark, dst_root,
             survivors.unionByName(incoming, allowMissingColumns=True))
-    finally:
-        delta.unpersist()
 
 
 def compact_versioned(spark: SparkSession, root: str, *,
@@ -589,7 +593,8 @@ def compact_versioned(spark: SparkSession, root: str, *,
     the flip is the new version's _SUCCESS marker. Old versions beyond
     ``keep_versions`` are pruned afterwards (they only become unreachable
     AFTER the new commit, so an in-flight reader of the previous current
-    version needs it retained — keep_versions >= 2).
+    version needs it retained — keep_versions >= 2). A Hive-partitioned
+    version keeps its ``key=value`` layout.
     Returns the new version dir, or None if nothing to do."""
     import math
 
@@ -606,8 +611,14 @@ def compact_versioned(spark: SparkSession, root: str, *,
     n_out = max(1, math.ceil(total / target_file_bytes))
     if n_files == 0 or n_out >= n_files:
         return None
+    keys, sub = [], _hive_partition_subdirs(spark, cur)
+    while sub:  # the key names of the k1=../k2=.. directory chain
+        keys.append(sub[0].rstrip("/").rsplit("/", 1)[-1].split("=", 1)[0])
+        sub = _hive_partition_subdirs(spark, sub[0])
+    # hashing on the keys writes one file per leaf, not n_out per leaf
     new_dir = write_versioned(
-        spark, root, spark.read.parquet(cur).repartition(n_out))
+        spark, root, spark.read.parquet(cur).repartition(n_out, *keys),
+        partition_by=keys)
     _prune_versions(spark, vs, keep_versions=keep_versions)
     return new_dir
 

@@ -41,13 +41,14 @@ def _make_handler(dataset_path: str, *, month_tag_col: str = "month_tag",
     """The foreachBatch body, factored out so restart-shaped tests (and
     callers who manage their own writer/checkpoint) can mount it on any
     writeStream."""
+    from ..operators.caching import cache_scope, tracked_persist
     from ..pipelines.growth_data import refresh_monthly_partitions
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df = batch_df.persist()
-        try:
+        with cache_scope():
+            batch_df = tracked_persist(batch_df, eager=False)
             raw_tags = [r[0] for r in
                         batch_df.select(month_tag_col).distinct().collect()]
             # A null tag would make sorted() raise an opaque None-vs-str
@@ -71,8 +72,6 @@ def _make_handler(dataset_path: str, *, month_tag_col: str = "month_tag",
                 process_missing=True)
             if written and on_written is not None:
                 on_written(written, batch_id)
-        finally:
-            batch_df.unpersist()
 
     return handle
 

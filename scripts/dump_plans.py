@@ -11,9 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.registry import all_queries
 from data_pipeline_foundations_spark.session import get_spark
 
@@ -34,16 +32,15 @@ def main() -> None:
     spark = get_spark("dump_plans")
     queries = all_queries()
     for name in args.names:
-        df = queries[name].fn(spark, args.sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
+        with cache_scope():
+            df = queries[name].fn(spark, args.sf_dir)
+            plan = df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                .fromString("formatted"))
         path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} chars)", flush=True)
-        spark.catalog.clearCache()
-        release_cached_intermediates()
 
 
 if __name__ == "__main__":

@@ -24,9 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.registry import all_queries
 from data_pipeline_foundations_spark.session import get_spark
 from data_pipeline_foundations_spark.tables import TABLES, table_path
@@ -95,7 +93,8 @@ def main() -> None:
         row = {"rows_match": None, "schema_match": None, "hash_match": None,
                "spark_rows": None, "oracle_rows": None, "err": None}
         try:
-            spark_pdf = spec.fn(spark, args.sf_dir).toPandas()
+            with cache_scope():
+                spark_pdf = spec.fn(spark, args.sf_dir).toPandas()
             row["spark_rows"] = len(spark_pdf)
             if spec.oracle is None:
                 row["rows_match"] = row["schema_match"] = None
@@ -110,9 +109,6 @@ def main() -> None:
                                      and _values_match(spark_pdf, duck_pdf))
         except Exception as e:  # noqa: BLE001 — artifact records the failure
             row["err"] = f"{type(e).__name__}: {e}"[:500]
-        finally:
-            spark.catalog.clearCache()
-            release_cached_intermediates()
         results[name] = row
         status = "ok" if row.get("hash_match") else (
             "rows_only" if row.get("rows_only") else "FAIL")

@@ -19,9 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.registry import all_queries
 from data_pipeline_foundations_spark.session import get_spark
 from data_pipeline_foundations_spark.tables import TABLES, load
@@ -51,15 +49,14 @@ def main() -> None:
         spec = queries[name]
         best = None
         for _ in range(args.runs):
-            sc.setJobGroup(name, name)
-            t0 = time.perf_counter()
-            df = spec.fn(spark, args.sf_dir)
-            t1 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            t2 = time.perf_counter()
-            sc.setJobGroup(None, None)
-            spark.catalog.clearCache()
-            release_cached_intermediates()
+            with cache_scope():
+                sc.setJobGroup(name, name)
+                t0 = time.perf_counter()
+                df = spec.fn(spark, args.sf_dir)
+                t1 = time.perf_counter()
+                df.write.mode("overwrite").format("noop").save()
+                t2 = time.perf_counter()
+                sc.setJobGroup(None, None)
             njobs = len(sc.statusTracker().getJobIdsForGroup(name))
             rec = {"build": round(t1 - t0, 3), "exec": round(t2 - t1, 3),
                    "total": round(t2 - t0, 3), "jobs_cum": njobs}

@@ -1,8 +1,8 @@
 """Time individual registered queries at a given SF dir (min of N runs).
 
 Usage: python scripts/profile_queries.py x36_pq_ann x20_ivf_ann [--runs 3]
-Mirrors bench.py's measurement discipline (noop sink, clearCache +
-release_cached_intermediates between runs) so numbers are comparable.
+Mirrors bench.py's measurement discipline (noop sink, one cache scope
+per run, released outside the timed region) so numbers are comparable.
 """
 from __future__ import annotations
 
@@ -13,9 +13,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.registry import all_queries
 from data_pipeline_foundations_spark.session import get_spark
 from data_pipeline_foundations_spark.tables import TABLES, load
@@ -37,12 +35,11 @@ def main() -> None:
         spec = queries[name]
         runs = []
         for _ in range(args.runs):
-            t0 = time.perf_counter()
-            spec.fn(spark, args.sf_dir).write.mode("overwrite") \
-                .format("noop").save()
-            runs.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-            release_cached_intermediates()
+            with cache_scope():
+                t0 = time.perf_counter()
+                spec.fn(spark, args.sf_dir).write.mode("overwrite") \
+                    .format("noop").save()
+                runs.append(time.perf_counter() - t0)
         print(f"{name}: min={min(runs):.3f} runs={[round(r, 3) for r in runs]}",
               flush=True)
 

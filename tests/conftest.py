@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_pipeline_foundations_spark.operators.caching import cache_scope  # noqa: E402
 from data_pipeline_foundations_spark.session import get_spark  # noqa: E402
 from data_pipeline_foundations_spark.tables import TABLES, table_path  # noqa: E402
 
@@ -26,6 +27,14 @@ def spark(tmp_path_factory):
             f"spark.sql.warehouse.dir={wh}"])))
         s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _cache_scope():
+    """Each test runs in its own cache scope, so what a test persists or
+    checkpoints is released when it ends and never reaches the next."""
+    with cache_scope():
+        yield
 
 
 @pytest.fixture(scope="session")

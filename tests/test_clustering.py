@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_foundations_spark.operators.caching import (
-    persistent_rdd_ids, release_cached_intermediates,
+    cache_scope, persistent_rdd_ids,
 )
 from data_pipeline_foundations_spark.operators.clustering import (
     connected_components, dedup_clusters,
@@ -56,11 +56,11 @@ def test_path_graph_converges_in_log_rounds(spark):
     edges = spark.range(n - 1).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
     cap = math.ceil(math.log2(n)) + 4     # 13 + slack
-    comp = connected_components(docs, edges, max_rounds=cap,
-                                small_graph_edges=0)  # exercise contraction
-    assert comp.filter(F.col("cluster_id") != 0).count() == 0
-    assert comp.count() == n
-    release_cached_intermediates()
+    with cache_scope():
+        comp = connected_components(docs, edges, max_rounds=cap,
+                                    small_graph_edges=0)  # contraction
+        assert comp.filter(F.col("cluster_id") != 0).count() == 0
+        assert comp.count() == n
 
 
 def test_reliable_checkpoint_dir(spark, tmp_path):
@@ -92,25 +92,26 @@ def test_dedup_clusters_canonical_and_sizes(spark):
 
 def test_checkpoints_are_reclaimed(spark):
     """Per-round checkpoints die as the iteration advances; the final
-    label snapshot (which backs the result) is reclaimed by the session's
-    release call — net storage growth is zero. Raised non-convergence
-    must clean up everything itself."""
+    label snapshot (which backs the result) is reclaimed when the
+    caller's cache scope exits — net storage growth is zero. Raised
+    non-convergence must clean up everything itself."""
     sc = spark.sparkContext
-    release_cached_intermediates()          # drain leftovers from other tests
     before = persistent_rdd_ids(sc)
-    comp = dedup_clusters(_docs(spark, 4), _pairs(spark, [(0, 1), (1, 2)]))
-    comp.count()
-    leftover = persistent_rdd_ids(sc) - before
-    # only the edge list (read by the result's singleton branch) and the
-    # final label snapshot survive the iteration
-    assert len(leftover) <= 2
-    release_cached_intermediates()
+    with cache_scope():
+        comp = dedup_clusters(_docs(spark, 4),
+                              _pairs(spark, [(0, 1), (1, 2)]))
+        comp.count()
+        leftover = persistent_rdd_ids(sc) - before
+        # only the edge list (read by the result's singleton branch) and
+        # the final label snapshot survive the iteration
+        assert len(leftover) <= 2
     assert persistent_rdd_ids(sc) <= before
-    with pytest.raises(RuntimeError):
-        connected_components(_docs(spark, 4),
-                             _pairs(spark, [(0, 1), (1, 2), (2, 3)]),
-                             max_rounds=1, small_graph_edges=0)
-    assert persistent_rdd_ids(sc) <= before
+    with cache_scope():
+        with pytest.raises(RuntimeError):
+            connected_components(_docs(spark, 4),
+                                 _pairs(spark, [(0, 1), (1, 2), (2, 3)]),
+                                 max_rounds=1, small_graph_edges=0)
+        assert persistent_rdd_ids(sc) <= before
 
 
 def test_random_graphs_match_union_find(spark):
@@ -144,11 +145,11 @@ def test_random_graphs_match_union_find(spark):
         want = {v: want[find(v)] for v in range(n)}
 
         for sge in (0, 100_000):   # distributed contraction AND fast path
-            comp = connected_components(_docs(spark, n),
-                                        _pairs(spark, edges),
-                                        small_graph_edges=sge)
-            got = {r.doc_id: r.cluster_id for r in comp.collect()}
-            release_cached_intermediates()
+            with cache_scope():
+                comp = connected_components(_docs(spark, n),
+                                            _pairs(spark, edges),
+                                            small_graph_edges=sge)
+                got = {r.doc_id: r.cluster_id for r in comp.collect()}
             assert got == want, sge
 
 

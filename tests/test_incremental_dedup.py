@@ -8,9 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.operators.dedup import (
     dedup_against_store, incremental_dedup,
 )
@@ -25,25 +23,26 @@ def test_store_accumulates_across_batches(spark):
     try:
         b1 = _batch(spark, [(1, "alpha beta"), (2, "gamma delta"),
                             (3, "alpha  BETA")])   # 3 normalizes like 1
-        s1 = dedup_against_store(spark, b1, "fp_store_t1")
-        assert {r.doc_id for r in s1.collect()} == {1, 2}
-        release_cached_intermediates()
+        with cache_scope():
+            s1 = dedup_against_store(spark, b1, "fp_store_t1")
+            assert {r.doc_id for r in s1.collect()} == {1, 2}
 
         # batch 2: one dup-of-history, one within-batch dup pair, one new
         b2 = _batch(spark, [(10, "alpha beta"), (11, "epsilon zeta"),
                             (12, "epsilon  ZETA"), (13, "eta theta")])
-        s2 = dedup_against_store(spark, b2, "fp_store_t1")
-        assert {r.doc_id for r in s2.collect()} == {11, 13}
-        release_cached_intermediates()
+        with cache_scope():
+            s2 = dedup_against_store(spark, b2, "fp_store_t1")
+            assert {r.doc_id for r in s2.collect()} == {11, 13}
 
         # store now holds 4 distinct fingerprints
         assert spark.table("fp_store_t1").distinct().count() == 4
         # batch 3: everything already seen → nothing survives
-        s3 = dedup_against_store(
-            spark, _batch(spark, [(20, "eta theta"), (21, "gamma delta")]),
-            "fp_store_t1")
-        assert s3.count() == 0
-        release_cached_intermediates()
+        with cache_scope():
+            s3 = dedup_against_store(
+                spark, _batch(spark, [(20, "eta theta"),
+                                      (21, "gamma delta")]),
+                "fp_store_t1")
+            assert s3.count() == 0
     finally:
         spark.sql("DROP TABLE IF EXISTS fp_store_t1")
 
@@ -59,8 +58,8 @@ def test_probe_does_not_reshuffle_store(spark):
         # sizing discipline — n_buckets to the cluster's parallelism)
         nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
         seed = _batch(spark, [(i, f"doc number {i}") for i in range(50)])
-        dedup_against_store(spark, seed, "fp_store_t2", n_buckets=nb)
-        release_cached_intermediates()
+        with cache_scope():
+            dedup_against_store(spark, seed, "fp_store_t2", n_buckets=nb)
 
         batch = _batch(spark, [(100 + i, f"probe doc {i}") for i in range(20)])
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -97,9 +96,9 @@ def test_versioned_store_atomic_visibility(spark, tmp_path):
 
     b1 = _batch(spark, [(1, "alpha beta"), (2, "gamma delta"),
                         (3, "alpha  BETA")])
-    s1 = dedup_against_versioned_store(spark, b1, root)
-    assert {r.doc_id for r in s1.collect()} == {1, 2}
-    release_cached_intermediates()
+    with cache_scope():
+        s1 = dedup_against_versioned_store(spark, b1, root)
+        assert {r.doc_id for r in s1.collect()} == {1, 2}
     assert len(list_versions(spark, root)) == 1
 
     # Simulate a concurrent writer mid-crash: a version directory with
@@ -115,24 +114,25 @@ def test_versioned_store_atomic_visibility(spark, tmp_path):
     # rows survive, and the orphan's bogus fp plays no part
     b2 = _batch(spark, [(10, "alpha beta"), (11, "epsilon zeta"),
                         (13, "eta theta")])
-    s2 = dedup_against_versioned_store(spark, b2, root)
-    assert {r.doc_id for r in s2.collect()} == {11, 13}
-    release_cached_intermediates()
+    with cache_scope():
+        s2 = dedup_against_versioned_store(spark, b2, root)
+        assert {r.doc_id for r in s2.collect()} == {11, 13}
     # numbering continues from the last COMMITTED version; the orphan
     # stays an ignored dead directory
     assert [v for v, _ in list_versions(spark, root)] == [1, 2]
 
     # batch 3: everything seen across BOTH committed versions
-    s3 = dedup_against_versioned_store(
-        spark, _batch(spark, [(20, "eta theta"), (21, "gamma delta")]), root)
-    assert s3.count() == 0
-    release_cached_intermediates()
+    with cache_scope():
+        s3 = dedup_against_versioned_store(
+            spark, _batch(spark, [(20, "eta theta"), (21, "gamma delta")]),
+            root)
+        assert s3.count() == 0
 
     # squash preserves membership (delta-union semantics), then a
     # re-probe of the squashed store still rejects everything seen
     squash_versioned(spark, root, distinct=True, keep_versions=2)
-    s4 = dedup_against_versioned_store(
-        spark, _batch(spark, [(30, "alpha beta"), (31, "epsilon zeta")]),
-        root)
-    assert s4.count() == 0
-    release_cached_intermediates()
+    with cache_scope():
+        s4 = dedup_against_versioned_store(
+            spark, _batch(spark, [(30, "alpha beta"), (31, "epsilon zeta")]),
+            root)
+        assert s4.count() == 0

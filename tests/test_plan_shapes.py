@@ -10,9 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_pipeline_foundations_spark.operators import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators import cache_scope
 from data_pipeline_foundations_spark.operators.dedup import (
     MAX_SHINGLE_DF, ngram_jaccard_pairs,
 )
@@ -32,8 +30,8 @@ def test_ngram_jaccard_self_join_is_rare_bounded(docs):
     """The x06 scale contract (VERDICT r1 #1): candidate generation must
     touch rare shingles only, and intersections must come from a bounded
     per-pair array_intersect — never an unrestricted shingle self-join."""
-    plan = _optimized(ngram_jaccard_pairs(docs))
-    release_cached_intermediates()
+    with cache_scope():
+        plan = _optimized(ngram_jaccard_pairs(docs))
     # exact intersections via per-candidate array_intersect
     assert "array_intersect" in plan
     # the df-cap filter appears on BOTH inputs of the candidate self-join
@@ -45,8 +43,9 @@ def test_ngram_jaccard_self_join_is_rare_bounded(docs):
 
 
 def test_ngram_jaccard_releases_cache(spark, docs):
-    ngram_jaccard_pairs(docs).count()
-    assert release_cached_intermediates() >= 1
+    with cache_scope() as held:
+        ngram_jaccard_pairs(docs).count()
+        assert len(held) >= 1
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
 
 
@@ -123,8 +122,9 @@ def test_source_overlap_is_shingle_bounded(spark, sf_dir):
     import re
 
     from data_pipeline_foundations_spark.registry import all_queries
-    plan = _executed(all_queries()["x45_source_overlap"].fn(spark, sf_dir))
-    release_cached_intermediates()
+    with cache_scope():
+        plan = _executed(
+            all_queries()["x45_source_overlap"].fn(spark, sf_dir))
     n_hash = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n_hash <= 5, f"expected <=5 hash exchanges, saw {n_hash}"
     assert "NestedLoop" not in plan and "Cartesian" not in plan
@@ -138,9 +138,9 @@ def test_boilerplate_exchange_budget(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from data_pipeline_foundations_spark.registry import all_queries
-    df = all_queries()["x43_boilerplate_segments"].fn(spark, sf_dir)
-    plan = _executed(df)
-    release_cached_intermediates()
+    with cache_scope():
+        plan = _executed(
+            all_queries()["x43_boilerplate_segments"].fn(spark, sf_dir))
     import re
     n_hash = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n_hash <= 3, f"expected <=3 hash exchanges, saw {n_hash}"

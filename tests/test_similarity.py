@@ -5,9 +5,7 @@ cosine for that pair)."""
 
 from __future__ import annotations
 
-from data_pipeline_foundations_spark.operators.caching import (
-    release_cached_intermediates,
-)
+from data_pipeline_foundations_spark.operators.caching import cache_scope
 from data_pipeline_foundations_spark.operators.similarity import (
     cosine_topk, ivf_topk,
 )
@@ -16,11 +14,11 @@ from data_pipeline_foundations_spark.tables import load
 
 def test_ivf_recall_against_brute_force(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
-    truth = {(r.query_id, r.neighbor_id)
-             for r in cosine_topk(emb, n_queries=10, k=5).collect()}
-    got_rows = ivf_topk(emb, n_queries=10, k=5).collect()
+    with cache_scope():
+        truth = {(r.query_id, r.neighbor_id)
+                 for r in cosine_topk(emb, n_queries=10, k=5).collect()}
+        got_rows = ivf_topk(emb, n_queries=10, k=5).collect()
     got = {(r.query_id, r.neighbor_id) for r in got_rows}
-    release_cached_intermediates()
     # ANN contract: recall < 1 is by design, but probing 6/16 lists on
     # this corpus must recover a solid majority of the true top-5.
     recall = len(got & truth) / len(truth)
@@ -38,11 +36,11 @@ def test_ivf_cosines_are_exact(spark, sf_dir):
     """IVF approximates the CANDIDATE SET, never the metric: for pairs it
     does return, the cosine must equal the brute-force value exactly."""
     emb = load(spark, sf_dir, "embeddings")
-    exact = {(r.query_id, r.neighbor_id): r.cosine
-             for r in cosine_topk(emb, n_queries=10, k=5).collect()}
-    ivf = {(r.query_id, r.neighbor_id): r.cosine
-           for r in ivf_topk(emb, n_queries=10, k=5).collect()}
-    release_cached_intermediates()
+    with cache_scope():
+        exact = {(r.query_id, r.neighbor_id): r.cosine
+                 for r in cosine_topk(emb, n_queries=10, k=5).collect()}
+        ivf = {(r.query_id, r.neighbor_id): r.cosine
+               for r in ivf_topk(emb, n_queries=10, k=5).collect()}
     common = set(exact) & set(ivf)
     assert common, "no overlap between IVF and brute force at all"
     for pair in common:
@@ -58,10 +56,10 @@ def test_ivfpq_rerank_contract(spark, sf_dir):
         ivfpq_rerank_topk,
     )
     emb = load(spark, sf_dir, "embeddings")
-    exact = {(r.query_id, r.neighbor_id): r.cosine
-             for r in cosine_topk(emb, n_queries=10, k=500).collect()}
-    rows = ivfpq_rerank_topk(emb, n_queries=10, k=5).collect()
-    release_cached_intermediates()
+    with cache_scope():
+        exact = {(r.query_id, r.neighbor_id): r.cosine
+                 for r in cosine_topk(emb, n_queries=10, k=500).collect()}
+        rows = ivfpq_rerank_topk(emb, n_queries=10, k=5).collect()
     assert rows, "IVF-PQ returned nothing"
     by_q = {}
     for r in rows:
@@ -86,8 +84,8 @@ def test_semantic_dedup_cluster_invariants(spark, sf_dir):
     from data_pipeline_foundations_spark.tables import load
     emb = load(spark, sf_dir, "embeddings")
     n = emb.count()
-    rows = semantic_dedup(emb).collect()
-    release_cached_intermediates()
+    with cache_scope():
+        rows = semantic_dedup(emb).collect()
     assert len(rows) == n
     by_cluster = {}
     for r in rows:
@@ -651,11 +649,13 @@ def test_ivf_builders_accept_any_vector_column_name(spark, sf_dir):
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    want_rows = sorted(map(tuple, ivf_topk(emb).collect()))
-    want_model = build_ivfpq_model(emb)
-    for name in ("emb v", "emb.v"):
-        renamed = emb.withColumnRenamed("embedding", name)
-        got = sorted(map(tuple, ivf_topk(renamed, vec_col=name).collect()))
-        assert got == want_rows, name
-        assert build_ivfpq_model(renamed, vec_col=name) == want_model, name
-    release_cached_intermediates()
+    with cache_scope():
+        want_rows = sorted(map(tuple, ivf_topk(emb).collect()))
+        want_model = build_ivfpq_model(emb)
+        for name in ("emb v", "emb.v"):
+            renamed = emb.withColumnRenamed("embedding", name)
+            got = sorted(map(tuple,
+                             ivf_topk(renamed, vec_col=name).collect()))
+            assert got == want_rows, name
+            assert build_ivfpq_model(renamed, vec_col=name) == want_model, \
+                name

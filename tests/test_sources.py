@@ -211,6 +211,27 @@ def test_reconcile_keeps_temporary_views(spark):
     finally:
         spark.catalog.dropTempView("tmp_v")
 
+def test_reconcile_runs_no_spark_job(spark):
+    """The reconcile is catalog commands only: listing, the view check
+    and the drop run no Spark job (``catalog.listTables``'s iterator ran
+    several), and a persistent view is left alone."""
+    spark.range(3).write.mode("overwrite").saveAsTable("stale_nojob")
+    spark.sql("CREATE OR REPLACE VIEW view_nojob AS SELECT 1 AS a")
+    keep = {t.name for t in spark.catalog.listTables()
+            if t.name not in ("stale_nojob", "view_nojob")}
+    sc = spark.sparkContext
+    sc.setJobGroup("reconcile_nojob", "reconcile_nojob")
+    try:
+        dropped = reconcile_catalog(spark, keep=keep)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("reconcile_nojob"))
+    finally:
+        sc.setJobGroup(None, None)
+        spark.sql("DROP VIEW IF EXISTS view_nojob")
+    assert dropped == ["stale_nojob"]
+    assert jobs == []
+    assert not spark.catalog.tableExists("stale_nojob")
+
+
 def test_csv_reader_explicit_schema(spark, tmp_path):
     p = tmp_path / "t.csv"
     p.write_text("id,amount,label\n1,150,a\n2,,b\n")
@@ -542,6 +563,37 @@ def test_versioned_snapshot_commit_and_compact(spark, tmp_path):
     remaining = {d for _, d in list_versions(spark, root)}
     assert v1 not in remaining or len(remaining) <= 3
     assert {(r.id, r.v) for r in read_versioned(spark, root).collect()} == before
+
+
+def test_compact_versioned_keeps_hive_partitions(spark, tmp_path):
+    """A Hive-partitioned version compacts into a version with the same
+    ``key=value`` directory chain, both directly and routed through
+    compact_parquet_dir, instead of a flat one."""
+    from data_pipeline_foundations_spark.sources.warehouse import (
+        compact_parquet_dir, compact_versioned, read_versioned,
+        write_versioned,
+    )
+    root = str(tmp_path / "vpart")
+    df = (spark.range(600).selectExpr("id", "id % 3 AS k", "id % 2 AS j")
+          .repartition(8))
+    write_versioned(spark, root, df, partition_by=["k", "j"])
+    want = sorted(map(tuple, df.select("id", "k", "j").collect()))
+
+    def layout(version_dir):
+        d = version_dir.removeprefix("file:")
+        return {(a, b) for a in os.listdir(d) if a.startswith("k=")
+                for b in os.listdir(os.path.join(d, a)) if b.startswith("j=")}
+
+    full = {(f"k={k}", f"j={j}") for k in range(3) for j in range(2)}
+    new_dir = compact_versioned(spark, root, target_file_bytes=1 << 30)
+    assert new_dir is not None and layout(new_dir) == full
+    assert sorted(map(tuple, read_versioned(spark, root)
+                      .select("id", "k", "j").collect())) == want
+    write_versioned(spark, root, read_versioned(spark, root).repartition(8),
+                    partition_by=["k", "j"])
+    assert compact_parquet_dir(spark, root, target_file_bytes=1 << 30) == 6
+    assert sorted(map(tuple, read_versioned(spark, root)
+                      .select("id", "k", "j").collect())) == want
 
 
 def test_concurrent_reader_survives_compaction(spark, tmp_path):
