@@ -33,16 +33,12 @@ Scale design:
     (the singleton anti-join).
   - Per-round snapshots truncate lineage — without them round k's plan
     re-derives rounds 1..k-1 and the DAG grows quadratically (the
-    standard Spark iterative-algorithm trap). Two snapshot backends:
-    ``localCheckpoint`` (default: fast, but blocks live in executor
-    storage and die with an executor — fine in local mode and for
-    short runs) or a RELIABLE checkpoint directory via
-    ``checkpoint_dir=`` (survives executor loss; the right choice for
-    long cluster runs). Round k-1's checkpoint FILES are deleted when
-    round k materializes — peak storage is two snapshots in both
-    backends; only the FINAL snapshot's file (backing the returned
-    DataFrame) outlives the call, and that one is the caller-owned
-    directory's concern.
+    standard Spark iterative-algorithm trap). Each round is a
+    ``local_checkpoint`` in the caller's ``cache_scope()``: blocks live
+    in executor storage, touch no session-global setting, and round
+    k-1's snapshot is released when round k materializes, so peak
+    storage is two snapshots; the FINAL one backs the returned DataFrame
+    and is released when the caller's scope exits.
 
 The reference repo has no clustering operator; this is a BASELINE.json
 north-star extension (VERDICT r1 task #2; two-phase upgrade r2 task #3).
@@ -94,7 +90,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
                          id_col: str = "doc_id", src: str = "doc_a",
                          dst: str = "doc_b",
                          max_rounds: int = MAX_CC_ROUNDS,
-                         checkpoint_dir: str | None = None,
                          small_graph_edges: int = 100_000) -> DataFrame:
     """(id_col, cluster_id) for every vertex; cluster_id = min id reachable.
 
@@ -104,50 +99,12 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
     expected — a 5000-vertex path converges in ~⌈log₂ n⌉, see
     tests/test_clustering.py).
 
-    ``checkpoint_dir``: when given, per-round snapshots use Spark's
-    RELIABLE checkpoint (files under the directory, survive executor
-    loss) instead of ``localCheckpoint`` — see the module docstring for
-    the trade and the file-lifecycle caveat.
-
     Snapshot lifecycle (storage hygiene at scale): round k-1's snapshot
     feeds nothing once round k is compared against it — it is freed
     immediately, keeping peak storage at TWO edge-set snapshots
     regardless of round count. The FINAL snapshot backs the returned
     DataFrame, so it lives until the caller's ``cache_scope()`` exits.
     """
-    sc = vertices.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        # setCheckpointDir is a GLOBAL SparkContext mutation: refuse to
-        # silently redirect another user's configured directory (ADVICE
-        # r3) — same dir is a no-op, no dir configured is ours to set.
-        existing = sc._jsc.sc().getCheckpointDir()
-        current = existing.get() if existing.isDefined() else None
-        if current is not None and current.rstrip("/") != checkpoint_dir.rstrip("/"):
-            raise ValueError(
-                f"connected_components: session checkpoint dir already set "
-                f"to {current!r}; refusing to override it with "
-                f"{checkpoint_dir!r} (setCheckpointDir is session-global)")
-        if current is None:
-            sc.setCheckpointDir(checkpoint_dir)
-
-    def snapshot(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is None:
-            return local_checkpoint(df)
-        return df.checkpoint(eager=True)
-
-    def release(snap: DataFrame) -> None:
-        if checkpoint_dir is None:
-            release_checkpoint(snap)
-        else:
-            # reliable checkpoint: delete round k-1's files when round k
-            # materializes (ADVICE r3 — otherwise every round's snapshot
-            # survives the whole run).
-            f = snap.rdd.getCheckpointFile()
-            if f:
-                jp = sc._jvm.org.apache.hadoop.fs.Path(f)
-                jp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(
-                    jp, True)
-
     def _is_star_forest(edge_df: DataFrame) -> bool:
         # The fixed point IS "disjoint stars rooted at each local min"
         # (edges are canonical hi > lo, so every star root is its star's
@@ -166,7 +123,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
                         "hi", "leftsemi")))
         return viol.limit(1).count() == 0
 
-    e = snapshot(
+    e = local_checkpoint(
         edges.select(F.greatest(src, dst).alias("hi"),
                      F.least(src, dst).alias("lo"))
         .filter(F.col("hi") != F.col("lo")).distinct())
@@ -212,7 +169,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
         members = sorted({v for row_ in parent.items() for v in row_}
                          | set(parent))
         label_rows = [(v, find(v)) for v in members]
-        release(e)
+        release_checkpoint(e)
         spark = vertices.sparkSession
         from pyspark.sql import types as T
         label_schema = T.StructType([T.StructField("v", id_type),
@@ -231,8 +188,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
     for _ in range(max_rounds + 1):
         converged = _is_star_forest(e)
         if not converged:
-            nxt = snapshot(_small_star(_large_star(e)))
-            release(e)
+            nxt = local_checkpoint(_small_star(_large_star(e)))
+            release_checkpoint(e)
             e = nxt
         if converged:
             # Star forest: every non-root appears exactly once as hi
@@ -257,7 +214,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
             return (labels.unionByName(singletons)
                     .select(F.col("v").alias(id_col),
                             F.col("label").alias("cluster_id")))
-    release(e)
+    release_checkpoint(e)
     raise RuntimeError(
         f"connected_components: star fixed point not reached after "
         f"{max_rounds} large-star/small-star rounds (raise max_rounds)")

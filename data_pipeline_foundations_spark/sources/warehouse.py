@@ -4,9 +4,8 @@ The reference rebuilds a DuckDB warehouse nightly: ``CREATE OR REPLACE
 TABLE t AS SELECT * FROM '<file>.parquet'`` over a 13-entry file→table map
 (create_duckdb.py:65-79, 96-99), then drops tables absent from the map
 (create_duckdb.py:82-88). The surrounding ops machinery has Spark twins
-too: pre-rebuild backup + retention (S8, :func:`backup_before_rebuild`),
-lock-retry connects (S9, sources/resilience.py), and the Metabase schema
-sync (S13, sources/metabase.py).
+too: lock-retry connects (S9, sources/resilience.py) and the Metabase
+schema sync (S13, sources/metabase.py).
 
 The reference copies every table because a ``.duckdb`` file is a single
 store. Spark's catalog can point a table at parquet where it lies, so the
@@ -15,6 +14,11 @@ files byte for byte through the Hadoop FS into the table's next snapshot
 version under ``<spark.sql.warehouse.dir>/_snapshots/<db>/<table>/
 v_NNNNNNNN`` and re-points the catalog table at it. The only Spark work
 left is the parquet schema read of the table creation.
+
+The reference backs the ``.duckdb`` file up before each rebuild and keeps
+the newest backup (S8, create_duckdb.py:27-38). Here the build keeps the
+previous snapshot version of every table, which
+``read_versioned(spark, <root>, version=N - 1)`` reads back.
 """
 
 from __future__ import annotations
@@ -191,76 +195,6 @@ def _hive_partition_subdirs(spark: SparkSession, path: str) -> list[str]:
         if st.isDirectory() and "=" in name and not name.startswith(("_", ".")):
             out.append(st.getPath().toString())
     return out
-
-
-def compact_parquet_dir(spark: SparkSession, path: str, *,
-                        target_file_bytes: int = 128 << 20) -> int:
-    """Small-file compaction: rewrite ``path`` into
-    ceil(total_bytes / target_file_bytes) files. Returns the new file
-    count (0 = nothing to do).
-
-    The 100 TB maintenance op behind every streaming/incremental sink:
-    per-trigger appends leave thousands of KB-sized files whose open/seek
-    overhead eventually dominates scans. Sizing comes from ONE Hadoop FS
-    listing (no data read); the rewrite is a distributed
-    read→repartition→write into a sibling temp dir, then a directory
-    swap.
-
-    Hive-partitioned directories (``key=value`` subdirs) are compacted
-    PER PARTITION — each leaf keeps its layout, so partition pruning
-    still works afterwards (a whole-dir rewrite would silently flatten
-    the keys into data columns; ADVICE r3).
-
-    The swap (delete + two renames) is NOT atomic — a reader racing the
-    swap can see a missing directory. Batch maintenance windows (this
-    op's use case) tolerate it; for concurrent readers use the
-    versioned-snapshot layout (:func:`write_versioned` /
-    :func:`compact_versioned`), whose commit is a metadata flip and
-    whose readers never observe a partial directory.
-
-    Routing (VERDICT r8 #5): when ``path`` IS a versioned root (it has
-    committed ``v_*`` snapshots), compaction automatically goes through
-    the atomic versioned publish instead of the directory swap — a new
-    version dir is written, the _SUCCESS marker flips "current", and
-    old versions prune with the in-flight-reader retention contract.
-    Pinned by tests/test_sources.py::
-    test_concurrent_reader_survives_compaction.
-    """
-    import math
-
-    if list_versions(spark, path):
-        new_dir = compact_versioned(spark, path,
-                                    target_file_bytes=target_file_bytes)
-        return dir_stats(spark, new_dir)[0] if new_dir else 0
-
-    parts = _hive_partition_subdirs(spark, path)
-    if parts:
-        return sum(compact_parquet_dir(
-            spark, sub, target_file_bytes=target_file_bytes)
-            for sub in parts)
-
-    n_files, total = dir_stats(spark, path)
-    if n_files == 0:
-        return 0
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    if n_out >= n_files:        # already at/below target granularity
-        return n_files
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._compact_tmp")
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._compact_old")
-    (spark.read.parquet(path).repartition(n_out)
-     .write.mode("overwrite").parquet(tmp.toString()))
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(p, old):
-        raise IOError(f"compact: could not stage {path} aside")
-    if not fs.rename(tmp, p):
-        fs.rename(old, p)       # roll back: restore the original layout
-        raise IOError(f"compact: could not swap in compacted {path}")
-    fs.delete(old, True)
-    return dir_stats(spark, path)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -587,15 +521,21 @@ def replicate_incremental(spark: SparkSession, src_root: str,
 def compact_versioned(spark: SparkSession, root: str, *,
                       target_file_bytes: int = 128 << 20,
                       keep_versions: int = 2) -> str | None:
-    """Compact the CURRENT snapshot into a NEW version — the transactional
-    twin of :func:`compact_parquet_dir`: readers racing the compaction see
-    the old snapshot or the new one, never a partial directory, because
-    the flip is the new version's _SUCCESS marker. Old versions beyond
-    ``keep_versions`` are pruned afterwards (they only become unreachable
-    AFTER the new commit, so an in-flight reader of the previous current
-    version needs it retained — keep_versions >= 2). A Hive-partitioned
-    version keeps its ``key=value`` layout.
-    Returns the new version dir, or None if nothing to do."""
+    """Small-file compaction: rewrite the CURRENT snapshot into
+    ceil(total_bytes / target_file_bytes) files as a NEW version. Readers
+    racing the compaction see the old snapshot or the new one, never a
+    partial directory, because the flip is the new version's _SUCCESS
+    marker. Old versions beyond ``keep_versions`` are pruned afterwards
+    (they only become unreachable AFTER the new commit, so an in-flight
+    reader of the previous current version needs it retained —
+    keep_versions >= 2). A Hive-partitioned version keeps its
+    ``key=value`` layout. Returns the new version dir, or None if nothing
+    to do.
+
+    Only a versioned root is compacted. A plain output directory may be a
+    streaming file sink, whose ``_spark_metadata`` log lists its files:
+    a rewrite in place loses that log and the next read of the sink
+    fails."""
     import math
 
     if keep_versions < 2:
@@ -663,68 +603,24 @@ def squash_versioned(spark: SparkSession, root: str, *,
     return new_dir
 
 
-def backup_before_rebuild(spark: SparkSession, path: str, *,
-                          keep: int = 1, now=None) -> str | None:
-    """S8 — snapshot a warehouse directory before overwriting it, then
-    prune old backups (reference create_duckdb.py:27-41: timestamped
-    ``*_backup_YYYYmmdd_HHMMSS`` copy of the .duckdb file, keep only the
-    newest ``keep`` backups). The Spark twin copies the table's parquet
-    DIRECTORY through the Hadoop FS API, so it works unchanged on
-    HDFS/S3A/local and never routes data through the driver.
-
-    Returns the backup dir (None when ``path`` does not exist yet —
-    first build has nothing to back up). ``now`` injects the timestamp
-    for tests (SURVEY.md D7 discipline).
-
-    Scale note: a backup is an FS-level copy, O(data) on local disks but
-    server-side (and often async) on object stores; the versioned-
-    snapshot API above is the zero-copy alternative when the table is
-    already written through it — this helper exists for plain
-    directory-layout tables, matching the reference's semantics exactly.
-    """
-    import datetime as _dt
-
-    fs, p, jvm = _fs(spark, path)
-    if not fs.exists(p):
-        return None
-    ts = (now or _dt.datetime.now()).strftime("%Y%m%d_%H%M%S")
-    backup = jvm.org.apache.hadoop.fs.Path(f"{path}_backup_{ts}")
-    jvm.org.apache.hadoop.fs.FileUtil.copy(
-        fs, p, fs, backup, False, spark._jsc.hadoopConfiguration())
-    # prune: newest `keep` survive (reference keeps exactly 1)
-    parent = p.getParent()
-    prefix = p.getName() + "_backup_"
-    backups = sorted(
-        (st.getPath() for st in fs.listStatus(parent)
-         if st.isDirectory() and st.getPath().getName().startswith(prefix)),
-        key=lambda bp: bp.getName(), reverse=True)
-    for old in backups[keep:]:
-        fs.delete(old, True)
-    return backup.toString()
-
-
 def rebuild_warehouse(spark: SparkSession, table_map: dict[str, str], *,
                       database: str = "default",
-                      backup_path: str | None = None,
-                      backup_keep: int = 1,
                       metabase=None,
-                      metabase_auth: tuple[str, str, str | int] | None = None,
-                      now=None) -> dict:
+                      metabase_auth: tuple[str, str, str | int] | None = None
+                      ) -> dict:
     """The reference's full nightly rebuild flow (create_duckdb.py end to
-    end) as one call: S8 backup + retention → S6 load the file→table map
-    → S7 drop stale tables → S13 poke Metabase. The S9 lock-retry lives
-    at the JDBC read edge (readers.read_jdbc(retries=)) — Spark's
-    metastore has no single-writer file lock to retry.
+    end) as one call: S6 load the file→table map, keeping each table's
+    previous version (S8) → S7 drop stale tables → S13 poke Metabase.
+    The S9 lock-retry lives at the JDBC read edge
+    (readers.read_jdbc(retries=)) — Spark's metastore has no
+    single-writer file lock to retry.
 
     ``metabase`` is a MetabaseClient (sources/metabase.py) and
     ``metabase_auth`` its (username, password, database_id); the sync is
     log-and-continue by contract, so a BI failure never fails the build.
-    Returns {"backup": dir|None, "loaded": [...], "dropped": [...],
-    "metabase_synced": bool|None}.
+    Returns {"loaded": [...], "dropped": [...], "metabase_synced":
+    bool|None}.
     """
-    backup = (backup_before_rebuild(spark, backup_path, keep=backup_keep,
-                                    now=now)
-              if backup_path else None)
     loaded = build_warehouse(spark, table_map, database=database)
     dropped = reconcile_catalog(spark, set(table_map.values()),
                                 database=database)
@@ -732,5 +628,4 @@ def rebuild_warehouse(spark: SparkSession, table_map: dict[str, str], *,
     if metabase is not None and metabase_auth is not None:
         user, password, db_id = metabase_auth
         synced = metabase.sync_schema(user, password, db_id)
-    return {"backup": backup, "loaded": loaded, "dropped": dropped,
-            "metabase_synced": synced}
+    return {"loaded": loaded, "dropped": dropped, "metabase_synced": synced}

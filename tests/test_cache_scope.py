@@ -23,8 +23,10 @@ from tests.test_oracle_parity import assert_frames_match
 
 def test_only_caching_module_persists():
     """The scope is the one lifetime: no other module of the package
-    persists, caches or locally checkpoints by hand."""
-    raw = re.compile(r"\.(persist|unpersist|localCheckpoint)\(|\.cache\(\)")
+    persists, caches or checkpoints by hand, nor sets the session-global
+    checkpoint directory."""
+    raw = re.compile(r"\.(persist|unpersist|localCheckpoint|checkpoint)\("
+                     r"|\.cache\(\)|setCheckpointDir\(")
     own = Path(caching.__file__)
     offenders = [
         f"{path.relative_to(own.parents[1])}:{m.group(0)}"

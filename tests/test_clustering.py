@@ -63,22 +63,6 @@ def test_path_graph_converges_in_log_rounds(spark):
         assert comp.count() == n
 
 
-def test_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir= switches per-round snapshots to Spark's reliable
-    checkpoint: same labels, and the checkpoint files actually land in
-    the caller-owned directory (they survive executor death — the
-    documented trade vs localCheckpoint)."""
-    import os
-    ckpt = str(tmp_path / "cc_ckpt")
-    comp = connected_components(
-        _docs(spark, 5), _pairs(spark, [(0, 1), (1, 2), (3, 4)]),
-        checkpoint_dir=ckpt)
-    got = {r.doc_id: r.cluster_id for r in comp.collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
-    found = [f for _, _, fs in os.walk(ckpt) for f in fs]
-    assert found, "no reliable checkpoint files written"
-
-
 def test_dedup_clusters_canonical_and_sizes(spark):
     out = dedup_clusters(_docs(spark, 5),
                          _pairs(spark, [(0, 3), (3, 4)]))

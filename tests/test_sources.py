@@ -472,56 +472,6 @@ def test_sheets_rest_sink(spark, fake_sheets):
     assert {c[2] for c in _FakeSheets.calls} == {"Bearer tok9"}
 
 
-def test_compact_parquet_dir(spark, tmp_path):
-    """Small-file compaction: 32 tiny files collapse to the size-derived
-    target count, rows and values survive byte-identical, and an
-    already-compact dir is left untouched."""
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        compact_parquet_dir, dir_stats,
-    )
-    path = str(tmp_path / "frag")
-    spark.range(10_000).selectExpr("id", "id * 2 AS v") \
-        .repartition(32).write.parquet(path)
-    n_before, total = dir_stats(spark, path)
-    assert n_before == 32
-    before = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
-
-    n_after = compact_parquet_dir(spark, path,
-                                  target_file_bytes=max(total, 1))
-    assert n_after < n_before
-    assert {(r.id, r.v)
-            for r in spark.read.parquet(path).collect()} == before
-    # idempotent: already at/below target granularity -> no rewrite
-    assert compact_parquet_dir(spark, path,
-                               target_file_bytes=max(total, 1)) == n_after
-
-
-def test_compact_preserves_hive_partitions(spark, tmp_path):
-    """ADVICE r3: a Hive-partitioned dir must be compacted per partition —
-    key=value subdirs survive, values survive, and the partition column is
-    still a PRUNABLE partition column (not silently flattened into data)."""
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        compact_parquet_dir, dir_stats,
-    )
-    path = str(tmp_path / "part")
-    (spark.range(8_000).selectExpr("id", "id % 3 AS k", "id * 2 AS v")
-     .repartition(16).write.partitionBy("k").parquet(path))
-    before = {(r.id, r.k, r.v) for r in spark.read.parquet(path).collect()}
-    _, total = dir_stats(spark, path)
-
-    compact_parquet_dir(spark, path, target_file_bytes=max(total, 1))
-
-    import os
-    subdirs = {d for d in os.listdir(path) if d.startswith("k=")}
-    assert subdirs == {"k=0", "k=1", "k=2"}
-    after_df = spark.read.parquet(path)
-    assert {(r.id, r.k, r.v) for r in after_df.collect()} == before
-    # partition pruning still applies: the filtered scan reads one subdir
-    plan = (after_df.filter("k = 1")._jdf.queryExecution()
-            .executedPlan().toString())
-    assert "k=1" in plan.replace("\n", "") or plan.count("PartitionFilters") > 0
-
-
 def test_versioned_snapshot_commit_and_compact(spark, tmp_path):
     """Versioned layout: commit is the _SUCCESS marker flip — a reader
     resolving during/after compaction sees a complete old or new snapshot,
@@ -554,6 +504,9 @@ def test_versioned_snapshot_commit_and_compact(spark, tmp_path):
     assert {(r.id, r.v) for r in read_versioned(spark, root).collect()} == before
     # old snapshot still readable AS COMMITTED DATA (reader raced the flip)
     assert {(r.id, r.v) for r in spark.read.parquet(v1).collect()} == before
+    # idempotent: already at/below target granularity -> no new version
+    assert compact_versioned(spark, root, target_file_bytes=1 << 30) is None
+    assert current_version_dir(spark, root) == v2
 
     # a second compaction round prunes v1 (keep_versions=2 keeps v2 + v3)
     v3 = write_versioned(
@@ -567,11 +520,10 @@ def test_versioned_snapshot_commit_and_compact(spark, tmp_path):
 
 def test_compact_versioned_keeps_hive_partitions(spark, tmp_path):
     """A Hive-partitioned version compacts into a version with the same
-    ``key=value`` directory chain, both directly and routed through
-    compact_parquet_dir, instead of a flat one."""
+    ``key=value`` directory chain instead of a flat one, and the key is
+    still a prunable partition column, not flattened into the data."""
     from data_pipeline_foundations_spark.sources.warehouse import (
-        compact_parquet_dir, compact_versioned, read_versioned,
-        write_versioned,
+        compact_versioned, read_versioned, write_versioned,
     )
     root = str(tmp_path / "vpart")
     df = (spark.range(600).selectExpr("id", "id % 3 AS k", "id % 2 AS j")
@@ -589,21 +541,20 @@ def test_compact_versioned_keeps_hive_partitions(spark, tmp_path):
     assert new_dir is not None and layout(new_dir) == full
     assert sorted(map(tuple, read_versioned(spark, root)
                       .select("id", "k", "j").collect())) == want
-    write_versioned(spark, root, read_versioned(spark, root).repartition(8),
-                    partition_by=["k", "j"])
-    assert compact_parquet_dir(spark, root, target_file_bytes=1 << 30) == 6
-    assert sorted(map(tuple, read_versioned(spark, root)
-                      .select("id", "k", "j").collect())) == want
+    # partition pruning still applies: the filter is a partition filter
+    import re
+    plan = re.sub(r"#\d+", "", read_versioned(spark, root).filter("k = 1")
+                  ._jdf.queryExecution().executedPlan().toString())
+    assert "PartitionFilters: [isnotnull(k), (k = 1)]" in plan
 
 
 def test_concurrent_reader_survives_compaction(spark, tmp_path):
     """VERDICT r8 #5 pin: a reader whose plan was bound BEFORE compaction
     collects its rows intact DURING/AFTER the publish (the versioned flip
     never half-swaps a directory, and keep_versions retains its
-    snapshot), and compact_parquet_dir on a versioned root routes
-    through that atomic publish instead of the rename swap."""
+    snapshot)."""
     from data_pipeline_foundations_spark.sources.warehouse import (
-        compact_parquet_dir, current_version_dir, dir_stats, list_versions,
+        compact_versioned, current_version_dir, dir_stats, list_versions,
         read_versioned, write_versioned,
     )
     root = str(tmp_path / "vstore")
@@ -615,12 +566,10 @@ def test_concurrent_reader_survives_compaction(spark, tmp_path):
     # pre-compaction current version, collected only after the publish
     in_flight = read_versioned(spark, root)
 
-    # compaction entry point on a versioned root = atomic versioned
-    # publish (no rename swap anywhere near the reader's directory)
-    n_files = compact_parquet_dir(spark, root, target_file_bytes=1 << 30)
-    v2 = current_version_dir(spark, root)
+    v2 = compact_versioned(spark, root, target_file_bytes=1 << 30)
     assert v2 is not None and v2 != v1
-    assert n_files == dir_stats(spark, v2)[0] and n_files < 24
+    assert current_version_dir(spark, root) == v2
+    assert dir_stats(spark, v2)[0] < 24
 
     # the in-flight reader still drains its full snapshot...
     assert {(r.id, r.g) for r in in_flight.collect()} == expect
@@ -632,34 +581,8 @@ def test_concurrent_reader_survives_compaction(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# S8/S9/S12/S13 — backup+retention, lock-retry, credentials, Metabase sync
+# S9/S12/S13 — lock-retry, credentials, Metabase sync
 # ---------------------------------------------------------------------------
-
-
-def test_backup_before_rebuild_and_retention(spark, tmp_path):
-    """S8: a rebuild snapshots the existing table dir with a timestamp
-    suffix and prunes to the newest `keep` backups; the backup is a
-    readable parquet copy (reference create_duckdb.py:27-41)."""
-    import datetime as dt
-
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        backup_before_rebuild,
-    )
-    path = str(tmp_path / "dwh_table")
-    assert backup_before_rebuild(spark, path) is None  # first build: nothing
-    spark.range(5).write.parquet(path)
-    t1 = dt.datetime(2026, 8, 14, 1, 0, 0)
-    b1 = backup_before_rebuild(spark, path, now=t1)
-    assert b1 and b1.endswith("dwh_table_backup_20260814_010000")
-    assert spark.read.parquet(b1).count() == 5
-    spark.range(7).write.mode("overwrite").parquet(path)
-    b2 = backup_before_rebuild(spark, path,
-                               now=dt.datetime(2026, 8, 14, 2, 0, 0))
-    import os
-    backups = sorted(n for n in os.listdir(tmp_path)
-                     if n.startswith("dwh_table_backup_"))
-    assert backups == ["dwh_table_backup_20260814_020000"]  # keep=1 pruned b1
-    assert spark.read.parquet(b2).count() == 7
 
 
 def test_connect_with_retry_semantics():
@@ -808,35 +731,35 @@ def test_service_account_resolution(tmp_path):
 
 
 def test_rebuild_warehouse_end_to_end(spark, tmp_path, fake_metabase):
-    """The reference's nightly flow composed: backup+retention, map load,
-    stale-table drop, Metabase poke — one call, every step observable."""
-    import datetime as dt
-
+    """The reference's nightly flow composed: map load, stale-table drop,
+    Metabase poke — one call, every step observable. A second rebuild
+    keeps the first one's version readable (S8: keep the newest
+    backup)."""
     from data_pipeline_foundations_spark.sources.metabase import (
         MetabaseClient,
     )
     from data_pipeline_foundations_spark.sources.warehouse import (
-        rebuild_warehouse,
+        read_versioned, rebuild_warehouse,
     )
     src = str(tmp_path / "in.parquet")
     spark.range(4).write.parquet(src)
     stale_name = "test_rw_stale"
     spark.range(1).write.mode("overwrite").saveAsTable(stale_name)
-    backup_root = str(tmp_path / "dwh_dir")
-    spark.range(9).write.parquet(backup_root)  # pre-existing "warehouse"
 
     out = rebuild_warehouse(
         spark, {src: "test_rw_fact"},
-        backup_path=backup_root,
         metabase=MetabaseClient(fake_metabase),
-        metabase_auth=("analyst", "pw1", 7),
-        now=dt.datetime(2026, 8, 14, 3, 0, 0))
+        metabase_auth=("analyst", "pw1", 7))
     try:
         assert out["loaded"] == ["test_rw_fact"]
         assert stale_name in out["dropped"]
-        assert out["backup"].endswith("dwh_dir_backup_20260814_030000")
         assert out["metabase_synced"] is True
         assert spark.table("test_rw_fact").count() == 4
+        spark.range(10, 16).write.mode("overwrite").parquet(src)
+        rebuild_warehouse(spark, {src: "test_rw_fact"})
+        assert _ids(spark.table("test_rw_fact")) == list(range(10, 16))
+        root = os.path.dirname(_table_dir(spark, "test_rw_fact"))
+        assert _ids(read_versioned(spark, root, version=1)) == list(range(4))
     finally:
         spark.sql("DROP TABLE IF EXISTS test_rw_fact")
 
