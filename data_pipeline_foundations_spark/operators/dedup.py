@@ -250,8 +250,7 @@ def with_simhash(df: DataFrame, text_col: str, bits: int = SIMHASH_BITS,
     eff = min(bits, SIMHASH_HASH_BITS)
     # ONE F.expr parse for the token-hash stage (r14, the shingle-tree
     # template): the lambda-HOF form cost a Py4J lambda registration per
-    # call; identifier quoted like with_shingle_hashes. sameResult pin
-    # vs the lambda form in tests/test_r14_optimizations.py.
+    # call; identifier quoted like with_shingle_hashes.
     q = sql_ident(text_col)
     d = df.withColumn(
         "_hs", F.expr(f"transform(split({q}, ' '), t -> {md5_long_sql('t')})"))

@@ -1139,9 +1139,9 @@ def _ivfpq_artifacts(emb: DataFrame, id_col: str, vec_col: str, dim: int,
                      pq_seed: int,
                      n_queries: int = 0) -> tuple[list, list, list]:
     """(ivf_rows, pq_rows, qrows) in ONE non-AQE collect job — the
-    shared model build of build_ivfpq_model and the inline
-    ivfpq_rerank_topk path. The IVF half uses the one-aggregate
-    columnar-sums shape (_ivf_model_rows' reasoning: the shuffle
+    shared model build of build_ivfpq_model and ivfpq_rerank_topk.
+    The IVF half uses the one-aggregate columnar-sums shape
+    (_ivf_model_rows' reasoning: the shuffle
     carries k_clusters×(dim+1) longs at any corpus size, centroids
     assembled driver-side with the oracle's IEEE casts); the PQ half
     keeps the posexplode build (the columnar variant was measured
@@ -1201,10 +1201,10 @@ def build_ivfpq_model(emb: DataFrame, *, id_col: str = "vec_id",
     dict (KBs: k_clusters centroid rows + m*ks codebook rows, plus the
     params that shaped them) — the build-once / search-many split every
     production vector index exposes (FAISS's train() vs search()).
-    Pass the dict to ivfpq_rerank_topk(model=...) to skip the corpus
-    codebook passes on every query batch; results are bit-identical to
-    the build-inline path (same collected rows), pinned by
-    tests/test_similarity.py."""
+    The dict feeds encode_corpus (the persisted codes table) and
+    pq_search_from_codes, so every later search scans codes with these
+    artifacts instead of re-training against the corpus; its rows are
+    the ones ivfpq_rerank_topk collects inline."""
     ivf_rows, pq_rows, _ = _ivfpq_artifacts(
         emb, id_col, vec_col, dim, k_clusters, m, ks, ivf_seed, pq_seed)
     return {
@@ -1220,8 +1220,7 @@ def ivfpq_rerank_topk(emb: DataFrame, *, id_col: str = "vec_id",
                       k_clusters: int = 16, nprobe: int = 6, m: int = PQ_M,
                       ks: int = PQ_KS, n_queries: int = 10,
                       r_cand: int = 20, k: int = 5, ivf_seed: int = 3,
-                      pq_seed: int = 11,
-                      model: dict | None = None) -> DataFrame:
+                      pq_seed: int = 11) -> DataFrame:
     """IVF-PQ search with exact re-rank — the composite every production
     vector index runs (Jégou et al. TPAMI'11; Johnson et al., "Billion-
     scale similarity search with GPUs", 2017 — the IVFADC + refine
@@ -1255,36 +1254,17 @@ def ivfpq_rerank_topk(emb: DataFrame, *, id_col: str = "vec_id",
     from pyspark.sql import Window as W
 
     block = dim // m
-    if model is not None:
-        want = {"dim": dim, "k_clusters": k_clusters, "m": m, "ks": ks,
-                "ivf_seed": ivf_seed, "pq_seed": pq_seed}
-        if model["params"] != want:
-            raise ValueError(
-                f"ivfpq_rerank_topk: prebuilt model params {model['params']}"
-                f" do not match the requested {want}")
-        ivf_rows, pq_rows = model["ivf_rows"], model["pq_rows"]
-        # query vectors still collect per search call — a pushed-filter
-        # point scan; the corpus codebook passes are skipped entirely
-        qrows = sorted(({id_col: int(r[id_col]), "sv": list(r["sv"]),
-                         "n2": int(r["n2"])}
-                        for r in (emb.filter(F.col(id_col) < n_queries)
-                                  .select(F.col(id_col),
-                                          int_vec(vec_col).alias("sv"))
-                                  .withColumn("n2", idot("sv", "sv"))
-                                  .collect())),
-                       key=lambda r: r[id_col])
-    else:
-        # Build-inline: KB-sized model collect (documented driver-side
-        # broadcast equivalent) — k_clusters IVF centroid rows, m·ks PQ
-        # codebook rows, and n_queries query vectors, unioned into ONE
-        # non-AQE job (AQE would materialize each tiny exchange as its
-        # own scheduler roundtrip — measured ~5 jobs for <100 KB); the
-        # IVF half is the one-aggregate columnar-sums build
-        # (_ivfpq_artifacts / _ivf_model_rows — no posexplode, the
-        # shuffle carries k_clusters×(dim+1) longs at any corpus size).
-        ivf_rows, pq_rows, qrows = _ivfpq_artifacts(
-            emb, id_col, vec_col, dim, k_clusters, m, ks, ivf_seed,
-            pq_seed, n_queries=n_queries)
+    # KB-sized model collect (documented driver-side broadcast
+    # equivalent) — k_clusters IVF centroid rows, m·ks PQ codebook rows,
+    # and n_queries query vectors, unioned into ONE non-AQE job (AQE
+    # would materialize each tiny exchange as its own scheduler
+    # roundtrip — measured ~5 jobs for <100 KB); the IVF half is the
+    # one-aggregate columnar-sums build (_ivfpq_artifacts /
+    # _ivf_model_rows — no posexplode, the shuffle carries
+    # k_clusters×(dim+1) longs at any corpus size).
+    ivf_rows, pq_rows, qrows = _ivfpq_artifacts(
+        emb, id_col, vec_col, dim, k_clusters, m, ks, ivf_seed, pq_seed,
+        n_queries=n_queries)
     qids = [int(r[id_col]) for r in qrows]
     qvecs = {int(r[id_col]): (list(r["sv"]), int(r["n2"])) for r in qrows}
     # probe selection driver-side — same derived-float cosine and the
@@ -1442,69 +1422,10 @@ def oracle_ivfpq_rerank_sql(*, dim: int = 64, k_clusters: int = 16,
 # ---------------------------------------------------------------------------
 # Semantic deduplication — IVF clusters → within-cluster pairs → components
 # ---------------------------------------------------------------------------
-_AUTO_ROUTE_MIN_K = 64  # below this, flat O(n·k·d) assignment is cheap
-#                         enough that routing buys nothing
-_ROUTE_AGREEMENT_MIN = 0.95  # sample flat-vs-routed agreement required
-#                              before the AUTO path turns routing on
-_ROUTE_SAMPLE_MOD = 97  # deterministic ~1% calibration slice (id % mod)
-
-
-def _auto_route_groups(k_clusters: int, lloyd_iters: int,
-                       route_groups: int | None) -> int | None:
-    """The documented route_groups default (VERDICT r9 #2): an explicit
-    value always wins; otherwise the two-level router is a CANDIDATE at
-    ``round(sqrt(k))`` groups only when the quantizer is TRAINED
-    (lloyd_iters > 0) and k is large enough to matter (>= 64). The
-    training gate is necessary but NOT sufficient: on hash-init
-    centroids (near-orthogonal noise directions) flat/hier agreement is
-    bounded by quantizer separation at ~57%, and the r10 scale probe
-    showed training does not create separation the data lacks — on the
-    200k independent-hash-random corpus, 2 Lloyd passes on a 10% sample
-    left agreement at 15%. So the auto path additionally measures
-    flat-vs-routed agreement on a ~1% deterministic slice
-    (_sample_route_agreement) and routes only when it clears
-    _ROUTE_AGREEMENT_MIN — on separated clusters routing is exact
-    (pinned in tests/test_similarity.py) and the gate passes; on
-    noise-like corpora it falls back to flat instead of silently
-    changing which boundary pairs co-bucket.
-
-    ``route_groups=0`` is the explicit FLAT sentinel (resolves to None,
-    skipping both the auto candidate and the calibration read)."""
-    if route_groups is not None:
-        return route_groups if route_groups > 0 else None
-    if lloyd_iters > 0 and k_clusters >= _AUTO_ROUTE_MIN_K:
-        import math
-        return int(round(math.sqrt(k_clusters)))
-    return None
-
-
-def _sample_route_agreement(emb: DataFrame, id_col: str, vec_col: str,
-                            cents_rows: list, route_groups: int) -> float:
-    """Fraction of a deterministic ~1% sample (id % 97 == 0) whose flat
-    and routed cluster assignments agree — the cheap calibration read
-    behind the auto-routing gate. Cost is O(n/97 · k · d) flat kernel
-    work on the sample, ~100× less than one flat pass over the corpus;
-    an empty sample reads 0.0 (falls back to flat — safe)."""
-    from .vectorized import ivf_assign_hier_udf, ivf_assign_udf
-
-    flat = ivf_assign_udf(cents_rows, EMB_SCALE)
-    hier = ivf_assign_hier_udf(cents_rows, route_groups, EMB_SCALE)
-    r = (emb.filter(F.col(id_col) % _ROUTE_SAMPLE_MOD == 0)
-         .select(flat(F.col(vec_col)).alias("f"),
-                 hier(F.col(vec_col))["cid"].alias("h"))
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.sum(F.when(F.col("f") == F.col("h"), 1)
-                    .otherwise(0)).alias("a"))
-         .collect()[0])
-    return (r.a / r.n) if r.n else 0.0
-
-
 def semantic_dedup(emb: DataFrame, *, id_col: str = "vec_id",
                    vec_col: str = "embedding", k_clusters: int = 16,
                    threshold: float = 0.5, seed: int = 3,
-                   dim: int = 64,
-                   route_groups: int | None = None,
-                   lloyd_iters: int = 0) -> DataFrame:
+                   dim: int = 64) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., "SemDeDup:
     Data-efficient learning at web-scale through semantic deduplication",
     2023): cluster the embedding space with the deterministic IVF coarse
@@ -1531,54 +1452,15 @@ def semantic_dedup(emb: DataFrame, *, id_col: str = "vec_id",
     interpreted cosine folds per row, no int_vec HOF on the scan), and
     the bucket pair kernel quantizes in-kernel too — every stage
     bit-identical to the previous formulation (same exact-int
-    arithmetic; oracle unchanged and still green).
-
-    ``route_groups`` switches assignment to the two-level router
-    (ivf_assign_hier_udf): O(n·(g + k/g)·d) instead of O(n·k·d) — the
-    knob for corpora where constant occupancy forces k ∝ n
-    (SCALING.md round-9 part 3). Duplicates are then "same ROUTED
-    cluster + cosine ≥ t": a boundary pair routed apart is missed
-    exactly as an IVF probe miss — the recall trade the hierarchy
-    buys its 20× assignment cut with.
-
-    ``lloyd_iters`` (r10): refine the quantizer with that many
-    deterministic Lloyd passes (train_ivf_centroids) before assigning.
-    With a TRAINED quantizer and k >= 64 the two-level router becomes a
-    CANDIDATE at round(sqrt(k)) groups, and turns on only after the
-    sample calibration gate clears: flat-vs-routed agreement measured
-    on the deterministic ~1% id-slice must reach 95%
-    (_sample_route_agreement — the r10 scale probe showed training
-    does not create separation the data lacks, so the gate, not the
-    training, is what makes the default safe). Pass route_groups
-    explicitly to override either way; the explicit path never pays
-    the calibration read."""
+    arithmetic; oracle unchanged and still green)."""
     from .clustering import connected_components
-    from .vectorized import (
-        bucket_pair_cosines, ivf_assign_hier_udf, ivf_assign_udf,
-    )
+    from .vectorized import bucket_pair_cosines, ivf_assign_udf
 
-    if lloyd_iters > 0:
-        cents_rows = train_ivf_centroids(
-            emb, id_col=id_col, vec_col=vec_col, k_clusters=k_clusters,
-            seed=seed, dim=dim, iters=lloyd_iters)
-    else:
-        cents_rows, _ = _ivf_model_rows(emb, id_col, vec_col, k_clusters,
-                                        seed, dim)
-    auto = route_groups is None
-    route_groups = _auto_route_groups(k_clusters, lloyd_iters, route_groups)
-    if auto and route_groups is not None and _sample_route_agreement(
-            emb, id_col, vec_col, cents_rows,
-            route_groups) < _ROUTE_AGREEMENT_MIN:
-        route_groups = None  # corpus lacks cluster separation: routing
-        #                      would silently change co-bucketing — flat
-    if route_groups is not None:
-        hier = ivf_assign_hier_udf(cents_rows, route_groups, EMB_SCALE)
-        asg = (emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
-               .withColumn("cid", hier(F.col("_v"))["cid"]))
-    else:
-        asg = (emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
-               .withColumn("cid",
-                           ivf_assign_udf(cents_rows, EMB_SCALE)(F.col("_v"))))
+    cents_rows, _ = _ivf_model_rows(emb, id_col, vec_col, k_clusters, seed,
+                                    dim)
+    asg = (emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
+           .withColumn("cid",
+                       ivf_assign_udf(cents_rows, EMB_SCALE)(F.col("_v"))))
     # one row per (vector, its single cluster) → the pair kernel sees
     # each vector exactly once; no cross-band dedup is needed
     buckets = asg.select(F.lit(0).alias("band_id"),
@@ -1912,8 +1794,8 @@ def save_ivfpq_model(spark, model: dict, path: str) -> None:
 
 
 def load_ivfpq_model(spark, path: str) -> dict:
-    """Inverse of save_ivfpq_model; the loaded dict feeds
-    ivfpq_rerank_topk(model=...) unchanged (round-trip pinned by
+    """Inverse of save_ivfpq_model; the loaded dict feeds encode_corpus
+    and pq_search_from_codes unchanged (round-trip pinned by
     tests/test_similarity.py)."""
     import json as _json
 
@@ -1933,28 +1815,16 @@ def load_ivfpq_model(spark, path: str) -> dict:
 
 
 def encode_corpus(emb: DataFrame, model: dict, *, id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  route_groups: int | None = None) -> DataFrame:
+                  vec_col: str = "embedding") -> DataFrame:
     """(id, cid, codes): the PERSISTED form of the IVF-PQ index — the
     coarse list id plus m PQ codes per vector (8 ints here vs dim floats:
     the byte bound that makes a 100 TB corpus searchable from a table a
     fraction of its size). One map-only pass over the corpus with both
     assignment kernels; write the result bucketed by ``cid`` and every
-    later search scans codes, never embeddings.
-
-    ``route_groups`` switches the coarse assignment to the two-level
-    router (ivf_assign_hier_udf) — the same O(n·√k·d) knob as
-    semantic_dedup's, and the one that matters most HERE: encoding is
-    the full-corpus pass of the index build, so at production list
-    counts (k ~ 10^5-10^6) flat assignment dominates the build."""
+    later search scans codes, never embeddings."""
     p = model["params"]
     block = p["dim"] // p["m"]
-    from .vectorized import ivf_assign_hier_udf, ivf_assign_udf, pq_codes_udf
-    if route_groups is not None:
-        assign = lambda c: ivf_assign_hier_udf(  # noqa: E731
-            model["ivf_rows"], route_groups)(c)["cid"]
-    else:
-        assign = ivf_assign_udf(model["ivf_rows"])
+    from .vectorized import ivf_assign_udf, pq_codes_udf
     # Stamp the code column with the params of the model that produced
     # it (ADVICE r4): column metadata survives the parquet round trip,
     # so pq_search_from_codes can refuse a codes table encoded under a
@@ -1962,7 +1832,8 @@ def encode_corpus(emb: DataFrame, model: dict, *, id_col: str = "vec_id",
     # codebook rows.
     return (scale_out(emb, 8)
             .select(F.col(id_col), int_vec(vec_col).alias("sv"))
-            .withColumn("cid", assign(F.col("sv")))
+            .withColumn("cid",
+                        ivf_assign_udf(model["ivf_rows"])(F.col("sv")))
             .withColumn("codes",
                         pq_codes_udf(model["pq_rows"], p["m"], block)
                         (F.col("sv")))

@@ -62,9 +62,7 @@ def waterfall_columns(df: DataFrame, *, principal: str = "principal",
     ``selectExpr`` call (r14 opt, the r13 shingle-tree template): the
     Column-by-Column form paid one Py4J round trip per node — ~150 per
     invocation across the eight deep output trees — while this form is
-    one round trip with JVM-side parsing. Catalyst-canonical equality
-    with the Column form (both rounding modes) is pinned by
-    tests/test_r14_optimizations.py.
+    one round trip with JVM-side parsing.
     """
     rnd = bround2_sql if half_even else round2_sql
     p, f_, lf = sql_ident(principal), sql_ident(fee), sql_ident(late_fee)

@@ -75,11 +75,10 @@ def accounting_detail(fact_loan: DataFrame) -> DataFrame:
     """The repayment detail projection (:36-104).
 
     Built as ONE ``selectExpr`` parse instead of per-node Column calls
-    (r14 opt; Catalyst-canonical equality with the Column form pinned by
-    tests/test_r14_optimizations.py). An input column named like a
-    derived one (say a fact_loan that already carries ``IssueMonth``) is
-    dropped first, so the derived column replaces it rather than being
-    appended as an ambiguous twin."""
+    (r14 opt: one Py4J round trip instead of one per node). An input
+    column named like a derived one (say a fact_loan that already
+    carries ``IssueMonth``) is dropped first, so the derived column
+    replaces it rather than being appended as an ambiguous twin."""
     d = (fact_loan
          .drop(*_DETAIL_DERIVED)
          .filter("LoanStatus != 6")

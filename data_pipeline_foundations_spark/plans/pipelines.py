@@ -35,9 +35,8 @@ def u01_waterfall_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    # One-parse string form (r14; sameResult pin vs the Column form in
-    # tests/test_r14_optimizations.py), matching waterfall_columns' own
-    # selectExpr conversion.
+    # One-parse string form (r14): one Py4J round trip instead of one per
+    # Column node, matching waterfall_columns' own selectExpr conversion.
     paid = (
         li.groupBy("l_orderkey")
         .agg(F.expr("sum(cast(floor((l_extendedprice * (1 - l_discount))"
@@ -227,7 +226,6 @@ def pl01_settlement_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def settlement_pipeline(o: DataFrame, li: DataFrame, *,
-                        cust_in_li: bool = False,
                         with_accounting_cols: bool = False) -> DataFrame:
     """The pl01 computation over caller-supplied orders/lineitem frames.
 
@@ -235,29 +233,6 @@ def settlement_pipeline(o: DataFrame, li: DataFrame, *,
     the downstream accounting pipeline (pl02) consumes — issue_date,
     tax_on_fee, tax_on_late_fee, dispute_amount — which pl01's pinned
     surface drops. Default off so pl01's schema/hash stays unchanged.
-
-    ``cust_in_li=True`` expects lineitem denormalized with ``l_custkey``
-    (the orders-side customer key carried onto each line at warehouse
-    build time) and switches the plan to the CUSTOMER-CO-PARTITIONED
-    shape: the per-order aggregate groups by (l_custkey, l_orderkey) and
-    the join keys on both columns, so a warehouse whose orders AND
-    lineitem are bucketed by customer key runs the ENTIRE pipeline —
-    aggregate, join, and the per-customer window — with ZERO shuffle
-    exchanges (HashPartitioning(custkey) satisfies every clustered
-    distribution in the plan; sorts are bucket-local). Output is
-    identical to the plain shape: o_orderkey is unique, so joining on
-    (custkey, orderkey) equals joining on orderkey when l_custkey came
-    from the same orders table. Pinned by
-    tests/test_skew_and_bucketing.py (plan has no Exchange, rows equal
-    pl01's).
-
-    Deployment settings for the Exchange-free shape (both pinned in the
-    test): ``spark.sql.sources.bucketing.autoBucketedScan.enabled=false``
-    (the auto heuristic disables bucketed reading before
-    EnsureRequirements can exploit it here) and
-    ``spark.sql.requireAllClusterKeysForCoPartition=false`` (accept both
-    join sides hash-partitioned on the custkey SUBSET of the join keys —
-    exactly the single-bucket-key / multi-key-join layout).
     """
     # The whole money-expression web is built from SQL STRINGS parsed by
     # selectExpr/F.expr (r14 opt, VERDICT r13 next #1; the r13
@@ -265,10 +240,7 @@ def settlement_pipeline(o: DataFrame, li: DataFrame, *,
     # round trip (~1 ms) per expression node — several hundred per
     # invocation, ~0.4-0.6 s of driver time on every pl01/pl02 call —
     # while a selectExpr stage is ONE round trip and the parse happens
-    # JVM-side. Catalyst-canonical equality with the old Column form is
-    # pinned by tests/test_r14_optimizations.py (sameResult over the
-    # optimized plans, both cust_in_li shapes and the accounting-cols
-    # surface).
+    # JVM-side.
     amt_cents = ("cast(floor((l_extendedprice * (1 - l_discount)) * 100.0D"
                  " + 0.5D) as bigint)")
 
@@ -279,8 +251,7 @@ def settlement_pipeline(o: DataFrame, li: DataFrame, *,
     def chan_last(flag: str) -> str:
         return f"max(CASE WHEN l_returnflag = '{flag}' THEN l_shipdate END)"
 
-    grp = ["l_custkey", "l_orderkey"] if cust_in_li else ["l_orderkey"]
-    aggs = (li.groupBy(*grp).agg(
+    aggs = (li.groupBy("l_orderkey").agg(
         F.expr(chan_sum("A")).alias("paid_a"),
         F.expr(chan_last("A")).alias("last_paid_a"),
         F.expr(chan_sum("N")).alias("paid_n"),
@@ -294,10 +265,7 @@ def settlement_pipeline(o: DataFrame, li: DataFrame, *,
 
     r2 = round2_sql
 
-    cond = (o.o_orderkey == aggs.l_orderkey)
-    if cust_in_li:
-        cond = cond & (o.o_custkey == aggs.l_custkey)
-    j = (o.join(aggs, cond, "left")
+    j = (o.join(aggs, o.o_orderkey == aggs.l_orderkey, "left")
          .selectExpr(
              "o_orderkey AS loan_id",
              "o_custkey AS customer_id",
@@ -544,8 +512,8 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = settlement_pipeline(load(spark, sf_dir, "orders"),
                                load(spark, sf_dir, "lineitem"),
                                with_accounting_cols=True)
-    # One-parse selectExpr form (r14, VERDICT r13 next #1) — sameResult
-    # pin vs the Column form in tests/test_r14_optimizations.py.
+    # One-parse selectExpr form (r14, VERDICT r13 next #1): one Py4J
+    # round trip instead of one per Column node.
     cdmx = "from_utc_timestamp({c}, 'America/Mexico_City')"
     r2 = round2_sql
     policy = "CAST(loan_id % 3 AS INT)"

@@ -732,13 +732,14 @@ def x80_trained_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py train_ivf_centroids, 2 refinement passes):
     hash-init integer-mean centroids, then per pass a max-cosine
     assignment of the whole corpus and an integer-mean recompute of
-    every live centroid (empty clusters drop). Training is what makes
-    the x79 two-level router's 6.4× assignment cut safe to default on
-    (VERDICT r9 #2): on hash-init centroids flat/hier agreement is
+    every live centroid (empty clusters drop). On hash-init centroids
+    the x79 two-level router's agreement with flat assignment is
     bounded by quantizer separation; on trained, separated centroids
-    the router is exact (pinned in tests/test_similarity.py). RNG-free
-    and exact-int throughout, so both unrolled iterations are
-    oracle-checked bit-for-bit."""
+    it is exact (pinned in tests/test_similarity.py). No operator
+    routes by default: training does not create separation the data
+    lacks (SCALING.md round-10 part 3). RNG-free and exact-int
+    throughout, so both unrolled iterations are oracle-checked
+    bit-for-bit."""
     from ..operators.similarity import trained_ivf_assign
 
     return (trained_ivf_assign(scale_out(load(spark, sf_dir, "embeddings")))

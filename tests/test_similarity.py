@@ -98,34 +98,16 @@ def test_semantic_dedup_cluster_invariants(spark, sf_dir):
         assert len(canon) == 1 and canon[0].vec_id == cid
 
 
-def test_ivfpq_prebuilt_model_matches_inline(spark, sf_dir):
-    """build_ivfpq_model + ivfpq_rerank_topk(model=...) returns exactly
-    the build-inline result (same collected artifacts feed the same
-    kernels), and a mismatched-parameter model is refused before any
-    work runs — the FAISS train()/search() split."""
-    import pytest
-
-    from data_pipeline_foundations_spark.operators.similarity import (
-        build_ivfpq_model, ivfpq_rerank_topk,
-    )
-    from data_pipeline_foundations_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    inline = sorted(map(tuple, ivfpq_rerank_topk(emb).collect()))
-    model = build_ivfpq_model(emb)
-    reused = sorted(map(tuple, ivfpq_rerank_topk(emb, model=model).collect()))
-    again = sorted(map(tuple, ivfpq_rerank_topk(emb, model=model).collect()))
-    assert inline == reused == again
-    with pytest.raises(ValueError, match="do not match"):
-        ivfpq_rerank_topk(emb, model=model, k_clusters=8)
-
-
 def test_ivfpq_model_round_trips_through_parquet(spark, sf_dir, tmp_path):
-    """save_ivfpq_model → load_ivfpq_model → search returns exactly the
-    in-memory model's results — the nightly-build artifact contract."""
+    """save_ivfpq_model → load_ivfpq_model gives a model that encodes and
+    searches exactly like the in-memory one — the nightly-build artifact
+    contract: encode_corpus writes the same (vec_id, cid, codes) rows and
+    pq_search_from_codes returns the same neighbors under either."""
+    from pyspark.sql import functions as F
+
     from data_pipeline_foundations_spark.operators.similarity import (
-        build_ivfpq_model, ivfpq_rerank_topk, load_ivfpq_model,
-        save_ivfpq_model,
+        build_ivfpq_model, encode_corpus, load_ivfpq_model,
+        pq_search_from_codes, save_ivfpq_model,
     )
     from data_pipeline_foundations_spark.tables import load
 
@@ -135,9 +117,18 @@ def test_ivfpq_model_round_trips_through_parquet(spark, sf_dir, tmp_path):
     save_ivfpq_model(spark, model, p)
     loaded = load_ivfpq_model(spark, p)
     assert loaded["params"] == model["params"]
-    a = sorted(map(tuple, ivfpq_rerank_topk(emb, model=model).collect()))
-    b = sorted(map(tuple, ivfpq_rerank_topk(emb, model=loaded).collect()))
-    assert a == b
+
+    def rows(df):
+        return sorted((r[0], r[1], tuple(r[2])) for r in df.collect())
+
+    codes_a, codes_b = encode_corpus(emb, model), encode_corpus(emb, loaded)
+    assert rows(codes_a) == rows(codes_b)
+    queries = emb.filter(F.col("vec_id") < 10)
+    a = sorted(map(tuple, pq_search_from_codes(codes_a, queries,
+                                               model).collect()))
+    b = sorted(map(tuple, pq_search_from_codes(codes_b, queries,
+                                               loaded).collect()))
+    assert a and a == b
 
 
 def test_stored_codes_search_matches_fused_kernel(spark, sf_dir):
@@ -230,51 +221,6 @@ def test_hierarchical_assignment_invariants(spark, sf_dir):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_semantic_dedup_hierarchical_route_contract(spark, sf_dir):
-    """semantic_dedup(route_groups=...) keeps the output contract —
-    same schema, min-id canonical per component, cluster_size counts —
-    while assigning through the two-level router."""
-    from data_pipeline_foundations_spark.operators.similarity import (
-        semantic_dedup,
-    )
-    from data_pipeline_foundations_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    out = semantic_dedup(emb, route_groups=4).collect()
-    assert len(out) == emb.count()
-    by_cluster = {}
-    for r in out:
-        by_cluster.setdefault(r.cluster_id, []).append(r)
-    for cid, rows in by_cluster.items():
-        assert min(r.vec_id for r in rows) == cid
-        assert all(r.cluster_size == len(rows) for r in rows)
-        assert sum(r.is_canonical for r in rows) == 1
-
-
-def test_encode_corpus_hierarchical_route(spark, sf_dir):
-    """encode_corpus(route_groups=...) produces the same schema and a
-    consistent cid-per-vector as the flat encoder, with codes
-    IDENTICAL (PQ codes don't depend on the coarse route) — only the
-    list assignment may differ by the routing approximation."""
-    from data_pipeline_foundations_spark.operators.similarity import (
-        build_ivfpq_model, encode_corpus,
-    )
-    from data_pipeline_foundations_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    model = build_ivfpq_model(emb)
-    flat = {r.vec_id: (r.cid, tuple(r.codes))
-            for r in encode_corpus(emb, model).collect()}
-    hier = {r.vec_id: (r.cid, tuple(r.codes))
-            for r in encode_corpus(emb, model, route_groups=4).collect()}
-    assert flat.keys() == hier.keys()
-    for vid in flat:
-        assert flat[vid][1] == hier[vid][1]  # codes identical
-    again = {r.vec_id: (r.cid, tuple(r.codes))
-             for r in encode_corpus(emb, model, route_groups=4).collect()}
-    assert hier == again  # deterministic
-
-
 def test_hier_router_exact_when_centroids_separate(spark):
     """The calibration claim pinned: with SEPARATED centroids (four
     orthogonal direction families) the two-level router (a) agrees
@@ -284,8 +230,9 @@ def test_hier_router_exact_when_centroids_separate(spark):
     the refinement moves every stray to its family's group. (A fully
     scattered init — one member of every family per group — leaves all
     init supers degenerate-identical and no one-step refinement can
-    recover; that is k-means init sensitivity, not router error.) The
-    ~57% flat/hier agreement on hash-init centroids is quantizer
+    recover; that is k-means init sensitivity, not router error.) This
+    pins the ivf_assign_hier_udf kernel behind x79's hierarchical_assign:
+    the ~57% flat/hier agreement on hash-init centroids is quantizer
     noise; under separation the router is exact."""
     import numpy as np
     from pyspark.sql import functions as F
@@ -333,15 +280,15 @@ def test_hier_router_exact_when_centroids_separate(spark):
 
 
 def test_lloyd_training_enables_exact_routing(spark):
-    """The r10 calibration pin (VERDICT r9 #2): on a corpus WITH cluster
-    structure (16 separated direction families, jittered), 2 passes of
-    train_ivf_centroids move the hash-init centroids onto the data and
-    the two-level router then agrees with flat assignment on >=95% of
-    vectors (measured: 100% after the first pass — on SEPARATED
-    centroids routing is exact; the ~57% agreement on hash-init
-    centroids is quantizer noise, not router error). Also pins honest
-    k-means behavior: training may drop empty clusters, and surviving
-    cids keep their init bucket labels."""
+    """Pins the x80 training kernel (train_ivf_centroids) together with
+    x79's two-level router: on a corpus WITH cluster structure (16
+    separated direction families, jittered), 2 Lloyd passes move the
+    hash-init centroids onto the data and the router then agrees with
+    flat assignment on >=95% of vectors (measured: 100% after the first
+    pass — on SEPARATED centroids routing is exact; the ~57% agreement
+    on hash-init centroids is quantizer noise, not router error). Also
+    pins honest k-means behavior: training may drop empty clusters, and
+    surviving cids keep their init bucket labels."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -407,70 +354,6 @@ def test_ivf_assign_from_model_reuse_bit_equal(spark, sf_dir):
                  ivf_assign_from_model(batch, model).collect())
     want = sorted(t for t in once if t[0] % 3 == 0)
     assert got == want
-
-
-def test_auto_route_groups_default():
-    """The documented route_groups default: explicit wins; auto-on only
-    when trained AND k >= 64, at round(sqrt(k))."""
-    from data_pipeline_foundations_spark.operators.similarity import (
-        _auto_route_groups,
-    )
-
-    assert _auto_route_groups(64, 2, None) == 8
-    assert _auto_route_groups(256, 1, None) == 16
-    assert _auto_route_groups(16, 2, None) is None     # k too small
-    assert _auto_route_groups(256, 0, None) is None    # untrained
-    assert _auto_route_groups(256, 0, 4) == 4          # explicit wins
-    assert _auto_route_groups(64, 3, 2) == 2
-    assert _auto_route_groups(256, 3, 0) is None       # explicit FLAT
-
-
-def test_semantic_dedup_trained_path_deterministic(spark, sf_dir):
-    """semantic_dedup(lloyd_iters=1) runs the trained quantizer path end
-    to end, keeps one row per vector, and is deterministic re-run to
-    re-run (the Lloyd refinement is RNG-free)."""
-    from data_pipeline_foundations_spark.operators.similarity import (
-        semantic_dedup,
-    )
-    from data_pipeline_foundations_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    a = semantic_dedup(emb, k_clusters=8, lloyd_iters=1)
-    rows_a = sorted(tuple(r) for r in a.collect())
-    assert len(rows_a) == n
-    rows_b = sorted(tuple(r) for r in
-                    semantic_dedup(emb, k_clusters=8, lloyd_iters=1).collect())
-    assert rows_a == rows_b
-
-
-def test_auto_route_gate_falls_back_on_unstructured(spark):
-    """The r10 calibration gate: on a corpus WITHOUT cluster structure
-    (independent uniform vectors — the regime the 200k scale probe
-    measured at 15% agreement even after training), the auto path's
-    sample agreement reads under the 95% bar and semantic_dedup falls
-    back to FLAT assignment: the auto result is row-identical to the
-    explicit-flat (route_groups=0) result."""
-    import numpy as np
-
-    from data_pipeline_foundations_spark.operators.similarity import (
-        _ROUTE_AGREEMENT_MIN, _sample_route_agreement, semantic_dedup,
-        train_ivf_centroids,
-    )
-
-    rng = np.random.RandomState(5)
-    rows = [(int(i), rng.uniform(-1, 1, 64).tolist()) for i in range(970)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    cents = train_ivf_centroids(emb, k_clusters=64, iters=1)
-    agree = _sample_route_agreement(emb, "vec_id", "embedding", cents, 8)
-    assert agree < _ROUTE_AGREEMENT_MIN, agree  # no separation to find
-
-    auto = sorted(tuple(r) for r in semantic_dedup(
-        emb, k_clusters=64, lloyd_iters=1).collect())
-    flat = sorted(tuple(r) for r in semantic_dedup(
-        emb, k_clusters=64, lloyd_iters=1, route_groups=0).collect())
-    assert auto == flat
 
 
 def test_hard_negatives_exclude_query_label_and_rank_correctly(spark, sf_dir):

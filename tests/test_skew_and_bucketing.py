@@ -78,60 +78,6 @@ def test_bucketed_join_has_no_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_settlement_pipeline_bucketed_twin(spark):
-    """VERDICT r4 task #5: the 100×-scale answer to pl01's two shuffle
-    stages. With orders AND a custkey-denormalized lineitem bucketed by
-    customer key, the ENTIRE settlement pipeline — per-order aggregate,
-    orders join, per-customer window — executes with ZERO shuffle
-    exchanges (HashPartitioning(custkey) satisfies the aggregate's and
-    join's clustered distributions because custkey is in every key set,
-    and the window partitions by customer exactly; only bucket-local
-    sorts remain). Output must equal the plain pl01 shape bit-for-bit."""
-    from data_pipeline_foundations_spark.plans.pipelines import (
-        settlement_pipeline,
-    )
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    li_d = li.join(o.select(F.col("o_orderkey").alias("l_orderkey"),
-                            F.col("o_custkey").alias("l_custkey")),
-                   "l_orderkey")
-    (o.write.mode("overwrite").format("parquet")
-     .bucketBy(8, "o_custkey").sortBy("o_custkey")
-     .saveAsTable("b2_orders"))
-    (li_d.write.mode("overwrite").format("parquet")
-     .bucketBy(8, "l_custkey").sortBy("l_custkey")
-     .saveAsTable("b2_lineitem"))
-    # Two configs make the co-partitioned plan legal: autoBucketedScan
-    # must not silently disable the bucketed layout, and
-    # requireAllClusterKeysForCoPartition=false lets the join accept
-    # both sides hash-partitioned on the custkey SUBSET of its
-    # (orderkey, custkey) keys — the documented deployment setting for
-    # single-key bucket layouts serving multi-key joins.
-    saved = {k: spark.conf.get(k) for k in (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition")}
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        spark.conf.set(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false")
-        res = settlement_pipeline(spark.table("b2_orders"),
-                                  spark.table("b2_lineitem"),
-                                  cust_in_li=True)
-        rows = sorted(map(tuple, res.collect()))
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan[:3000]
-        plain = sorted(map(tuple, settlement_pipeline(o, li).collect()))
-        assert rows == plain and len(rows) > 0
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        spark.sql("DROP TABLE IF EXISTS b2_orders")
-        spark.sql("DROP TABLE IF EXISTS b2_lineitem")
-
-
 def test_salted_join_rejects_outer_joins(spark, skewed):
     dim = spark.range(5).select(F.col("id").alias("k"))
     with pytest.raises(ValueError, match="inner.*left"):
