@@ -39,10 +39,31 @@ def month_trunc(col: Column | str) -> Column:
 def day_offset_threshold(col: Column | str, hours: int = 30) -> Column:
     """Midnight-of-day + N hours — the reference's 30-hour grace anchor (D5).
 
+    Wall-clock arithmetic on TIMESTAMP_NTZ, free of the session zone:
+    ``date_trunc`` would read the value in the session zone, and 30 hours
+    across a DST change would land an hour off the wall clock.
     Oracle: date_trunc('day', c) + INTERVAL '30 hours'.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.date_trunc("day", c) + F.expr(f"INTERVAL {hours} HOURS")
+    return (c.cast("date").cast("timestamp_ntz")
+            + F.expr(f"INTERVAL {hours} HOURS"))
+
+
+def micros_between(a: Column | str, b: Column | str) -> Column:
+    """Exact integer microseconds a−b of the wall clock.
+
+    On TIMESTAMP_NTZ (how Parquet naive timestamps arrive in Spark 4)
+    and DATE this is free of the session zone. ``timestampdiff`` measures
+    between local date-times, so unlike ``unix_micros`` of an LTZ cast a
+    DST change between the two values does not shift the difference by
+    an hour. (An NTZ value inside a spring-forward gap hour is the one
+    exception: the implicit LTZ cast moves it an hour on.) TIMESTAMP_LTZ
+    values are read as the session zone's wall clock. Oracle:
+    ``epoch_us(a) - epoch_us(b)``.
+    """
+    ca = F.col(a) if isinstance(a, str) else a
+    cb = F.col(b) if isinstance(b, str) else b
+    return F.timestamp_diff("MICROSECOND", cb, ca)
 
 
 def timestamp_day_diff(a: Column | str, b: Column | str) -> Column:
@@ -50,17 +71,11 @@ def timestamp_day_diff(a: Column | str, b: Column | str) -> Column:
     ``(ts1 - ts2).dt.days`` (D6), which floors toward -inf, so a −5 h
     difference is −1 day, not 0 (ADVICE r1: the previous trunc-toward-
     zero form differed on negative diffs). NOT calendar datediff.
-    Computed on exact integer microseconds, then one double division +
-    floor — the identical IEEE op sequence both engines run, so results
-    are bit-stable. (Parquet naive timestamps arrive as TIMESTAMP_NTZ in
-    Spark 4; the ltz cast under the pinned-UTC session is a no-op
-    reinterpretation that unlocks unix_micros.)
+    Computed on exact integer microseconds (:func:`micros_between`),
+    then one double division + floor — the identical IEEE op sequence
+    both engines run, so results are bit-stable in any session zone.
     """
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    us = (F.unix_micros(ca.cast("timestamp_ltz"))
-          - F.unix_micros(cb.cast("timestamp_ltz")))
-    return F.floor(us / F.lit(86400000000.0))
+    return F.floor(micros_between(a, b) / F.lit(86400000000.0))
 
 
 def oracle_timestamp_day_diff(a: str, b: str) -> str:

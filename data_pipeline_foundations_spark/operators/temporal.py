@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.datetime_ops import micros_between
+
 
 def _keys(on) -> list[str]:
     return [on] if isinstance(on, str) else list(on)
@@ -147,9 +149,7 @@ def asof_join(left: DataFrame, right: DataFrame, *, on,
                    .filter(F.col("_side") == 0))
 
     if tolerance is not None:
-        gap_ok = (F.abs(F.unix_micros(F.col("_t").cast("timestamp_ltz"))
-                        - F.unix_micros(F.col(f"_m.{right_ts}")
-                                        .cast("timestamp_ltz")))
+        gap_ok = (F.abs(micros_between("_t", f"_m.{right_ts}"))
                   <= F.lit(int(tolerance.total_seconds() * 1_000_000)))
         matched = matched.withColumn(
             "_m", F.when(gap_ok, F.col("_m")))

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.datetime_ops import micros_between
 from ..functions.text import (
     canonical_url, fingerprint, oracle_fingerprint, oracle_stopword_count,
     oracle_token_count, stopword_count, token_count, tokens, url_host,
@@ -190,9 +191,8 @@ def s02_sessionization(spark, sf_dir):
     from pyspark.sql import Window as W
     ev = load(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_us = F.unix_micros(F.lag("ts").over(w).cast("timestamp_ltz"))
-    cur_us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
-    new_session = F.when(prev_us.isNull() | (cur_us - prev_us > 1800 * 1000000), 1).otherwise(0)
+    gap_us = micros_between("ts", F.lag("ts").over(w))
+    new_session = F.when(gap_us.isNull() | (gap_us > 1800 * 1000000), 1).otherwise(0)
     run = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(W.unboundedPreceding, W.currentRow)
     return (
         ev.withColumn("session_no", F.sum(new_session).over(run).cast("long"))

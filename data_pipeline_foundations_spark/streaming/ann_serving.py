@@ -11,20 +11,16 @@ static state, not a stream-stream join, and results flow to whatever
 sink the caller's callback writes (a topic, a table, a memory list in
 tests).
 
-Two serving modes (VERDICT r4 task #7):
-
-- **Pinned index**: pass ``codes``/``model`` — every batch answers
-  against the same artifacts (the availableNow drain shape).
-- **Rolling index**: pass ``codes_root`` (a versioned-snapshot directory
-  maintained by the batch side: re-encode → ``write_versioned``) and
-  optionally ``model_path`` (a save_ivfpq_model artifact). Each batch
-  re-resolves the CURRENT committed code version (and reloads the
-  KB-sized model), so a nightly re-encode swaps into the live query
-  stream at the next micro-batch with no restart — and the snapshot
-  protocol guarantees a batch never reads a half-written code table
-  (the swap is the new version's _SUCCESS marker). The stamped model
-  params on the code column keep a codes/model mismatch a hard error,
-  not a silent wrong answer.
+One index source: ``codes_root``, a versioned-snapshot directory the
+batch side maintains (re-encode → ``write_versioned``), and
+``model_path``, a save_ivfpq_model artifact. Each batch re-resolves the
+CURRENT committed code version (and reloads the KB-sized model), so a
+nightly re-encode swaps into the live query stream at the next
+micro-batch with no restart, and the snapshot protocol guarantees a
+batch never reads a half-written code table (the swap is the new
+version's _SUCCESS marker). A pinned index is a root with one version.
+The stamped model params on the code column keep a codes/model mismatch
+a hard error, not a silent wrong answer.
 
 Batch≡stream is pinned by tests/test_streaming.py: on a closed query
 stream the served results equal operators/similarity.pq_search_from_codes
@@ -45,54 +41,31 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from .harness import start_batches
 
-def serve_pq_queries(query_stream: DataFrame, codes: DataFrame | None = None,
-                     model: dict | None = None, *, id_col: str = "vec_id",
+
+def serve_pq_queries(query_stream: DataFrame, codes_root: str,
+                     model_path: str, *, id_col: str = "vec_id",
                      vec_col: str = "embedding", k: int = 5,
                      on_result: Callable[[DataFrame, int], None],
-                     trigger_available_now: bool = True,
-                     processing_time: str | None = None,
-                     codes_root: str | None = None,
-                     model_path: str | None = None):
+                     processing_time: str | None = None):
     """Start the serving query. ``on_result(result_df, batch_id)`` runs
-    once per micro-batch with that batch's (query_id, neighbor_id, rank,
-    approx_dist) results; empty batches are skipped. Returns the started
-    StreamingQuery (caller awaits/stops it).
-
-    Index resolution: ``codes_root`` (versioned snapshot dir) takes
-    precedence over a static ``codes`` frame and is re-resolved per
-    batch; ``model_path`` likewise over ``model``. ``processing_time``
-    (e.g. ``"1 second"``) switches from the availableNow drain to a live
-    continuous trigger.
+    once per non-empty micro-batch with that batch's (query_id,
+    neighbor_id, rank, approx_dist) results, against the code version
+    current under ``codes_root`` and the model at ``model_path``.
+    Returns the started StreamingQuery (caller awaits/stops it);
+    ``processing_time`` as in harness.start_batches.
     """
-    from ..operators.similarity import pq_search_from_codes
-
-    if codes is None and codes_root is None:
-        raise ValueError("serve_pq_queries: pass codes= or codes_root=")
-    if model is None and model_path is None:
-        raise ValueError("serve_pq_queries: pass model= or model_path=")
+    from ..operators.similarity import load_ivfpq_model, pq_search_from_codes
+    from ..sources.warehouse import read_versioned
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-        if model_path is not None:
-            from ..operators.similarity import load_ivfpq_model
-            m = load_ivfpq_model(spark, model_path)
-        else:
-            m = model
-        if codes_root is not None:
-            from ..sources.warehouse import read_versioned
-            c = read_versioned(spark, codes_root)
-        else:
-            c = codes
-        result = pq_search_from_codes(c, batch_df, m,
+        result = pq_search_from_codes(read_versioned(spark, codes_root),
+                                      batch_df,
+                                      load_ivfpq_model(spark, model_path),
                                       id_col=id_col, vec_col=vec_col, k=k)
         on_result(result, batch_id)
 
-    writer = query_stream.writeStream.foreachBatch(handle)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(query_stream, handle,
+                         processing_time=processing_time)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import fingerprint
+from .harness import drain
 
 DOCS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -75,10 +76,4 @@ def run_over_dir(spark: SparkSession, docs_dir: str,
               # one file at a time keeps arrival order deterministic for
               # the batch-equivalence pin
               .selectExpr("*"))
-    q = (dedup_stream(stream)
-         .writeStream.outputMode("append")
-         .format("memory").queryName(query_name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(dedup_stream(stream), query_name)

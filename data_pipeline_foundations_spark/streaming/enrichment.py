@@ -2,10 +2,11 @@
 plans/pipelines.py; reference extract_arcus_transactions.py:9-71).
 
 Unlike the foreachBatch twins (ann_serving/quality_gate — batch engines
-re-run per micro-batch), this twin needs NO harness at all: the arcus
-enrichment is stateless column work plus two LEFT joins whose right
-sides are static dimension tables, and Structured Streaming supports
-stream⟕static left joins natively. So the twin IS the batch function —
+re-run per micro-batch through harness.start_batches), this twin needs
+no per-batch handler at all: the arcus enrichment is stateless column
+work plus two LEFT joins whose right sides are static dimension tables,
+and Structured Streaming supports stream⟕static left joins natively.
+So the twin IS the batch function —
 ``pipelines/arcus_transactions.arcus_transactions`` applied verbatim to
 a ``readStream`` transaction frame — and batch≡stream holds by
 construction (pinned in tests/test_streaming.py). That is the strongest

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .harness import drain
 from .windowed import EVENTS_SCHEMA
 
 
@@ -52,10 +53,4 @@ def run_over_dir(spark: SparkSession, events_dir: str,
                       F.col("ts").alias("w_start")))
     clicks = (stream().filter(F.col("event_type") == "click")
               .select("user_id", "ts", "value"))
-    q = (interval_join_pairs(errors, clicks)
-         .writeStream.outputMode("append")
-         .format("memory").queryName(query_name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(interval_join_pairs(errors, clicks), query_name)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import KMV_K, _bottom_k, kmv_merge, kmv_sketch
+from .harness import start_batches
 
 
 def batch_source_sketch(docs: DataFrame, *, text_col: str = "text",
@@ -53,7 +54,6 @@ def batch_source_sketch(docs: DataFrame, *, text_col: str = "text",
 def maintain_kmv_stream(doc_stream: DataFrame, store_root: str, *,
                         text_col: str = "text", strata_col: str = "source",
                         n: int = 3, k: int = KMV_K,
-                        trigger_available_now: bool = True,
                         processing_time: str | None = None):
     """Start the maintenance query: each non-empty micro-batch's sketch
     is kmv_merge'd into the versioned store at ``store_root`` (bootstrap
@@ -62,8 +62,6 @@ def maintain_kmv_stream(doc_stream: DataFrame, store_root: str, *,
     from ..sources.warehouse import list_versions, read_versioned, write_versioned
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         batch_sk = batch_source_sketch(batch_df, text_col=text_col,
                                        strata_col=strata_col, n=n, k=k)
@@ -74,9 +72,4 @@ def maintain_kmv_stream(doc_stream: DataFrame, store_root: str, *,
             merged = batch_sk
         write_versioned(spark, store_root, merged)
 
-    writer = doc_stream.writeStream.foreachBatch(handle)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(doc_stream, handle, processing_time=processing_time)

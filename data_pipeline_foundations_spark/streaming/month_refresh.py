@@ -33,45 +33,44 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from .harness import start_batches
+
 
 def _make_handler(dataset_path: str, *, month_tag_col: str = "month_tag",
                   refresh_delivered: bool = True,
                   on_written: Callable[[list[str], int], None]
                   | None = None) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body, factored out so restart-shaped tests (and
-    callers who manage their own writer/checkpoint) can mount it on any
-    writeStream."""
-    from ..operators.caching import cache_scope, tracked_persist
+    """The micro-batch body. Mount it with harness.start_batches, which
+    skips empty batches and opens the cache scope its persist lands in;
+    tests call it on a batch frame directly."""
+    from ..operators.caching import tracked_persist
     from ..pipelines.growth_data import refresh_monthly_partitions
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with cache_scope():
-            batch_df = tracked_persist(batch_df, eager=False)
-            raw_tags = [r[0] for r in
-                        batch_df.select(month_tag_col).distinct().collect()]
-            # A null tag would make sorted() raise an opaque None-vs-str
-            # TypeError and could never match the per-month equality
-            # filter below — fail loud with the actual problem instead
-            # (ADVICE r10). Cheap: reuses the collected distinct tags.
-            if any(t is None for t in raw_tags):
-                raise ValueError(
-                    f"refresh_month_stream: micro-batch {batch_id} has "
-                    f"rows with NULL {month_tag_col!r} — every row must "
-                    f"carry the month tag derived from its landing file")
-            tags = sorted(raw_tags)
-            frames = {
-                tag: batch_df.filter(batch_df[month_tag_col] == tag)
-                             .drop(month_tag_col)
-                for tag in tags
-            }
-            written = refresh_monthly_partitions(
-                batch_df.sparkSession, dataset_path, frames,
-                months_to_refresh=tags if refresh_delivered else None,
-                process_missing=True)
-            if written and on_written is not None:
-                on_written(written, batch_id)
+        batch_df = tracked_persist(batch_df, eager=False)
+        raw_tags = [r[0] for r in
+                    batch_df.select(month_tag_col).distinct().collect()]
+        # A null tag would make sorted() raise an opaque None-vs-str
+        # TypeError and could never match the per-month equality
+        # filter below — fail loud with the actual problem instead
+        # (ADVICE r10). Cheap: reuses the collected distinct tags.
+        if any(t is None for t in raw_tags):
+            raise ValueError(
+                f"refresh_month_stream: micro-batch {batch_id} has "
+                f"rows with NULL {month_tag_col!r} — every row must "
+                f"carry the month tag derived from its landing file")
+        tags = sorted(raw_tags)
+        frames = {
+            tag: batch_df.filter(batch_df[month_tag_col] == tag)
+                         .drop(month_tag_col)
+            for tag in tags
+        }
+        written = refresh_monthly_partitions(
+            batch_df.sparkSession, dataset_path, frames,
+            months_to_refresh=tags if refresh_delivered else None,
+            process_missing=True)
+        if written and on_written is not None:
+            on_written(written, batch_id)
 
     return handle
 
@@ -82,7 +81,6 @@ def refresh_month_stream(raw_stream: DataFrame, dataset_path: str, *,
                          on_written: Callable[[list[str], int], None]
                          | None = None,
                          checkpoint: str | None = None,
-                         trigger_available_now: bool = True,
                          processing_time: str | None = None):
     """Start the refresh stream.
 
@@ -98,11 +96,5 @@ def refresh_month_stream(raw_stream: DataFrame, dataset_path: str, *,
     handle = _make_handler(dataset_path, month_tag_col=month_tag_col,
                            refresh_delivered=refresh_delivered,
                            on_written=on_written)
-    writer = raw_stream.writeStream.foreachBatch(handle)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(raw_stream, handle, processing_time=processing_time,
+                         checkpoint=checkpoint)

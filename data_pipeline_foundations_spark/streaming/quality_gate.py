@@ -12,10 +12,10 @@ as ann_serving/text_retrieval: each batch is a batch computation
 against static state and the gate itself is stateless, so batch≡stream
 is exact by construction (pinned in tests/test_streaming.py).
 
-Model modes mirror ann_serving: a pinned ``weights`` frame, or a
-``model_root`` versioned-snapshot directory re-resolved per batch — a
-nightly retrain swaps in at the next micro-batch on the _SUCCESS flip,
-the rolling-model deployment shape a production filter needs.
+One model source, as in ann_serving: a ``model_root`` versioned-snapshot
+directory re-resolved per batch — a nightly retrain swaps in at the next
+micro-batch on the _SUCCESS flip, the rolling-model deployment shape a
+production filter needs (a pinned model is a root with one version).
 """
 
 from __future__ import annotations
@@ -24,36 +24,24 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from .harness import start_batches
 
-def serve_quality_gate(doc_stream: DataFrame,
-                       weights: DataFrame | None = None, *,
-                       model_root: str | None = None,
+
+def serve_quality_gate(doc_stream: DataFrame, model_root: str, *,
                        threshold: float = 0.0,
                        on_result: Callable[[DataFrame, int], None],
-                       trigger_available_now: bool = True,
                        processing_time: str | None = None):
-    """Start the gate. ``doc_stream`` carries (doc_id, text);
-    ``on_result(df, batch_id)`` receives x74's exact output shape
-    (doc_id, n_tokens, score, mean_weight, keep) per non-empty batch."""
+    """Start the gate against the (bucket, weight) table current under
+    the versioned root ``model_root``. ``doc_stream`` carries
+    (doc_id, text); ``on_result(df, batch_id)`` receives x74's exact
+    output shape (doc_id, n_tokens, score, mean_weight, keep) per
+    non-empty batch. ``processing_time`` as in harness.start_batches."""
     from ..plans.extensions import classifier_score_with_weights
-
-    if weights is None and model_root is None:
-        raise ValueError("serve_quality_gate: pass weights= or model_root=")
+    from ..sources.warehouse import read_versioned
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if model_root is not None:
-            from ..sources.warehouse import read_versioned
-            w = read_versioned(batch_df.sparkSession, model_root)
-        else:
-            w = weights
+        w = read_versioned(batch_df.sparkSession, model_root)
         on_result(classifier_score_with_weights(
             batch_df, w, threshold=threshold), batch_id)
 
-    writer = doc_stream.writeStream.foreachBatch(handle)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(doc_stream, handle, processing_time=processing_time)

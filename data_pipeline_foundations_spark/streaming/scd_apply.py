@@ -27,12 +27,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from .harness import start_batches
+
 
 def apply_scd2_stream(event_stream: DataFrame, dim_root: str, *,
                       key: str, tracked: list[str], eff_col: str = "eff",
                       seq_col: str = "seq",
                       on_commit: Callable[[str, int], None] | None = None,
-                      trigger_available_now: bool = True,
                       processing_time: str | None = None):
     """Start the maintainer. ``event_stream`` carries
     (key, *tracked, eff_col, seq_col); each non-empty micro-batch
@@ -42,8 +43,6 @@ def apply_scd2_stream(event_stream: DataFrame, dim_root: str, *,
     from ..sources.warehouse import current_version_dir, write_versioned
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if current_version_dir(spark, dim_root) is None:
             merged = scd2_from_events(batch_df, key=key, tracked=tracked,
@@ -58,9 +57,5 @@ def apply_scd2_stream(event_stream: DataFrame, dim_root: str, *,
         if on_commit is not None:
             on_commit(out, batch_id)
 
-    writer = event_stream.writeStream.foreachBatch(handle)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(event_stream, handle,
+                         processing_time=processing_time)

@@ -11,9 +11,9 @@ per-query top-k flows to the caller's sink callback. foreachBatch is
 the harness for the same reason as ann_serving: each batch is a batch
 computation against static state, and serving state is zero.
 
-Index modes mirror ann_serving: a pinned ``corpus`` frame, or a
-``corpus_root`` versioned-snapshot directory re-resolved per batch (the
-nightly re-hash swaps in at the next micro-batch on the _SUCCESS flip).
+One index source, as in ann_serving: a ``corpus_root``
+versioned-snapshot directory re-resolved per batch (the nightly re-hash
+swaps in at the next micro-batch on the _SUCCESS flip).
 
 Batch≡stream pinned by tests/test_streaming.py: on a closed query
 stream of the first n_queries documents' texts, served results equal
@@ -27,14 +27,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .harness import start_batches
+
 FH_DIM = 64
 
 
 def hashed_corpus(docs: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text", dim: int = FH_DIM) -> DataFrame:
     """(id, fvec, n2, rt): the static retrieval index — x71's vectors
-    with the exact norm and its hoisted sqrt. Persist or commit through
-    write_versioned for the rolling mode."""
+    with the exact norm and its hoisted sqrt. Commit it through
+    write_versioned to serve it."""
     from ..functions.text import tokens
     from ..operators.similarity import idot
     from ..operators.vectorized import feature_hash_udf
@@ -47,37 +49,28 @@ def hashed_corpus(docs: DataFrame, *, id_col: str = "doc_id",
             .drop("toks"))
 
 
-def serve_text_queries(query_stream: DataFrame,
-                       corpus: DataFrame | None = None, *,
-                       corpus_root: str | None = None,
+def serve_text_queries(query_stream: DataFrame, corpus_root: str, *,
                        id_col: str = "doc_id", k: int = 5,
                        dim: int = FH_DIM,
                        on_result: Callable[[DataFrame, int], None],
-                       trigger_available_now: bool = True,
                        processing_time: str | None = None):
-    """Start serving. ``query_stream`` carries (query_id, text);
-    ``on_result(df, batch_id)`` receives (query_id, neighbor_id, rank,
-    cosine) per non-empty batch. Self-matches (query_id == neighbor id)
-    are excluded, matching the batch operator."""
+    """Start serving against the hashed corpus (hashed_corpus rows)
+    current under the versioned root ``corpus_root``. ``query_stream``
+    carries (query_id, text); ``on_result(df, batch_id)`` receives
+    (query_id, neighbor_id, rank, cosine) per non-empty batch.
+    Self-matches (query_id == neighbor id) are excluded, matching the
+    batch operator. ``processing_time`` as in harness.start_batches."""
     from pyspark.sql import Window as W
 
     from ..functions.text import tokens
     from ..operators.similarity import idot
     from ..operators.vectorized import feature_hash_udf
+    from ..sources.warehouse import read_versioned
 
-    if corpus is None and corpus_root is None:
-        raise ValueError("serve_text_queries: pass corpus= or corpus_root=")
     udf = feature_hash_udf(dim)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if corpus_root is not None:
-            from ..sources.warehouse import read_versioned
-            base = read_versioned(spark, corpus_root)
-        else:
-            base = corpus
+        base = read_versioned(batch_df.sparkSession, corpus_root)
         q = (batch_df.select("query_id", tokens("text").alias("qtoks"))
              .withColumn("qv", udf("qtoks"))
              .withColumn("qrt", F.sqrt(idot("qv", "qv").cast("double")))
@@ -96,9 +89,5 @@ def serve_text_queries(query_stream: DataFrame,
                           F.col("rank").cast("int").alias("rank"),
                           "cosine"), batch_id)
 
-    writer = query_stream.writeStream.foreachBatch(handle)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(query_stream, handle,
+                         processing_time=processing_time)

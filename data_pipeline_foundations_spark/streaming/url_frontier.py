@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions.text import canonical_url, url_host
+from .harness import drain
 
 URL_DOCS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -50,10 +51,4 @@ def run_over_dir(spark: SparkSession, captures_dir: str,
     (memory sink, append mode) and return the admitted captures."""
     stream = (spark.readStream.schema(URL_DOCS_SCHEMA)
               .format("parquet").load(captures_dir))
-    q = (url_frontier_stream(stream, blocklist)
-         .writeStream.outputMode("append")
-         .format("memory").queryName(query_name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(url_frontier_stream(stream, blocklist), query_name)

@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .harness import drain
+
 EVENTS_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),
@@ -43,10 +45,4 @@ def run_over_dir(spark: SparkSession, events_dir: str,
     (memory sink, complete mode) and return the result as a DataFrame."""
     stream = (spark.readStream.schema(EVENTS_SCHEMA)
               .format("parquet").load(events_dir))
-    q = (windowed_counts(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(query_name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(windowed_counts(stream), query_name, mode="complete")

@@ -4,8 +4,17 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
+from data_pipeline_foundations_spark.sources.warehouse import (
+    list_versions, read_versioned, write_versioned,
+)
 from data_pipeline_foundations_spark.streaming.file_ingest import (
     run_available_now, stage_csv_file,
+)
+from data_pipeline_foundations_spark.streaming.harness import (
+    drain, start_batches,
 )
 from data_pipeline_foundations_spark.streaming.windowed import run_over_dir
 from data_pipeline_foundations_spark.tables import load
@@ -77,8 +86,6 @@ def test_interval_join_stream_equals_batch(spark, sf_dir, tmp_path):
     exactly the pairs the batch range_join finds on the same events."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.temporal import range_join
     from data_pipeline_foundations_spark.streaming import interval_join
 
@@ -109,8 +116,6 @@ def test_dedup_stream_equals_batch_fingerprints(spark, sf_dir, tmp_path):
     fingerprint, and the surviving fingerprint SET equals the batch
     x01 canonical set (which instance survives differs by design —
     arrival order vs min doc_id; see streaming/dedup.py docstring)."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.streaming import dedup as sdedup
 
     docs_dir = str(tmp_path / "docs_stream")
@@ -134,8 +139,6 @@ def test_dedup_stream_against_store(spark, sf_dir, tmp_path):
     """Stream-static incremental dedup: within-stream dups collapse to
     their first arrival AND anything already in the fingerprint store is
     dropped — the streaming twin of dedup_against_store."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.functions.text import fingerprint
     from data_pipeline_foundations_spark.streaming.dedup import (
         DOCS_SCHEMA, dedup_stream_against_store,
@@ -153,13 +156,8 @@ def test_dedup_stream_against_store(spark, sf_dir, tmp_path):
                .select(fingerprint("text").alias("fp")))
     stream = (spark.readStream.schema(DOCS_SCHEMA)
               .format("parquet").load(docs_dir))
-    q = (dedup_stream_against_store(stream, history)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("test_dedup_store_out")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r.fp for r in
-           spark.sql("SELECT fp FROM test_dedup_store_out").collect()}
+    got = {r.fp for r in drain(dedup_stream_against_store(stream, history),
+                               "test_dedup_store_out").collect()}
 
     all_fp = docs.select(F.col("doc_id"), fingerprint("text").alias("fp"))
     h = {r.fp for r in history.collect()}
@@ -177,7 +175,6 @@ def test_resample_stream_equals_batch(spark, sf_dir, tmp_path):
     from data_pipeline_foundations_spark.streaming.resample import (
         resample_stream,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
     batch = temperature_resample(docs, strata_col="lang", key_col="doc_id")
@@ -188,14 +185,8 @@ def test_resample_stream_equals_batch(spark, sf_dir, tmp_path):
     docs.write.parquet(src)
     stream = (spark.readStream.schema(docs.schema)
               .format("parquet").load(src))
-    q = (resample_stream(stream, thresholds)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("resample_out")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
     got = {r.doc_id for r in
-           spark.sql("SELECT doc_id FROM resample_out").collect()}
+           drain(resample_stream(stream, thresholds), "resample_out").collect()}
     assert got == want and len(got) > 0
 
 
@@ -205,15 +196,12 @@ def test_boilerplate_stream_equals_batch(spark, sf_dir, tmp_path):
     array, fingerprints are the same md5 scheme, and cleaning is fully
     row-local — so (n_segments, n_boilerplate, clean_text) match per
     document with no set-level caveats."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.dedup import (
         boilerplate_profile, remove_boilerplate_segments,
     )
     from data_pipeline_foundations_spark.streaming.boilerplate import (
         clean_stream,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     hdr = ("concat('nav menu home about contact rss login ', source,"
            " ' ', text)")
@@ -227,14 +215,8 @@ def test_boilerplate_stream_equals_batch(spark, sf_dir, tmp_path):
     docs.write.parquet(src)
     stream = (spark.readStream.schema(docs.schema)
               .format("parquet").load(src))
-    q = (clean_stream(stream, profile)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("boiler_out")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
     got = {r.doc_id: (r.n_segments, r.n_boilerplate, r.clean_text)
-           for r in spark.sql("SELECT * FROM boiler_out").collect()}
+           for r in drain(clean_stream(stream, profile), "boiler_out").collect()}
     assert got == want
     assert any(v[1] > 0 for v in got.values())  # chrome actually stripped
 
@@ -245,8 +227,6 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, tmp_path):
     set IS x53's decision — every registered x53 row appears flagged
     with the same n_shingles and n_bloom_hits, and no unflagged doc
     appears in x53."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.dedup import (
         DECON_N, with_shingle_hashes,
     )
@@ -260,7 +240,6 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, tmp_path):
     from data_pipeline_foundations_spark.streaming.decontamination import (
         decontamination_gate_stream,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
     bench = (with_shingle_hashes(
@@ -278,14 +257,9 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, tmp_path):
     corpus.write.parquet(src)
     stream = (spark.readStream.schema(corpus.schema)
               .format("parquet").load(src))
-    q = (decontamination_gate_stream(stream, bits, n=DECON_N)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("decon_out")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
     got = {r.doc_id: (r.n_shingles, r.n_bloom_hits, r.flagged)
-           for r in spark.sql("SELECT * FROM decon_out").collect()}
+           for r in drain(decontamination_gate_stream(stream, bits, n=DECON_N),
+                          "decon_out").collect()}
     assert got == want
     # the gate's decision IS x53's: flagged set and counts match
     x53 = {r.doc_id: (r.n_shingles, r.n_bloom_hits) for r in
@@ -304,15 +278,12 @@ def test_span_mask_stream_contains_batch(spark, sf_dir, tmp_path):
     first one the batch pass keeps; (2) containment on the real corpus —
     per document the stream removes at least what batch x48 removes,
     because the profile covers exactly the duplicated fingerprints."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.dedup import (
         dedup_repeated_windows,
     )
     from data_pipeline_foundations_spark.streaming.span_mask import (
         dup_window_profile, mask_stream,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     def run(docs_df, name):
         profile = dup_window_profile(docs_df, win_tokens=4)
@@ -323,14 +294,9 @@ def test_span_mask_stream_contains_batch(spark, sf_dir, tmp_path):
         with_ts.write.parquet(src)
         stream = (spark.readStream.schema(with_ts.schema)
                   .format("parquet").load(src))
-        q = (mask_stream(stream, profile, win_tokens=4)
-             .writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
         return {r.doc_id: r for r in
-                spark.sql(f"SELECT * FROM {name}").collect()}
+                drain(mask_stream(stream, profile, win_tokens=4), name,
+                      mode="complete").collect()}
 
     tiny = spark.createDataFrame(
         [(1, "a b c d e"), (2, "x y a b c d w"),
@@ -358,12 +324,9 @@ def test_cms_sketch_stream_equals_batch(spark, sf_dir, tmp_path):
     sketch cell-for-cell (int64 sums, arrival-order-free). This is the
     operational point of a mergeable sketch: the ingest can maintain it
     incrementally and hand analysts the same bits batch would."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.sketches import (
         cms_sketch,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(F.explode(F.split("text", " ")).alias("token"))
@@ -375,13 +338,8 @@ def test_cms_sketch_stream_equals_batch(spark, sf_dir, tmp_path):
     stream = (spark.readStream.schema(docs.schema)
               .format("parquet").load(src)
               .select(F.explode(F.split("text", " ")).alias("token")))
-    q = (cms_sketch(stream, "token")
-         .writeStream.outputMode("complete")
-         .format("memory").queryName("cms_out")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    got = sorted(spark.sql("SELECT * FROM cms_out").collect(),
+    got = sorted(drain(cms_sketch(stream, "token"), "cms_out",
+                       mode="complete").collect(),
                  key=lambda r: (r.row, r.bucket))
     assert got == want
 
@@ -391,15 +349,13 @@ def test_ann_serving_stream_equals_batch(spark, sf_dir, tmp_path):
     micro-batch against the static stored-codes index produces exactly
     the batch search's rows — same kernels, same exact-int ADC tables,
     only the arrival framing differs."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.similarity import (
         build_ivfpq_model, encode_corpus, pq_search_from_codes,
+        save_ivfpq_model,
     )
     from data_pipeline_foundations_spark.streaming.ann_serving import (
         serve_pq_queries,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
     model = build_ivfpq_model(emb)
@@ -407,13 +363,16 @@ def test_ann_serving_stream_equals_batch(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 10)
     want = sorted(map(tuple,
                       pq_search_from_codes(codes, queries, model).collect()))
+    codes_root, model_path = str(tmp_path / "codes"), str(tmp_path / "model")
+    write_versioned(spark, codes_root, codes)
+    save_ivfpq_model(spark, model, model_path)
 
     src = str(tmp_path / "queries")
     queries.write.parquet(src)
     stream = (spark.readStream.schema(queries.schema)
               .format("parquet").load(src))
     got = []
-    q = serve_pq_queries(stream, codes, model,
+    q = serve_pq_queries(stream, codes_root, model_path,
                          on_result=lambda df, bid: got.extend(
                              map(tuple, df.collect())))
     q.awaitTermination()
@@ -426,9 +385,6 @@ def test_ingest_published_snapshot_is_atomic(spark, tmp_path):
     sink as a versioned snapshot after each drain; batch consumers read
     the snapshot, where visibility flips atomically on the _SUCCESS
     marker — an uncommitted (crashed/in-flight) version is invisible."""
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        list_versions, read_versioned,
-    )
     landing = tmp_path / "landing"; landing.mkdir()
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -476,19 +432,13 @@ def test_ann_serving_live_trigger_rolling_index_swap(spark, sf_dir, tmp_path):
     over codes v2."""
     import time
 
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.similarity import (
         build_ivfpq_model, encode_corpus, pq_search_from_codes,
         save_ivfpq_model,
     )
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        write_versioned,
-    )
     from data_pipeline_foundations_spark.streaming.ann_serving import (
         serve_pq_queries,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
     model = build_ivfpq_model(emb)
@@ -516,7 +466,6 @@ def test_ann_serving_live_trigger_rolling_index_swap(spark, sf_dir, tmp_path):
     got = []
     q = serve_pq_queries(stream, on_result=lambda df, bid: got.extend(
                              map(tuple, df.collect())),
-                         trigger_available_now=False,
                          processing_time="500 milliseconds",
                          codes_root=codes_root, model_path=model_path)
     try:
@@ -539,16 +488,12 @@ def test_ann_serving_live_trigger_rolling_index_swap(spark, sf_dir, tmp_path):
 def test_publish_with_empty_landing_returns_none(spark, tmp_path):
     """ADVICE r5: a drain that never processed a file leaves no sink
     directory; publish must skip (return None), not raise."""
-    from data_pipeline_foundations_spark.streaming.file_ingest import (
-        run_available_now,
-    )
     landing = tmp_path / "landing"; landing.mkdir()
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     pub = str(tmp_path / "published")
     assert run_available_now(spark, str(landing), out, ckpt,
                              publish_root=pub) is None
-    import os
     assert not os.path.exists(pub)
 
 
@@ -557,8 +502,6 @@ def test_url_frontier_stream_equals_batch(spark, sf_dir, tmp_path):
     canonical URL, never a blocklisted host, and its canonical-URL
     survivor set equals the batch x62 operator's (which capture
     survives differs by design — arrival vs min doc_id)."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.plans.extensions import (
         _PAGE_URL_SPARK, BLOCKED_HOSTS, x62_canonical_url_dedup,
     )
@@ -588,8 +531,6 @@ def test_text_retrieval_stream_equals_batch(spark, sf_dir, tmp_path):
     """Streamed model-free text retrieval == the registered x72 query
     row-for-row: same kernel, same exact-int cosine, only the arrival
     framing differs."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.plans.extensions import (
         x72_feature_hash_topk,
     )
@@ -598,7 +539,8 @@ def test_text_retrieval_stream_equals_batch(spark, sf_dir, tmp_path):
     )
 
     docs = load(spark, sf_dir, "documents")
-    corpus = hashed_corpus(docs).persist()
+    corpus_root = str(tmp_path / "corpus")
+    write_versioned(spark, corpus_root, hashed_corpus(docs))
     qdir = str(tmp_path / "queries")
     (docs.filter(F.col("doc_id") < 10)
      .select(F.col("doc_id").alias("query_id"), "text")
@@ -609,12 +551,11 @@ def test_text_retrieval_stream_equals_batch(spark, sf_dir, tmp_path):
               .schema("query_id long, text string")
               .format("parquet").load(qdir))
     q = serve_text_queries(
-        stream, corpus,
+        stream, corpus_root,
         on_result=lambda df, bid: got.extend(
             (r.query_id, r.neighbor_id, r.rank, r.cosine)
             for r in df.collect()))
     q.awaitTermination()
-    corpus.unpersist()
 
     want = [(r.query_id, r.neighbor_id, r.rank, r.cosine)
             for r in x72_feature_hash_topk(spark, sf_dir).collect()]
@@ -626,8 +567,6 @@ def test_quality_gate_stream_equals_batch(spark, sf_dir, tmp_path):
     """Streamed trained-classifier gate == the registered x74 query
     row-for-row: same learned weight table, same broadcast-join scorer,
     only the arrival framing differs."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.plans.extensions import (
         train_token_weights, x74_quality_classifier_trained,
     )
@@ -636,8 +575,9 @@ def test_quality_gate_stream_equals_batch(spark, sf_dir, tmp_path):
     )
 
     docs = load(spark, sf_dir, "documents")
-    w = train_token_weights(docs, F.col("lang") == "en").persist()
-    w.count()
+    model_root = str(tmp_path / "weights")
+    write_versioned(spark, model_root,
+                    train_token_weights(docs, F.col("lang") == "en"))
     ddir = str(tmp_path / "docs_arriving")
     docs.select("doc_id", "text").coalesce(2).write.parquet(ddir)
 
@@ -646,12 +586,11 @@ def test_quality_gate_stream_equals_batch(spark, sf_dir, tmp_path):
               .schema("doc_id long, text string")
               .format("parquet").load(ddir))
     q = serve_quality_gate(
-        stream, w,
+        stream, model_root,
         on_result=lambda df, bid: got.extend(
             (r.doc_id, r.n_tokens, r.score, r.mean_weight, r.keep)
             for r in df.collect()))
     q.awaitTermination()
-    w.unpersist()
 
     want = [(r.doc_id, r.n_tokens, r.score, r.mean_weight, r.keep)
             for r in x74_quality_classifier_trained(spark, sf_dir).collect()]
@@ -665,13 +604,8 @@ def test_scd2_stream_equals_batch(spark, sf_dir, tmp_path):
     micro-batches == scd2_from_events over the whole log. Also pins the
     versioned-store surface: one committed snapshot per non-empty batch,
     time-travel readable."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.plans.extensions import (
         x76_scd2_event_log,
-    )
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        list_versions, read_versioned,
     )
     from data_pipeline_foundations_spark.streaming.scd_apply import (
         apply_scd2_stream,
@@ -745,10 +679,8 @@ def test_enrichment_stream_equals_batch(spark, sf_dir, tmp_path):
         tx_stream, ulat, ua, min_created_at=_PL04_MIN_CREATED)
 
     got: list[tuple] = []
-    q = (result.writeStream
-         .foreachBatch(lambda df, bid: got.extend(
-             tuple(r) for r in df.collect()))
-         .trigger(availableNow=True).start())
+    q = start_batches(result, lambda df, bid: got.extend(
+        tuple(r) for r in df.collect()))
     q.awaitTermination()
     ulat.unpersist(), ua.unpersist()
 
@@ -843,7 +775,6 @@ def test_month_refresh_null_tag_fails_loud(spark, tmp_path):
     """A micro-batch row with a NULL month_tag fails the batch with a
     DESCRIPTIVE error, not sorted()'s opaque None-vs-str TypeError —
     and never silently drops the row (ADVICE r10)."""
-    import pytest
 
     from data_pipeline_foundations_spark.streaming.month_refresh import (
         _make_handler,
@@ -866,19 +797,13 @@ def test_kmv_maintain_stream_equals_batch_and_x90(spark, sf_dir, tmp_path):
     (the merge is lossless, so batching cannot matter), across MULTIPLE
     versioned-store commits; the pairwise Jaccard derived from the
     maintained store equals the registered x90 rows."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_foundations_spark.operators.sketches import (
         kmv_jaccard,
     )
     from data_pipeline_foundations_spark.registry import all_queries
-    from data_pipeline_foundations_spark.sources.warehouse import (
-        list_versions, read_versioned,
-    )
     from data_pipeline_foundations_spark.streaming.kmv_maintain import (
         batch_source_sketch, maintain_kmv_stream,
     )
-    from data_pipeline_foundations_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
     src = str(tmp_path / "docs_kmv")
@@ -907,3 +832,61 @@ def test_kmv_maintain_stream_equals_batch_and_x90(spark, sf_dir, tmp_path):
            .toPandas()
            .sort_values(["stratum_a", "stratum_b"]).reset_index(drop=True))
     assert est.equals(x90)
+
+
+def _ids_stream(spark, tmp_path):
+    """Three files, one micro-batch each: 3 rows, 0 rows, 2 rows."""
+    src = str(tmp_path / "ids")
+    for ids in (spark.range(3), spark.range(0), spark.range(3, 5)):
+        ids.coalesce(1).write.mode("append").parquet(src)
+    return (spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1).parquet(src))
+
+
+def test_start_batches_skips_empty_and_releases_persists(spark, tmp_path):
+    """The empty middle batch runs but never reaches the handler, and
+    what the handler persists is released when its batch ends (the
+    handler's callback thread is outside the test's cache scope)."""
+    from data_pipeline_foundations_spark.operators.caching import (
+        persistent_rdd_ids, tracked_persist,
+    )
+    before = persistent_rdd_ids(spark.sparkContext)
+    seen = []
+    q = start_batches(_ids_stream(spark, tmp_path), lambda df, bid:
+                      seen.append((bid, tracked_persist(df).count())))
+    q.awaitTermination()
+    assert [p["batchId"] for p in q.recentProgress] == [0, 1, 2]
+    assert seen == [(0, 3), (2, 2)]
+    assert persistent_rdd_ids(spark.sparkContext) == before
+
+
+def test_start_batches_handler_error_is_loud(spark, tmp_path):
+    """A failing handler stops the query, and awaitTermination() raises
+    the failure with the handler's own message."""
+    from pyspark.errors import StreamingQueryException
+
+    def handle(df, bid):
+        raise ValueError(f"handler failed on batch {bid}")
+
+    q = start_batches(_ids_stream(spark, tmp_path), handle)
+    with pytest.raises(StreamingQueryException,
+                       match="handler failed on batch 0"):
+        q.awaitTermination()
+
+
+def test_only_harness_starts_streams():
+    """Every foreachBatch twin and memory drain starts through
+    streaming/harness.py; the checkpointed parquet drain in
+    streaming/file_ingest.py is the one other trigger site."""
+    import re
+    from pathlib import Path
+
+    from data_pipeline_foundations_spark.streaming import harness
+    pkg = Path(harness.__file__).parents[1]
+    own = {"streaming/harness.py", "streaming/file_ingest.py"}
+    offenders = [
+        f"{path.relative_to(pkg)}:{m.group(0)}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() not in own
+        for m in re.finditer(r"foreachBatch\(|\.trigger\(", path.read_text())]
+    assert offenders == []

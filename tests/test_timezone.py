@@ -59,3 +59,29 @@ def test_day_diff_floors_negative_like_pandas(spark, duck):
         "(TIMESTAMP '2025-01-01 00:00:00', TIMESTAMP '2025-01-02 00:00:00')) t(a, b)"
     ).fetchall()]
     assert oracle == got
+
+
+def test_day_arithmetic_ignores_session_zone_dst(spark):
+    """Day arithmetic on TIMESTAMP_NTZ is wall-clock arithmetic in every
+    session zone. Across Mexico City's last DST start (2022-04-03):
+    2 days 30 minutes is a day diff of 2, and the 30-hour grace anchor
+    of 2022-04-02 12:00 is 2022-04-03 06:00, under UTC and under
+    America/Mexico_City. Read in the session zone instead, the pair is
+    an hour shorter there (floors to 1) and the anchor lands at 07:00
+    local time."""
+    from data_pipeline_foundations_spark.functions.datetime_ops import (
+        day_offset_threshold, timestamp_day_diff,
+    )
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    pair = spark.sql("SELECT TIMESTAMP_NTZ '2022-04-04 00:30:00' AS a, "
+                     "TIMESTAMP_NTZ '2022-04-02 00:00:00' AS b, "
+                     "TIMESTAMP_NTZ '2022-04-02 12:00:00' AS due")
+    try:
+        for zone in ("UTC", "America/Mexico_City"):
+            spark.conf.set(key, zone)
+            got = pair.select(timestamp_day_diff("a", "b"),
+                              day_offset_threshold("due")).first()
+            assert tuple(got) == (2, dt.datetime(2022, 4, 3, 6)), zone
+    finally:
+        spark.conf.set(key, before)
