@@ -58,10 +58,16 @@ def oracle_round2(sql_expr: str) -> str:
     return f"({oracle_scaled_long(sql_expr, 100.0)} / 100.0)"
 
 
+def cents_sql(e: str) -> str:
+    """:func:`cents` as a Spark SQL string: exact bigint cents, for
+    one-parse ``selectExpr``/``F.expr`` builders."""
+    return f"cast(floor({e} * 100.0D + 0.5D) as bigint)"
+
+
 def round2_sql(e: str) -> str:
     """:func:`round2` as a Spark SQL string, for one-parse ``selectExpr``
     builders (same analyzed expression as the Column form)."""
-    return f"(cast(floor(({e}) * 100.0D + 0.5D) as bigint) / 100.0D)"
+    return f"({cents_sql(f'({e})')} / 100.0D)"
 
 
 def bround2_sql(e: str) -> str:

@@ -44,8 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.sql import sql_ident
 from ..tables import scale_out
-
-EMB_SCALE = 1_000_000.0  # quantization grid: 1e-6 — shared by all tiers
+from .vectorized import EMB_SCALE
 
 
 def int_vec(col: Column | str) -> Column:
@@ -167,17 +166,15 @@ def hard_negatives(emb: DataFrame, *, id_col: str = "vec_id",
     ground-truth / evaluation tier.
 
     Each Arrow batch becomes ONE int64 numpy matmul against the
-    broadcast query matrix — the oracle's exact quantized-int dots
-    (floor(x·1e6 + 0.5) in float64, int64 accumulation, |dot| ≤
-    dim·(max|v|·1e6)² ≪ 2^63) and IEEE cosine (d / (qrt·rt)). The
-    Column form with a label-mismatch broadcast NESTED-LOOP join and a
-    per-pair F.aggregate/zip_with dot read 4× slower at 2M vectors
-    (SCALING.md r12 part 6).
+    broadcast query matrix (vectorized.hard_negative_scorer: the
+    oracle's exact quantized-int dots, |dot| ≤ dim·(max|v|·1e6)² ≪ 2^63,
+    and IEEE cosine d / (qrt·rt)). The Column form with a label-mismatch
+    broadcast NESTED-LOOP join and a per-pair F.aggregate/zip_with dot
+    read 4× slower at 2M vectors (SCALING.md r12 part 6).
 
     Zero-norm vectors (r13, ADVICE): cosine is undefined for them, so
     this form and the oracle DROP zero-norm rows up front — on either
-    side of the pair. Without the drop, numpy lexsort (NaN last) and
-    DuckDB's window ordering would rank NaN cosines differently.
+    side of the pair (the query filter below, the scorer's corpus side).
 
     Scale shape: the query side is a KB-scale driver artifact (x42's
     collect discipline); the corpus streams through mapInPandas once,
@@ -186,58 +183,16 @@ def hard_negatives(emb: DataFrame, *, id_col: str = "vec_id",
     keeps the global top-k by pigeonhole — batch-local top-k then a
     global merge, as in REPOSE), and the terminal window ranks
     ~n_queries·k·n_batches rows."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import Window as W
 
+    from .vectorized import hard_negative_scorer
     q_rows = (emb.filter(F.col(id_col) < n_queries)
               .select(id_col, label_col, int_vec(vec_col).alias("qv"))
               .filter(idot("qv", "qv") > 0)
               .collect())
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_labels = np.array([r[1] for r in q_rows])
-    qm = np.array([r[2] for r in q_rows], dtype=np.int64)         # (nq, d)
-    qrt = np.sqrt((qm * qm).sum(axis=1).astype(np.float64))       # (nq,)
-    nq = len(q_rows)
-
     out_schema = (f"query_id long, query_label int, negative_id long, "
                   f"negative_label int, cosine double")
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vm = np.floor(
-                np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]]) * EMB_SCALE + 0.5
-            ).astype(np.int64)                                    # (n, d)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            labels = pdf[label_col].to_numpy()
-            rt = np.sqrt((vm * vm).sum(axis=1).astype(np.float64))
-            nz = rt > 0.0          # zero-norm drop — mirrors n2 > 0
-            if not nz.all():
-                vm, ids, labels, rt = vm[nz], ids[nz], labels[nz], rt[nz]
-                if len(ids) == 0:
-                    continue
-            dots = vm @ qm.T                                      # (n, nq) exact
-            cos = dots / (qrt[None, :] * rt[:, None])
-            parts = []
-            for j in range(nq):
-                m = labels != q_labels[j]
-                if not m.any():
-                    continue
-                cj, ij, lj = cos[m, j], ids[m], labels[m]
-                # top-k under the registered total order (cos desc, id asc)
-                order = np.lexsort((ij, -cj))[:k]
-                parts.append(pd.DataFrame({
-                    "query_id": q_ids[j],
-                    "query_label": np.int32(q_labels[j]),
-                    "negative_id": ij[order],
-                    "negative_label": lj[order].astype(np.int32),
-                    "cosine": cj[order]}))
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
+    score = hard_negative_scorer(q_rows, k, id_col, vec_col, label_col)
     survivors = (scale_out(emb)
                  .select(id_col, label_col, vec_col)
                  .mapInPandas(score, schema=out_schema))
@@ -317,7 +272,7 @@ def hard_negatives_ann(emb: DataFrame, *, id_col: str = "vec_id",
     qrows = sorted(qrows, key=lambda r: r[id_col])
     probe_sets = _select_probe_sets(cents_rows, qrows, nprobe)
     cos_udf = ivf_cos_udf(cents_rows, probe_sets,
-                          [list(r["sv"]) for r in qrows], EMB_SCALE)
+                          [list(r["sv"]) for r in qrows])
     qid_arr = F.array(*[F.lit(int(r[id_col])).cast("long") for r in qrows])
     qlab_arr = F.array(*[F.lit(r["label"]).cast("int") for r in qrows])
     scored = (emb
@@ -476,7 +431,7 @@ def _with_sig(raw: DataFrame, id_col: str, vec_col: str, dim: int,
     base = (raw.select(F.col(id_col), F.col(vec_col).alias("_emb"),
                        int_vec(vec_col).alias("sv"))
             .withColumn("n2", idot("sv", "sv")))
-    sig = srp_sig_udf(_srp_signs(dim, bits), EMB_SCALE)(F.col("_emb"))
+    sig = srp_sig_udf(_srp_signs(dim, bits))(F.col("_emb"))
     return base.withColumn(out, sig).drop("_emb")
 
 
@@ -663,7 +618,8 @@ def _select_probe_sets(cents_rows: list, qrows: list,
     """Per-query probe lists, driver-side: the nprobe nearest centroids
     under the derived-float cosine, DESC cos / DESC cid — the exact
     order the oracle's row_number uses. KB-scale arithmetic over the
-    collected model; shared by ivf_topk and hard_negatives_ann."""
+    collected model; shared by ivf_topk, hard_negatives_ann and
+    ivfpq_rerank_topk."""
     import math
 
     probe_sets = []
@@ -729,7 +685,7 @@ def ivf_topk(emb: DataFrame, *, id_col: str = "vec_id",
     # candidates only.
     from .vectorized import ivf_cos_udf
     cos_udf = ivf_cos_udf(cents_rows, probe_sets,
-                          [list(r["sv"]) for r in qrows], EMB_SCALE)
+                          [list(r["sv"]) for r in qrows])
     qids = [int(r[id_col]) for r in qrows]
     qid_arr = F.array(*[F.lit(q).cast("long") for q in qids])
     scored = (emb
@@ -837,22 +793,25 @@ def cosine_near_dup_pairs(emb: DataFrame, *, id_col: str = "vec_id",
     Each vector moves once per band (~KBs), the pair space never
     materializes outside a bucket, and no per-candidate 64-dim
     interpreted fold runs (the measured top cost of this operator at
-    r3).
+    r3). Both kernels read the raw floats: the scan runs no int_vec or
+    idot HOF.
     """
-    from .vectorized import bucket_pair_cosines
+    from .vectorized import bucket_pair_cosines, srp_sig_udf
 
     nbands = bits // band_bits
     mask = (1 << band_bits) - 1
-    base = _with_sig(scale_out(emb), id_col, vec_col, dim, bits, "sig")
+    base = (scale_out(emb).select(F.col(id_col), F.col(vec_col).alias("sv"))
+            .withColumn("sig", srp_sig_udf(_srp_signs(dim, bits))(
+                F.col("sv"))))
     band_structs = [
         F.struct(F.lit(j).alias("band_id"),
                  F.shiftright(F.col("sig"), j * band_bits)
                  .bitwiseAND(F.lit(mask)).alias("band_key"))
         for j in range(nbands)
     ]
-    bands = (base.select(F.col(id_col), "sv", "n2",
+    bands = (base.select(F.col(id_col), "sv",
                          F.explode(F.array(*band_structs)).alias("b"))
-             .select(id_col, "sv", "n2", "b.band_id", "b.band_key"))
+             .select(id_col, "sv", "b.band_id", "b.band_key"))
     return bucket_pair_cosines(bands, id_col, threshold).distinct()
 
 
@@ -998,8 +957,7 @@ def pq_topk(emb: DataFrame, *, id_col: str = "vec_id",
         emb, id_col, vec_col, block, ks, seed, m, n_queries)
     qids = [int(r[id_col]) for r in qrows]
     totals_udf = pq_adc_totals_udf(
-        cents_rows, [list(r["sv"]) for r in qrows], m, block,
-        scale=PQ_SCALE)
+        cents_rows, [list(r["sv"]) for r in qrows], m, block)
     qid_arr = F.array(*[F.lit(q).cast("long") for q in qids])
     # codes + per-query totals fused into ONE map stage (ADC lookup
     # tables in the kernel closure) straight off the RAW float scan
@@ -1100,7 +1058,7 @@ def ann_recall(emb: DataFrame, *, id_col: str = "vec_id",
     qids = [int(r[id_col]) for r in qrows]
     nq = len(qids)
     udf = recall_totals_udf(
-        pq_rows, [list(r["sv"]) for r in qrows], m, block, PQ_SCALE)
+        pq_rows, [list(r["sv"]) for r in qrows], m, block)
     qid_arr = F.array(*[F.lit(q).cast("long") for q in qids])
     d = (scale_out(emb, 8)
          .select(F.col(id_col).alias("neighbor_id"),
@@ -1247,11 +1205,9 @@ def ivfpq_rerank_topk(emb: DataFrame, *, id_col: str = "vec_id",
     smallest cid), so the DuckDB oracle reproduces rank, cosine and
     approx_dist bit-for-bit.
     """
-    import math
+    from pyspark.sql import Window as W
 
     from .vectorized import ivfpq_totals_udf, query_topk_udf
-
-    from pyspark.sql import Window as W
 
     block = dim // m
     # KB-sized model collect (documented driver-side broadcast
@@ -1267,17 +1223,7 @@ def ivfpq_rerank_topk(emb: DataFrame, *, id_col: str = "vec_id",
         n_queries=n_queries)
     qids = [int(r[id_col]) for r in qrows]
     qvecs = {int(r[id_col]): (list(r["sv"]), int(r["n2"])) for r in qrows}
-    # probe selection driver-side — same derived-float cosine and the
-    # same DESC cos / DESC cid order as the oracle's rn <= nprobe window
-    probe_sets = []
-    for r in qrows:
-        qn2 = int(r["n2"])
-        scored = sorted(
-            ((float(sum(a * b for a, b in zip(r["sv"], c["cv"])))
-              / (math.sqrt(float(qn2)) * math.sqrt(float(c["cn2"]))),
-              int(c["cid"])) for c in ivf_rows),
-            reverse=True)[:nprobe]
-        probe_sets.append([cid for _, cid in scored])
+    probe_sets = _select_probe_sets(ivf_rows, qrows, nprobe)
 
     totals_udf = ivfpq_totals_udf(ivf_rows, probe_sets, pq_rows,
                                   [list(r["sv"]) for r in qrows], m, block)
@@ -1287,8 +1233,8 @@ def ivfpq_rerank_topk(emb: DataFrame, *, id_col: str = "vec_id",
     # single-split scan it parallelizes; on a real multi-split layout
     # the scan is already parallel
     approx = (emb
-              .select(F.col(id_col), int_vec(vec_col).alias("sv"))
-              .withColumn("_tot", totals_udf("sv"))
+              .select(F.col(id_col), F.col(vec_col).alias("_v"))
+              .withColumn("_tot", totals_udf("_v"))
               .select(F.col(id_col).alias("neighbor_id"),
                       F.posexplode("_tot").alias("qi", "total"))
               .filter(F.col("total") >= 0)       # -1 = not in a probed list
@@ -1307,12 +1253,11 @@ def ivfpq_rerank_topk(emb: DataFrame, *, id_col: str = "vec_id",
     # tiny survivor table against the scan); the exact-cosine top-k
     # kernel carries approx_dist through, so the survivor table is
     # consumed exactly once — no persist, no second join
-    fetch = (emb.select(F.col(id_col).alias("neighbor_id"),
-                        int_vec(vec_col).alias("sv"))
-             .withColumn("n2", idot("sv", "sv")))
+    fetch = emb.select(F.col(id_col).alias("neighbor_id"),
+                       F.col(vec_col).alias("sv"))
     cand = (fetch.join(F.broadcast(topr), "neighbor_id")
-            .select("query_id", "neighbor_id", "sv", "n2", "approx_dist"))
-    return query_topk_udf(cand, qvecs, k, extra_col="approx_dist")
+            .select("query_id", "neighbor_id", "sv", "approx_dist"))
+    return query_topk_udf(cand, qvecs, k)
 
 
 def oracle_ivfpq_rerank_sql(*, dim: int = 64, k_clusters: int = 16,
@@ -1460,14 +1405,13 @@ def semantic_dedup(emb: DataFrame, *, id_col: str = "vec_id",
                                     dim)
     asg = (emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
            .withColumn("cid",
-                       ivf_assign_udf(cents_rows, EMB_SCALE)(F.col("_v"))))
+                       ivf_assign_udf(cents_rows)(F.col("_v"))))
     # one row per (vector, its single cluster) → the pair kernel sees
     # each vector exactly once; no cross-band dedup is needed
     buckets = asg.select(F.lit(0).alias("band_id"),
                          F.col("cid").alias("band_key"),
                          id_col, F.col("_v").alias("sv"))
-    pairs = bucket_pair_cosines(buckets, id_col, threshold,
-                                scale=EMB_SCALE)
+    pairs = bucket_pair_cosines(buckets, id_col, threshold)
     comp = connected_components(emb.select(id_col), pairs,
                                 id_col=id_col, src="vec_a", dst="vec_b")
     # cluster_size via ONE window on cluster_id instead of groupBy +
@@ -1504,7 +1448,7 @@ def hierarchical_assign(emb: DataFrame, *, id_col: str = "vec_id",
 
     cents_rows, _ = _ivf_model_rows(emb, id_col, vec_col, k_clusters,
                                     seed, dim)
-    a = ivf_assign_hier_udf(cents_rows, n_groups, EMB_SCALE)
+    a = ivf_assign_hier_udf(cents_rows, n_groups)
     return (emb.select(F.col(id_col), a(F.col(vec_col)).alias("_a"))
             .select(id_col, F.col("_a.gid").alias("gid"),
                     F.col("_a.cid").alias("cid")))
@@ -1625,7 +1569,7 @@ def train_ivf_centroids(emb: DataFrame, *, id_col: str = "vec_id",
     for _ in range(max(0, iters)):
         asg = (emb.select(F.col(vec_col).alias("_v"))
                .withColumn("cid",
-                           ivf_assign_udf(cents_rows, EMB_SCALE)(F.col("_v"))))
+                           ivf_assign_udf(cents_rows)(F.col("_v"))))
         # ONE job per refinement pass (r14): the k×(dim+1)-long aggregate
         # is a KB-scale artifact; under AQE each pass paid the multi-job
         # stage-materialization dispatch (see _collect_no_aqe).
@@ -1655,7 +1599,7 @@ def ivf_assign_from_model(emb: DataFrame, cents_rows: list, *,
 
     return emb.select(
         F.col(id_col),
-        ivf_assign_udf(cents_rows, EMB_SCALE)(F.col(vec_col)).alias("cid"))
+        ivf_assign_udf(cents_rows)(F.col(vec_col)).alias("cid"))
 
 
 def trained_ivf_assign(emb: DataFrame, *, id_col: str = "vec_id",
@@ -1831,12 +1775,12 @@ def encode_corpus(emb: DataFrame, model: dict, *, id_col: str = "vec_id",
     # DIFFERENT model instead of silently scoring against the wrong
     # codebook rows.
     return (scale_out(emb, 8)
-            .select(F.col(id_col), int_vec(vec_col).alias("sv"))
+            .select(F.col(id_col), F.col(vec_col).alias("_v"))
             .withColumn("cid",
-                        ivf_assign_udf(model["ivf_rows"])(F.col("sv")))
+                        ivf_assign_udf(model["ivf_rows"])(F.col("_v")))
             .withColumn("codes",
                         pq_codes_udf(model["pq_rows"], p["m"], block)
-                        (F.col("sv")))
+                        (F.col("_v")))
             .select(id_col, "cid",
                     F.col("codes").alias("codes",
                                          metadata={"ivfpq_params": dict(p)})))

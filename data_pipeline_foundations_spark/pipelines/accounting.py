@@ -23,7 +23,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.money import round2_sql
+from ..functions.money import cents_sql, round2_sql
 
 DETAIL_COLUMNS = [
     "UserId", "UserLoanId", "IssueMonth", "IssueMonthCDMX", "IssueDate",
@@ -126,10 +126,8 @@ def accounting_summary(detail: DataFrame, *, as_of: _dt.datetime,
     if era is not None:
         # exact-cents sums, cast to double only at the final division —
         # the same arithmetic as the standalone era aggregate
-        cents_s = "cast(floor({c} * 100.0D + 0.5D) as bigint)"
-        aggs += [F.expr(f"sum({cents_s.format(c='Fee')})")
-                 .alias("_era_fee_cents"),
-                 F.expr(f"sum({cents_s.format(c='PrincipalAmount')})")
+        aggs += [F.expr(f"sum({cents_sql('Fee')})").alias("_era_fee_cents"),
+                 F.expr(f"sum({cents_sql('PrincipalAmount')})")
                  .alias("_era_prin_cents")]
     out = (detail
            .groupBy("IssueMonthCDMX")

@@ -1912,13 +1912,13 @@ def x70_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_clusters rows: (cid, n_vectors, top_label, top_n, purity)."""
     from pyspark.sql import Window as W
 
-    from ..operators.similarity import EMB_SCALE, _ivf_model_rows
+    from ..operators.similarity import _ivf_model_rows
     from ..operators.vectorized import ivf_assign_udf
 
     emb = load(spark, sf_dir, "embeddings")
     cents_rows, _ = _ivf_model_rows(emb, "vec_id", "embedding",
                                     _PURITY_K, _PURITY_SEED, _PURITY_DIM)
-    assign = ivf_assign_udf(cents_rows, scale=EMB_SCALE)
+    assign = ivf_assign_udf(cents_rows)
     lab = (scale_out(emb, 8)
            .select(F.col("label").cast("long").alias("label"),
                    assign("embedding").alias("cid"))

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import (
-    oracle_round2, oracle_scaled_long, round2, round2_sql,
+    cents_sql, oracle_round2, oracle_scaled_long, round2, round2_sql,
 )
 from ..operators.calendar import calendar_dim, oracle_calendar_sql
 from ..operators.waterfall import oracle_waterfall_sql, waterfall_columns
@@ -39,8 +39,8 @@ def u01_waterfall_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Column node, matching waterfall_columns' own selectExpr conversion.
     paid = (
         li.groupBy("l_orderkey")
-        .agg(F.expr("sum(cast(floor((l_extendedprice * (1 - l_discount))"
-                    " * 100.0D + 0.5D) as bigint)) / 100.0D")
+        .agg(F.expr(f"sum({cents_sql('(l_extendedprice * (1 - l_discount))')})"
+                    " / 100.0D")
              .alias("amount_paid"))
     )
     r2 = round2_sql
@@ -241,8 +241,7 @@ def settlement_pipeline(o: DataFrame, li: DataFrame, *,
     # invocation, ~0.4-0.6 s of driver time on every pl01/pl02 call —
     # while a selectExpr stage is ONE round trip and the parse happens
     # JVM-side.
-    amt_cents = ("cast(floor((l_extendedprice * (1 - l_discount)) * 100.0D"
-                 " + 0.5D) as bigint)")
+    amt_cents = cents_sql("(l_extendedprice * (1 - l_discount))")
 
     def chan_sum(flag: str) -> str:
         return (f"sum(CASE WHEN l_returnflag = '{flag}' THEN {amt_cents} "
@@ -571,8 +570,8 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
                            f"{cdmx.format(c='o_orderdate')})")
                     .alias("ref_month"))
            .agg(F.expr("count(1)").alias("n_ref"),
-                F.expr("sum(cast(floor(o_totalprice * 100.0D + 0.5D)"
-                       " as bigint)) / 100.0D").alias("ref_amt")))
+                F.expr(f"sum({cents_sql('o_totalprice')}) / 100.0D")
+                .alias("ref_amt")))
 
     dnull = "CAST(NULL AS DOUBLE)"
     money_cols = ["PrincipalAmount", "Fee", "TaxOnFee", "LateFee",

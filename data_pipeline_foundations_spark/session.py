@@ -69,9 +69,6 @@ def get_spark(app_name: str = "data_pipeline_foundations_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-        # default; read as long nanos and convert at load (tables.load).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     # Deployment-parameterised overrides (r13): production values for
     # scale-dependent knobs (shuffle partitions, advisory sizes, memory)

@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -29,12 +28,8 @@ def table_path(sf_dir: str, name: str) -> str:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Plain parquet scan — Catalyst prunes columns and pushes
     predicates into the scan from whatever the caller composes on top.
-
-    ``events.ts`` is nanosecond-precision parquet, which Spark reads only as
-    long nanos (spark.sql.legacy.parquet.nanosAsLong, set in session.py);
-    convert to a microsecond timestamp here — integer-div truncation, the
-    same conversion DuckDB applies when scanning ns parquet, so the two
-    engines see identical values.
+    The session's SQL conf is never touched: ``events.ts`` is
+    ``timestamp[us]`` parquet, which Spark reads as TIMESTAMP as is.
 
     The resolved DataFrame (a lazy logical plan, NOT data) is memoized per
     (session, sf_dir, table): ``spark.read.parquet`` eagerly lists the
@@ -56,13 +51,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = cache.get(key)
     if hit is not None:
         return hit
-    if name == "events":
-        # Set at runtime, not only in the session factory: the driver hands
-        # us ITS OWN SparkSession, which won't have the factory configs.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     cache[key] = df
     return df
 

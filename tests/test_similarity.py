@@ -266,8 +266,8 @@ def test_hier_router_exact_when_centroids_separate(spark):
         rows.append((i, (base + rng.uniform(-1, 1, dim)).tolist()))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    flat = ivf_assign_udf(cents, scale)
-    hier = ivf_assign_hier_udf(cents, 4, scale)
+    flat = ivf_assign_udf(cents)
+    hier = ivf_assign_hier_udf(cents, 4)
     got = (df.select("vec_id", flat(F.col("embedding")).alias("fcid"),
                      hier(F.col("embedding")).alias("h"))
            .select("vec_id", "fcid", "h.gid", "h.cid").collect())
@@ -293,7 +293,7 @@ def test_lloyd_training_enables_exact_routing(spark):
     from pyspark.sql import functions as F
 
     from data_pipeline_foundations_spark.operators.similarity import (
-        EMB_SCALE, train_ivf_centroids,
+        train_ivf_centroids,
     )
     from data_pipeline_foundations_spark.operators.vectorized import (
         ivf_assign_hier_udf, ivf_assign_udf,
@@ -315,9 +315,8 @@ def test_lloyd_training_enables_exact_routing(spark):
     assert 2 <= len(cents) <= k
     assert all(set(c) == {"cid", "cv", "cn2"} for c in cents)
 
-    flat = ivf_assign_udf(cents, EMB_SCALE)
-    hier = ivf_assign_hier_udf(cents, max(2, int(round(len(cents) ** 0.5))),
-                               EMB_SCALE)
+    flat = ivf_assign_udf(cents)
+    hier = ivf_assign_hier_udf(cents, max(2, int(round(len(cents) ** 0.5))))
     got = (emb.select(flat(F.col("embedding")).alias("fcid"),
                       hier(F.col("embedding"))["cid"].alias("hcid"))
            .collect())

@@ -38,18 +38,18 @@ def test_zero_norm_inputs_fail_loudly(spark):
              int(1e12) * (i + 1) ** 2 + 49 * i * i} for i in range(4)]
     zero_cent = good[:3] + [{"cid": 3, "cv": [0, 0], "cn2": 0}]
     with _pt.raises(ValueError, match="zero-norm centroid"):
-        ivf_assign_udf(zero_cent, 1e6)
+        ivf_assign_udf(zero_cent)
     with _pt.raises(ValueError, match="zero-norm centroid"):
-        ivf_assign_hier_udf(zero_cent, 2, 1e6)
+        ivf_assign_hier_udf(zero_cent, 2)
     with _pt.raises(ValueError, match="zero-norm query"):
-        ivf_cos_udf(good, [[0]], [[0, 0]], 1e6)
+        ivf_cos_udf(good, [[0]], [[0, 0]])
 
     # zero-norm INPUT vector: quantizes to (0,0) -> the kernel raises on
     # the executor, surfacing as a PythonException wrapping ValueError
     df = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [1e-9, -1e-9])],
         "vec_id long, embedding array<double>")
-    flat = ivf_assign_udf(good, 1e6)
+    flat = ivf_assign_udf(good)
     with _pt.raises(Exception, match="zero-norm input vector"):
         df.select(flat(F.col("embedding"))).collect()
     # and the non-degenerate frame still assigns fine after the guard
